@@ -33,7 +33,7 @@ Refuses to close a round unless the record is clean:
           one process read 6.8 vs 15.1 cpu_s (a_entropy) and 4.3 vs 1.9
           (l_incr_agg_retract) — two-point exponents on small cells carry
           ±2x harness variance, so a tighter gate institutionalizes noise;
-          1.3 is also scaling_audit.py's long-standing flag threshold.
+          1.3 is also the r15 scaling audit's long-standing flag threshold.
        b. every sf3->sf10 plan-flip query (its `differs` list) has a GREEN
           row in the committed CORRECTNESS_sf10_r<N>.json — adaptive plans
           are hash-gated in the regime they actually take at 100x,

@@ -15,8 +15,8 @@ import jdk.incubator.vector.VectorSpecies;
  * sequence per lane); gates is TOLERANCE-EQUAL (~1e-7 relative) to the
  * scalar fallback and platform-dependent — its lanewise EXP/TANH lower to
  * whatever vector-math stubs (SVML on x86_64) the host JVM provides, so
- * vector-vs-scalar A/B toggles (SPARK_GRAFT_LSTM_SCALAR) and different
- * hosts shift gate outputs in low-order bits. KerasLstmSpec pins the parity
+ * the scalar fallback and different hosts shift gate outputs in low-order
+ * bits. KerasLstmSpec pins the parity
  * against the committed predictions at the fixtures' tolerance; KerasLstm
  * falls back to its scalar loops when this class fails to load (a JVM
  * without the module or with it not --add-modules'd).

@@ -39,8 +39,7 @@ object Bench {
   // heal, sustained load flags again.
 
   /** The 12-query sf1 heavy tail: the scale-predictive section of the bench
-    * and the target set of [[graft.tools.SpillSoak]]'s constrained-memory
-    * run (one list so the two never drift). */
+    * (also the query set of the r13-r15 constrained-memory soak, NOTES_r14). */
   val Sf1Heavy: Seq[String] = Seq("e_pagerank_types", "t_bpe_train",
     "m_lstm_infer", "t_bigram_lm", "j_star_chain", "j_star_chain_bucketed",
     "d_fuzzy_verify", "d_contamination", "l_pruned_bloom_join",
@@ -151,8 +150,8 @@ object Bench {
         System.err.println(s"[bench] burst probe failed: $e"); None }
 
     // Run-total shuffle-write bytes + executor CPU time (stage-completion
-    // listener, same shape as tools/MicroBench). Events deliver async;
-    // totals are read after a stabilization poll at the end of the run.
+    // listener). Events deliver async; totals are read after a
+    // stabilization poll at the end of the run.
     // CPU time is the BOX-SPEED-INVARIANT adjudication number: wall time
     // moves with background load and per-box clock speed (the r9→r10
     // compare needed manual calibration-ratio reasoning to conclude
@@ -197,7 +196,7 @@ object Bench {
 
     /** Warm a query until its executor CPU hits the C2 plateau: two
       * consecutive untimed runs whose cpu agrees within 10% (cap 8 runs).
-      * r14 finding (tools/AnnJitter + StageProfile): lambda- and
+      * r14 finding (NOTES_r14, ANN jitter + StageProfile): lambda- and
       * reader-heavy paths compile across their first 2-7 executions
       * (ANN per-run cpu 0.66→0.14; bucketed-scan 3.7→0.95), so ANY timed
       * window that starts before the plateau reports compilation, not the

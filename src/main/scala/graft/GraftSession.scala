@@ -74,9 +74,9 @@ object GraftSession {
 
   /** Re-point an EXISTING session at a data dir (`spark.sql.shuffle
     * .partitions` is runtime-mutable): set the derived count, honoring the
-    * same env override as [[builder]]. Multi-scale tools (ScaleSweep) call
-    * this per scale so each tier runs with the partitioning a fresh session
-    * over that tier would have. Returns the count it set. */
+    * same env override as [[builder]]. Multi-scale tools (PlanDiffScales)
+    * call this per scale so each tier runs with the partitioning a fresh
+    * session over that tier would have. Returns the count it set. */
   def tuneShuffleFor(spark: SparkSession, cores: Int, dataDir: String): Int = {
     val n = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
       .getOrElse(derivedShufflePartitions(cores, dataDir))
@@ -89,9 +89,9 @@ object GraftSession {
     * defect's general form: a session sized for a 1.5 GB corpus fans a
     * 30 MB state-table sort out to 192 range partitions, and the per-task
     * constants plus n·log(p) dominate a sort that wants ~2
-    * (`l_incr_agg_retract`, cpu exponent ~2.0; PathProbe bisection in
-    * NOTES_r17 §4). Derives the count from the optimizer's size estimate of
-    * THIS plan (exact file bytes for a parquet scan — the state-table
+    * (`l_incr_agg_retract`, cpu exponent ~2.0; bisected in NOTES_r17 §4).
+    * Derives the count from the optimizer's size estimate of THIS plan
+    * (exact file bytes for a parquet scan — the state-table
     * case), clamped to [1, current shuffle partitions]: metadata-scale
     * frames get metadata-scale exchanges, data-scale frames keep the
     * directory-derived count (estimates for derived plans only ever

@@ -81,7 +81,7 @@ object Pipeline {
     // forces converge_rate = 0.0 there (lead(dist) is null — BDB_2026.ipynb
     // cell 80), a value no causal feature set can anticipate, so the
     // all-frames R² carries an irreducible penalty the model didn't earn.
-    // Measured round 7 (GbtProbe): all-frames 0.904-0.912, excl-final 0.939
+    // Measured round 7 (NOTES_r7): all-frames 0.904-0.912, excl-final 0.939
     // vs the reference LSTM's 0.9466 — which pays no such penalty for ITS
     // forced zero (the package-style label zeroes the FIRST frame, and an
     // LSTM reading from t=0 can learn "first step → 0").

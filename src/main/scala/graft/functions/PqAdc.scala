@@ -20,15 +20,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   *
   * `tbl`: ARRAY<ARRAY<DOUBLE>> (the per-query m×k ADC table), `codes`:
   * ARRAY<INT> (the corpus row's PQ codes). Null-safe on either argument
-  * (null → null, matching the HOF). An out-of-range code means corrupt
-  * data and fails loudly, where the HOF's non-ANSI `element_at` would
-  * silently null the whole score.
+  * and on every element the fold reads — a null code, table row or table
+  * cell yields a null score, as the HOF's `element_at` does. An
+  * out-of-range code means corrupt data and fails loudly, where the HOF's
+  * non-ANSI `element_at` would silently null the whole score.
   */
 case class PqAdc(left: Expression, right: Expression)
     extends BinaryExpression with Serializable {
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "pq_adc"
+
+  // null on a null element too, not only on a null argument
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
     case (ArrayType(ArrayType(DoubleType, _), _), ArrayType(IntegerType, _)) =>
@@ -42,7 +46,12 @@ case class PqAdc(left: Expression, right: Expression)
     PqAdc.score(t.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, c) => s"graft.functions.PqAdc.score($t, $c)")
+    nullSafeCodeGen(ctx, ev, (t, c) => {
+      val r = ctx.freshName("adc")
+      s"""java.lang.Double $r = graft.functions.PqAdc.score($t, $c);
+         |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r.doubleValue(); }"""
+        .stripMargin
+    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdc =
@@ -52,18 +61,21 @@ case class PqAdc(left: Expression, right: Expression)
 object PqAdc {
 
   /** Sequential left-fold of the m table lookups — the accumulation order is
-    * part of the cross-path bit-equality contract; do not reassociate. */
-  def score(tbl: ArrayData, codes: ArrayData): Double = {
+    * part of the cross-path bit-equality contract; do not reassociate.
+    * Null when a code, table row or table cell it reads is null. */
+  def score(tbl: ArrayData, codes: ArrayData): java.lang.Double = {
     val m = codes.numElements()
     require(tbl.numElements() >= m,
       s"pq_adc: table has ${tbl.numElements()} subspaces, codes have $m")
     var acc = 0.0
     var j = 0
     while (j < m) {
+      if (codes.isNullAt(j) || tbl.isNullAt(j)) return null
       val row = tbl.getArray(j)
       val c = codes.getInt(j)
       require(c >= 0 && c < row.numElements(),
         s"pq_adc: code $c out of range for ${row.numElements()} centroids")
+      if (row.isNullAt(c)) return null
       acc += row.getDouble(c)
       j += 1
     }

@@ -236,14 +236,13 @@ object KerasLstm {
     * (lane-wise mul/add only — no cross-lane reductions, no FMA), while the
     * gate phase is tolerance-equal (~1e-7 relative — float- vs
     * double-precision transcendentals) and platform-dependent (SVML
-    * availability / lane width), so flipping SPARK_GRAFT_LSTM_SCALAR or
-    * moving hosts shifts predictions in low-order bits. Do NOT rely on
+    * availability / lane width), so a JVM without the module or another
+    * host shifts predictions in low-order bits. Do NOT rely on
     * scalar/vector interchangeability at the bit level; KerasLstmSpec pins
     * the parity against the committed predictions at fixture tolerance. */
-  private[graft] val vectorized: Boolean =
-    !sys.env.contains("SPARK_GRAFT_LSTM_SCALAR") && // A/B toggle for benches
-    (try { VecKernel.laneCount() > 0 }
-     catch { case _: Throwable => false })
+  private val vectorized: Boolean =
+    try { VecKernel.laneCount() > 0 }
+    catch { case _: Throwable => false }
 
   /** z += vᵀ·M for row-major M (nRows × width), 4 rows per pass — SIMD
     * lanes over `width` when the Vector API is present, the identical
@@ -347,8 +346,6 @@ object KerasLstm {
     *        every sequence byte for nothing. */
   def scoreSequences(seqs: DataFrame, model: Model,
       keyCols: Seq[String], rebalance: Boolean = true): DataFrame = {
-    val spark = seqs.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
     // flatten() is codegen'd and cheap; the payoff is the UDF boundary —
     // a flat array<double> crosses as ONE primitive Array[Double] copy,
     // where array<array<double>> materializes a boxed Seq per timestep.

@@ -128,6 +128,9 @@ object DedupQueries {
        |  FROM toks)""".stripMargin
 
   private val B = 24 // simhash bits (of the 31-bit token hash)
+  // d_simhash_banded's band layout: SimBands bands of SimBandBits bits = B
+  private val SimBands = 3
+  private val SimBandBits = 8
 
   /** 24-bit SimHash per doc: majority vote of token-hash bits. */
   private def simhashSigs(s: SparkSession, dir: String): DataFrame = {
@@ -156,6 +159,13 @@ object DedupQueries {
             .mkString(" + ")} AS simhash
        |  FROM votes)""".stripMargin
 
+  /** `CASE` giving a candidate pair's minimal colliding band; `same(b)`
+    * tests its band-b keys for equality. The pair came out of a band
+    * bucket, so the last band needs no test. */
+  private def minBandCase(nBands: Int)(same: Int => String): String =
+    (0 until nBands - 1).map(b => s"WHEN ${same(b)} THEN $b")
+      .mkString("CASE ", "\n     ", s"\n     ELSE ${nBands - 1} END")
+
   /** LSH candidate pairs (d1 < d2), shared by the pair query and the
     * component-clustering query.
     *
@@ -170,9 +180,15 @@ object DedupQueries {
     * band keys — spec'd on a deliberately skewed corpus in SkewSpec) long
     * before it mattered here.
     */
-  private def lshPairs(s: SparkSession, dir: String): DataFrame = {
-    val sig = signatures(s, dir)
-    // Every doc carries ALL FOUR band keys (`bkeys`) through the band
+  private def lshPairs(s: SparkSession, dir: String): DataFrame =
+    lshBandPairs(signatures(s, dir))
+
+  /** [[lshPairs]] over a signature table (doc_id, mh_0..mh_{K-1}): band b
+    * keys rows b·R .. b·R+R-1, R = K / NBands. */
+  private[queries] def lshBandPairs(sig: DataFrame): DataFrame = {
+    val nBands = graft.operators.MinHash.NBands
+    val rows = K / nBands
+    // Every doc carries ALL its band keys (`bkeys`) through the band
     // explode, so a bucket-local pair can see exactly which bands the two
     // docs collide in. A pair colliding in several bands is then emitted
     // ONLY from its minimal colliding band — globally unique by
@@ -183,9 +199,9 @@ object DedupQueries {
     // one; the extra ~100 B/banded row through the band exchange is the
     // documented price (§2.3) for removing a full shuffle of the pairs.
     val banded = sig.select(col("doc_id"),
-      array((0 until 4).map(b =>
-        concat_ws("_", col(s"mh_${3 * b}"), col(s"mh_${3 * b + 1}"),
-          col(s"mh_${3 * b + 2}"))): _*).as("bkeys"))
+      array((0 until nBands).map(b =>
+        concat_ws("_", (0 until rows).map(r => col(s"mh_${rows * b + r}")): _*)
+      ): _*).as("bkeys"))
       .select(col("doc_id"), col("bkeys"),
         posexplode(col("bkeys")).as(Seq("band", "bkey")))
     banded
@@ -200,11 +216,44 @@ object DedupQueries {
           |                y.doc_id AS d2, y.bkeys AS k2))))""".stripMargin))
         .as("p"))
       .filter(col("band") === expr(
-        """CASE WHEN p.k1[0] = p.k2[0] THEN 0
-          |     WHEN p.k1[1] = p.k2[1] THEN 1
-          |     WHEN p.k1[2] = p.k2[2] THEN 2
-          |     ELSE 3 END""".stripMargin))
+        minBandCase(nBands)(b => s"p.k1[$b] = p.k2[$b]")))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
+  }
+
+  /** d_simhash_banded's candidate pairs over a (doc_id, simhash) table:
+    * (band, p: struct(d1, h1, d2, h2)) per d1 < d2 sharing a band value,
+    * each pair once, from its minimal colliding band. */
+  private[queries] def simhashBandPairs(sig: DataFrame): DataFrame = {
+    val mask = (1L << SimBandBits) - 1
+    // band b of h as SQL (band 0 needs no shift)
+    def slice(h: String, b: Int): String =
+      if (b == 0) s"($h & $mask)" else s"(($h >> ${SimBandBits * b}) & $mask)"
+    val banded = sig.select(col("doc_id"), col("simhash"),
+      explode(array((0 until SimBands).map(b => struct(lit(b).as("band"),
+        shiftright(col("simhash"), SimBandBits * b).bitwiseAND(mask).as("bkey"))): _*))
+        .as("bk"))
+      .select(col("doc_id"), col("simhash"),
+        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    banded
+      .groupBy("band", "bkey")
+      .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash"))))
+        .as("ds"))
+      .filter(size(col("ds")) > 1)
+      .select(col("band"), explode(expr(
+        """flatten(transform(ds, (x, i) ->
+          |  transform(slice(ds, i + 2, size(ds)),
+          |    y -> struct(x.doc_id AS d1, x.simhash AS h1,
+          |                y.doc_id AS d2, y.simhash AS h2))))""".stripMargin))
+        .as("p"))
+      // a qualifying pair collides in ≥2 bands (pigeonhole) and would
+      // surface once per colliding band; emitting it ONLY from its
+      // minimal colliding band — decidable in place from the two
+      // signatures the pair row already carries — makes each pair
+      // globally unique and deletes the old `distinct()` exchange
+      // (guide §2.4: 4 exchanges → 3). Bit-exact: integer band-slice
+      // equality, same rows out.
+      .filter(col("band") === expr(
+        minBandCase(SimBands)(b => s"${slice("p.h1", b)} = ${slice("p.h2", b)}")))
   }
 
   private val sqlLshPairs =
@@ -258,46 +307,17 @@ object DedupQueries {
     // all-pairs enumeration anywhere. Pairs are generated BUCKET-LOCALLY
     // (the lshPairs shape: one exchange on the band key, per-bucket i<j
     // combinations bounded by the 8-bit collision rate), signatures ride
-    // along so the Hamming verification is in place, and `distinct`
-    // collapses multi-band collisions. Must return exactly
+    // along so the Hamming verification is in place, and each pair is
+    // emitted only from its minimal colliding band. Must return exactly
     // d_simhash_pairs' rows.
     QueryDef(
       "d_simhash_banded",
-      (s, dir) => {
-        val sig = simhashSigs(s, dir)
-        val banded = sig.select(col("doc_id"), col("simhash"),
-          explode(array((0 until 3).map(b => struct(lit(b).as("band"),
-            shiftright(col("simhash"), 8 * b).bitwiseAND(255L).as("bkey"))): _*))
-            .as("bk"))
-          .select(col("doc_id"), col("simhash"),
-            col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-        banded
-          .groupBy("band", "bkey")
-          .agg(sort_array(collect_list(struct(col("doc_id"), col("simhash"))))
-            .as("ds"))
-          .filter(size(col("ds")) > 1)
-          .select(col("band"), explode(expr(
-            """flatten(transform(ds, (x, i) ->
-              |  transform(slice(ds, i + 2, size(ds)),
-              |    y -> struct(x.doc_id AS d1, x.simhash AS h1,
-              |                y.doc_id AS d2, y.simhash AS h2))))""".stripMargin))
-            .as("p"))
-          // a qualifying pair collides in ≥2 bands (pigeonhole) and would
-          // surface once per colliding band; emitting it ONLY from its
-          // minimal colliding band — decidable in place from the two
-          // signatures the pair row already carries — makes each pair
-          // globally unique and deletes the old `distinct()` exchange
-          // (guide §2.4: 4 exchanges → 3). Bit-exact: integer band-slice
-          // equality, same rows out.
-          .filter(col("band") === expr(
-            """CASE WHEN (p.h1 & 255) = (p.h2 & 255) THEN 0
-              |     WHEN ((p.h1 >> 8) & 255) = ((p.h2 >> 8) & 255) THEN 1
-              |     ELSE 2 END""".stripMargin))
+      (s, dir) =>
+        simhashBandPairs(simhashSigs(s, dir))
           .select(col("p.d1").as("d1"), col("p.d2").as("d2"),
             bit_count(col("p.h1").bitwiseXOR(col("p.h2"))).as("hamming"))
           .filter(col("hamming") <= 1)
-          .orderBy("d1", "d2")
-      },
+          .orderBy("d1", "d2"),
       Some(s"""WITH $sqlSimhashSigs,
               |banded AS (
               |${(0 until 3).map(b =>

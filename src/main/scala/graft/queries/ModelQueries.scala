@@ -27,9 +27,8 @@ object ModelQueries {
   private[graft] val modelPath = sys.env.getOrElse("SPARK_GRAFT_MODEL_PATH",
     "/root/reference/models/convergence_lstm_model_BlindPhysics_Completed_Pass.h5")
 
-  /** The feature + padded-sequence pipeline behind m_lstm_infer, shared with
-    * the stage-timing probe (tools/LstmProbe) so the probe always times THIS
-    * pipeline, not a drifted copy. Returns (frames, sequences).
+  /** The feature + sequence pipeline behind m_lstm_infer: the de-padded
+    * flat sequences [[graft.ml.KerasLstm.scoreFlat]] reads.
     *
     * Trajectory = order; frame = line; features: bounded deterministic
     * transforms of the numerics (magnitudes roughly matching the notebook's
@@ -40,8 +39,7 @@ object ModelQueries {
     * total; throughput is linear in the subset.
     */
   private[graft] def inferInput(s: org.apache.spark.sql.SparkSession,
-      dir: String, nFeatures: Int): (org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) = {
+      dir: String, nFeatures: Int): org.apache.spark.sql.DataFrame = {
     // ONE exchange for the whole pipeline, and it ships the FIVE RAW BASE
     // COLUMNS the 28 features derive from, not the features: 5 numeric
     // slots (~56 B/row) instead of a 28-float array (~140 B/row), and the
@@ -96,9 +94,8 @@ object ModelQueries {
     // — per-trajectory array_repeat allocations + a concat that
     // scoreSequences' slice immediately discards — never runs (r19, §4;
     // bit-identical by SequencesSpec's flat≡padded pin).
-    val seqs = graft.bdb.Sequences.buildFlat(
+    graft.bdb.Sequences.buildFlat(
       packedFrames, Seq("farr"), maxLen = 7, valueType = "float")
-    (wide, seqs)
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -106,7 +103,7 @@ object ModelQueries {
       "m_lstm_infer",
       (s, dir) => {
         val model = graft.ml.KerasLstm.load(modelPath)
-        val (_, seqs) = inferInput(s, dir, model.nFeatures)
+        val seqs = inferInput(s, dir, model.nFeatures)
         graft.ml.KerasLstm
           .scoreFlat(seqs, model, Seq("game_id", "play_id", "nfl_id"),
             rebalance = false) // inferInput pre-partitioned to core count

@@ -3,12 +3,11 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** In-engine sf-scale-up generator — the Scala twin of
-  * `scripts/scalegen.py`, with identical replication semantics: build an
-  * sfN directory by stacking K key-offset replicas of an existing testdata
-  * directory (referentially consistent — every foreign key is shifted by
-  * the SAME stride as its primary key). Document text gets a per-replica
-  * suffix so near-dup pair counts scale ~linearly instead of quadratically.
+/** In-engine sf-scale-up generator: build an sfN directory by stacking K
+  * key-offset replicas of an existing testdata directory (referentially
+  * consistent — every foreign key is shifted by the SAME stride as its
+  * primary key). Document text gets a per-replica suffix so near-dup pair
+  * counts scale ~linearly instead of quadratically.
   *
   * Exists in-engine so [[graft.Bench]] can stage its sf1 heavy-tail profile
   * without depending on driver-side python or a pre-existing /tmp artifact;

@@ -29,8 +29,9 @@ object StageProfile {
     val spark = graft.GraftSession.builder(cpus, dir).getOrCreate()
     val q = graft.queries.Registry.all.find(_.name == qname)
       .getOrElse(sys.error(s"no registry query named $qname"))
-    // SPARK_GRAFT_SWEEP_ACTION=noop: consume every output column (ScaleSweep's
-    // audit action) instead of count(), which column-prunes map-only work
+    // SPARK_GRAFT_SWEEP_ACTION=noop: consume every output column (the r15
+    // scaling audit's action) instead of count(), which column-prunes
+    // map-only work
     val consume: org.apache.spark.sql.DataFrame => Unit =
       if (sys.env.get("SPARK_GRAFT_SWEEP_ACTION").contains("noop"))
         df => df.write.mode("overwrite").format("noop").save()

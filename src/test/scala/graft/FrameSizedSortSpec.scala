@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * frame's bytes, not the session's directory-derived
   * `spark.sql.shuffle.partitions` — the defect class behind
   * `l_incr_agg_retract`'s cpu exponent ~2.0 (a 30 MB state table range-sorted
-  * across 192 partitions sized for a 1.5 GB corpus; PathProbe bisection,
+  * across 192 partitions sized for a 1.5 GB corpus; bisected in
   * NOTES_r17 §4).
   */
 class FrameSizedSortSpec extends SparkSpec {

@@ -73,7 +73,7 @@ class ModelSpec extends SparkSpec {
     // — the reference feeds ITS LSTM 28 engineered features too, cell 88).
     // Deterministic: Synth is hash-generated, seeds fixed, dropout masks
     // are a pure function of (seed, sequence, epoch), the gradient sum is
-    // partitioning-independent. Measured 2026-08-16 (TrainProbe, 300
+    // partitioning-independent. Measured 2026-08-16 (one training run, 300
     // epochs × 6 batches): all-frames 0.9291, causal 0.9435.
     val t = Synth.tracking(spark, nGames = 8, playsPerGame = 25)
     val (_, labeled0) = Pipeline.labeledFeatures(t, Synth.supplementary(t))

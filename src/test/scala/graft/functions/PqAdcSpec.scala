@@ -32,15 +32,22 @@ class PqAdcSpec extends SparkSpec {
   }
 
   test("pq_adc is null-safe and rejects out-of-range codes loudly") {
+    val tbl = Some(Seq(Some(Seq(1.0, 2.0)), Some(Seq(3.0, 4.0))))
     val df = Seq(
-      (1L, Some(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))), Some(Seq(1, 0))),
-      (2L, None, Some(Seq(0, 0))),
-      (3L, Some(Seq(Seq(1.0, 2.0), Seq(3.0, 4.0))), None))
+      (1L, tbl, Some(Seq(Some(1), Some(0)))),
+      (2L, None, Some(Seq(Some(0), Some(0)))),
+      (3L, tbl, None),
+      (4L, tbl, Some(Seq(Some(1), None))), // a null code
+      (5L, Some(Seq(Some(Seq(1.0, 2.0)), None)), Some(Seq(Some(1), Some(0))))) // a null table row
       .toDF("id", "tbl", "codes")
-      .withColumn("s", expr("pq_adc(tbl, codes)"))
-    val got = df.orderBy("id").select("s").collect().map(r =>
-      if (r.isNullAt(0)) None else Some(r.getDouble(0)))
-    assert(got.toSeq === Seq(Some(5.0), None, None))
+    // On a local relation the projection is folded by the interpreted path;
+    // above an exchange it runs in whole-stage codegen.
+    for (in <- Seq(df, df.repartition(1))) {
+      val got = in.withColumn("s", expr("pq_adc(tbl, codes)"))
+        .orderBy("id").select("s").collect().map(r =>
+          if (r.isNullAt(0)) None else Some(r.getDouble(0)))
+      assert(got.toSeq === Seq(Some(5.0), None, None, None, None))
+    }
 
     val oob = Seq((1L, Seq(Seq(1.0, 2.0)), Seq(5))).toDF("id", "tbl", "codes")
       .withColumn("s", expr("pq_adc(tbl, codes)"))
