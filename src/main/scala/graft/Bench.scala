@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Registry
+import graft.Checkpoints.{cache, scoped}
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line sized to survive a bounded tail capture (~2000
@@ -117,8 +118,7 @@ object Bench {
     // probe can neither generate nor hide (r17 root-cause of the r16
     // driver's cpu x26-50 anomaly)
     val steal0 = ContentionLabel.procStatSteal()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.min(32).toString).toInt
+    val cpus = GraftSession.cpus
     // derives shuffle partitions from the bench dir's bytes — identical to
     // the old per-core count at sf0.1 (17 MB is under the floor), so bench
     // plans are unchanged; only genuinely large inputs derive more
@@ -246,7 +246,7 @@ object Bench {
     // Warm each headline query once on the smallest SF so timings measure
     // steady-state execution, not first-call classloading + codegen.
     Registry.headline.foreach { q =>
-      try q.run(spark, "/root/testdata/sf0.001").count()
+      try scoped(q.run(spark, "/root/testdata/sf0.001").count())
       catch { case _: Throwable => () }
     }
     // Force-stage the derived layouts THE BENCHED SET READS at the bench SF
@@ -290,14 +290,15 @@ object Bench {
       // reads up to ~5x steady state on those queries. min-wall was
       // already post-warm; this makes the CPU column steady-state too,
       // which is the bench's stated intent.
-      warmToPlateau(() => q.run(spark, sfDir).count())
+      warmToPlateau(() => scoped(q.run(spark, sfDir).count()))
       perQueryCal(q.name) = probeOnce()
       var times = List.empty[Double]
       val (bytes, cpu) = metricsDelta {
         (1 to 3).foreach { _ =>
           val t0 = System.nanoTime()
-          try { q.run(spark, sfDir).count(); times ::= (System.nanoTime() - t0) / 1e9 }
-          catch { case e: Throwable => recordErr(q.name, e) }
+          try scoped {
+            q.run(spark, sfDir).count(); times ::= (System.nanoTime() - t0) / 1e9
+          } catch { case e: Throwable => recordErr(q.name, e) }
         }
       }
       perQueryShuffle(q.name) = bytes
@@ -312,7 +313,7 @@ object Bench {
     // bench-local serialized index copy: deleted in the finally so a failed
     // run doesn't leak one bench_ivfpq temp dir per attempt
     var annTmp: java.io.File = null
-    val annResults = try {
+    val annResults = try scoped {
       import org.apache.spark.sql.functions.col
       val vecs = graft.sources.Tables.embeddings(spark, sfDir)
         .select("vec_id", "embedding")
@@ -333,7 +334,7 @@ object Bench {
           pruneCellScan = true).count()
       val pqCb = graft.operators.Pq.train(vecs, dim = 64, m = 16, k = 16,
         sampleFraction = 0.5)
-      val pqEnc = graft.operators.Pq.encode(vecs, pqCb).cache()
+      val pqEnc = cache(graft.operators.Pq.encode(vecs, pqCb))
       pqEnc.count()
       def pqSearch(): Unit =
         graft.operators.Pq.search(pqEnc, queries, pqCb, k = 5, shortlist = 64)
@@ -341,7 +342,7 @@ object Bench {
       val runs = Seq("s_ivfpq_search" -> (() => ivfpqSearch()),
         "s_ivfpq_disk" -> (() => ivfpqDisk()),
         "s_pq_search" -> (() => pqSearch()))
-      val out = runs.map { case (name, run) =>
+      runs.map { case (name, run) =>
         warmToPlateau(run)
         perQueryCal(name) = probeOnce()
         var ts = Seq.empty[Double]
@@ -350,8 +351,6 @@ object Bench {
         perQueryCpu(name) = cpu
         name -> ts.sorted
       }
-      idx.unpersist(); pqEnc.unpersist()
-      out
     } catch {
       case e: Throwable => recordErr("ann_search", e); Seq.empty
     } finally {
@@ -364,7 +363,7 @@ object Bench {
     // region, then time the production apply path over the documents table,
     // forcing full token materialization.
     val calApply = calibrate()
-    val applyResults = try {
+    val applyResults = try scoped {
       val docs = graft.sources.Tables.documents(spark, sfDir)
       val model = graft.operators.Bpe.train(docs, "text", 32)
       def applyRun(): Unit =
@@ -376,9 +375,7 @@ object Bench {
       val (bytes, cpu) = metricsDelta { ts = timeRuns(3)(applyRun()) }
       perQueryShuffle("t_bpe_apply") = bytes
       perQueryCpu("t_bpe_apply") = cpu
-      val out = Seq("t_bpe_apply" -> ts.sorted)
-      graft.Checkpoints.release(model.words)
-      out
+      Seq("t_bpe_apply" -> ts.sorted)
     } catch {
       case e: Throwable => recordErr("bpe_apply", e); Seq.empty
     }
@@ -440,7 +437,7 @@ object Bench {
             // bucketed chain's first timed sf1 run still carried 7.2 cpu_s
             // of compilation vs 2.2 steady — exactly the >3x spread
             // sf1_unstable flags); warm to the C2 plateau instead
-            warmToPlateau(() => q.run(spark, sf1Dir).count())
+            warmToPlateau(() => scoped(q.run(spark, sf1Dir).count()))
             perQueryCal(s"sf1:$name") = probeOnce()
             var times = List.empty[Double]
             var runRecs = List.empty[String]
@@ -456,11 +453,13 @@ object Bench {
                   // mirror of Dataset.count(): the grouped frame is OURS, so
                   // after collect() its finalized AQE plan is readable —
                   // count() itself hides its queryExecution
-                  val counted = q.run(spark, sf1Dir).groupBy().count()
-                  counted.collect()
-                  wall = (System.nanoTime() - t0) / 1e9
-                  times ::= wall
-                  fp = graft.queries.PlanFingerprints.ofExecuted(counted).brief
+                  scoped {
+                    val counted = q.run(spark, sf1Dir).groupBy().count()
+                    counted.collect()
+                    wall = (System.nanoTime() - t0) / 1e9
+                    times ::= wall
+                    fp = graft.queries.PlanFingerprints.ofExecuted(counted).brief
+                  }
                 } catch { case e: Throwable => recordErr(s"sf1:$name", e) }
               }
               bytesTot += bytes
@@ -513,7 +512,7 @@ object Bench {
           val (bytes, cpu) = metricsDelta {
             (1 to 3).foreach { _ =>
               val t0 = System.nanoTime()
-              try {
+              try scoped {
                 q.run(spark, sfDir).count()
                 times ::= (System.nanoTime() - t0) / 1e9
               } catch { case e: Throwable => recordErr(name, e) }

@@ -13,8 +13,13 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to local cores, not the 200 default.
   */
 object GraftSession {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors.min(32)): SparkSession =
+  def local(cores: Int = cpus): SparkSession =
     builder(cores).getOrCreate()
+
+  /** Local cores for a driver main: `SPARK_GRAFT_CPUS`, else the box's
+    * processors capped at 32. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors.min(32))
 
   /** Compressed parquet bytes per shuffle partition the session targets when
     * it can see its input directory. 8 MiB of parquet is ~64–128 MiB of

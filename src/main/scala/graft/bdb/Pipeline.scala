@@ -3,6 +3,7 @@ package graft.bdb
 import graft.GraftSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.cache
 
 /** End-to-end pipeline (reference: Submission.ipynb EP1, SURVEY §3): raw
   * tracking → normalized features → separation → labels → route clusters →
@@ -51,7 +52,7 @@ object Pipeline {
 
   def run(tracking: DataFrame, output: DataFrame, supp: DataFrame): Result = {
     val (receivers, labeled0) = labeledFeatures(tracking, supp)
-    val labeled = labeled0.cache()
+    val labeled = cache(labeled0)
 
     // Phase 1 — route features + clustering on receiver trajectories
     val routeFeats = Routes.routeFeatures(

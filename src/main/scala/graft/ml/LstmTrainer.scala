@@ -2,6 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{cache, scoped}
 
 /** **In-engine distributed training** for the reference's convergence LSTM
   * (reference: bdb2026/models.py:23-138 — Masking(0.0) → LSTM(64, seq) →
@@ -427,20 +428,21 @@ object LstmTrainer {
     * (falls back to train loss when absent, like the reference's
     * `monitor="loss"`). Returns the float32 inference model. */
   def train(trainSeqs: DataFrame, valSeqs: Option[DataFrame],
-      keyCols: Seq[String], cfg: Config): Trained = {
+      keyCols: Seq[String], cfg: Config): Trained = scoped {
+    // leaving the scope frees the cached sequence RDDs, also when training
+    // throws
     val spark = trainSeqs.sparkSession
     val sc = spark.sparkContext
     val s = Shape(cfg.nFeatures, cfg.units1, cfg.units2, cfg.denseUnits)
 
     def toRdd(df: DataFrame) = {
       import spark.implicits._
-      df.select(
+      cache(df.select(
           xxhash64(keyCols.map(col): _*).as("sid"),
           col("seq_len").cast("int").as("n"),
           flatten(slice(col("seq"), lit(1), col("seq_len")))
             .cast("array<double>").as("flat"))
-        .as[(Long, Int, Array[Double])].rdd
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as[(Long, Int, Array[Double])].rdd)
     }
     val trainRdd = toRdd(trainSeqs)
     val valRdd = valSeqs.map(toRdd)
@@ -541,8 +543,6 @@ object LstmTrainer {
       log.info(f"epoch $epoch%3d train=$lastTrainLoss%.5f monitored=$monitored%.5f" +
         f" best=$bestLoss%.5f@$bestEpoch lr=$curLr%.2e")
     }
-    trainRdd.unpersist(blocking = false)
-    valRdd.foreach(_.unpersist(blocking = false))
     Trained(export(bestP, s), epoch, bestEpoch, lastTrainLoss, bestLoss)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{pin, release, scoped}
 
 /** Distributed byte-pair-encoding tokenizer TRAINING — the real merge
   * algorithm (iterative pair-count → pick → merge), not a regex
@@ -144,32 +145,38 @@ object Bpe {
       localMaxWords: Int = LocalMaxWords): Model = {
     require(maxMerges >= 0, s"maxMerges must be >= 0, got $maxMerges")
     // materialize the base word table once: every round's winner job would
-    // otherwise re-run the corpus scan + agg
+    // otherwise re-run the corpus scan + agg. Leaving the scope frees it
+    // (and the last round's checkpoint); only the returned word table stays.
     val caller = docs.sparkSession
-    val words0 = wordCounts(docs, textCol)
-      .withColumn("symstr", symToStr(
-        concat(split(col("word"), ""), array(lit(EndOfWord)))))
-      .localCheckpoint(true)
-    if (localMaxWords > 0) {
+    scoped {
+      val words0 = pin(wordCounts(docs, textCol)
+        .withColumn("symstr", symToStr(
+          concat(split(col("word"), ""), array(lit(EndOfWord))))))
       // byte-metered local fetch: stop pulling the moment the gate is
       // exceeded (never pay a full collect to discard it)
-      val it = words0.select(col("word"), col("cnt")).toLocalIterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      var bytes = 0L
-      var fits = true
-      while (fits && it.hasNext) {
-        val r = it.next()
-        val w = r.getString(0)
-        buf += ((w, r.getLong(1)))
-        bytes += 64L + 2L * w.length // object + UTF-16 chars, rough
-        if (buf.length > localMaxWords || bytes > LocalMaxBytes) fits = false
+      val local = if (localMaxWords <= 0) None else {
+        val it = words0.select(col("word"), col("cnt")).toLocalIterator()
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+        var bytes = 0L
+        var fits = true
+        while (fits && it.hasNext) {
+          val r = it.next()
+          val w = r.getString(0)
+          buf += ((w, r.getLong(1)))
+          bytes += 64L + 2L * w.length // object + UTF-16 chars, rough
+          if (buf.length > localMaxWords || bytes > LocalMaxBytes) fits = false
+        }
+        Option.when(fits)(buf.toSeq)
       }
-      if (fits) {
-        val model = trainLocal(caller, buf.toSeq, maxMerges)
-        releaseCheckpoint(words0)
-        return model
+      local match {
+        case Some(buf) => trainLocal(caller, buf, maxMerges)
+        case None => trainDistributed(caller, words0, maxMerges)
       }
     }
+  }
+
+  private def trainDistributed(caller: org.apache.spark.sql.SparkSession,
+      words0: DataFrame, maxMerges: Int): Model = {
     val iso = caller.newSession()
     caller.conf.getAll.foreach { case (k, v) =>
       if (iso.conf.isModifiable(k) && iso.conf.getOption(k) != Some(v))
@@ -185,7 +192,7 @@ object Bpe {
     try {
       words0.createOrReplaceGlobalTempView(inView)
       var words = iso.table(s"global_temp.$inView")
-      val intermediates = scala.collection.mutable.Buffer(words)
+      var lastCut: Option[DataFrame] = None
       val merges = scala.collection.mutable.Buffer.empty[Merge]
       var exhausted = false
       while (merges.size < maxMerges && !exhausted) {
@@ -206,20 +213,20 @@ object Bpe {
             // is 3× WORSE here (2.5 → 6–11 s at sf0.1) — each eager
             // checkpoint job materializes the full frame into storage
             // blocks, which costs far more than the re-analysis it saves.
+            // The superseded checkpoint is dead once the new one is
+            // materialized (words0 stays until the scope exits).
             if (step % 4 == 0) {
-              words = words.localCheckpoint(true)
-              intermediates += words
+              words = pin(words)
+              lastCut.foreach(release)
+              lastCut = Some(words)
             }
         }
       }
-      val result = words
-        .select(col("word"), col("cnt"), strToSym(col("symstr")).as("sym"))
-        .localCheckpoint(true)
+      val result = pin(words
+        .select(col("word"), col("cnt"), strToSym(col("symstr")).as("sym")))
       result.createOrReplaceGlobalTempView(outView)
       // re-root onto the caller session; the blocks are the iso checkpoint's
-      val out = caller.table(s"global_temp.$outView")
-      intermediates.foreach(releaseCheckpoint)
-      Model(merges.toSeq, out)
+      Model(merges.toSeq, caller.table(s"global_temp.$outView"))
     } finally {
       caller.catalog.dropGlobalTempView(inView)
       caller.catalog.dropGlobalTempView(outView)
@@ -423,6 +430,4 @@ object Bpe {
     }
     syms.toArray
   }
-
-  private def releaseCheckpoint(df: DataFrame): Unit = graft.Checkpoints.release(df)
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{pin, release, scoped}
 
 /** Distributed connected components — the clustering step of a near-dup
   * pipeline: LSH/SimHash emit candidate PAIRS, but "keep one doc per
@@ -33,17 +34,16 @@ object ConnectedComponents {
     * where component = min node id reachable.
     */
   def run(edges: DataFrame, src: String = "src", dst: String = "dst",
-      maxIter: Int = 50): DataFrame = {
-    val sym = edges
+      maxIter: Int = 50): DataFrame = scoped {
+    // leaving the scope frees `sym`: the returned labels are materialized
+    val sym = pin(edges
       .select(col(src).cast("long").as("id"), col(dst).cast("long").as("nb"))
       .union(edges.select(col(dst).cast("long").as("id"), col(src).cast("long").as("nb")))
       .filter(col("id") =!= col("nb"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
-    var labels = sym.select("id").distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint(true)
+    var labels = pin(sym.select("id").distinct()
+      .withColumn("comp", col("id")))
 
     // Convergence test: labels only ever DECREASE, so the label sum is
     // strictly monotone and "sum unchanged ⇔ no label changed" — one tiny
@@ -60,13 +60,12 @@ object ConnectedComponents {
       val viaNeighbor = sym
         .join(labels.withColumnRenamed("id", "nb"), Seq("nb"))
         .select("id", "comp")
-      val next = labels.union(viaNeighbor)
-        .groupBy("id").agg(min("comp").as("comp"))
-        .localCheckpoint(true)
+      val next = pin(labels.union(viaNeighbor)
+        .groupBy("id").agg(min("comp").as("comp")))
       val s = labelSum(next)
       // the new checkpoint is materialized — the previous round's blocks are
       // dead; released per round, not left to driver-GC timing
-      graft.Checkpoints.release(labels)
+      release(labels)
       labels = next
       converged = s.compareTo(prevSum) == 0
       prevSum = s
@@ -74,7 +73,6 @@ object ConnectedComponents {
     }
     require(converged, s"did not converge in $maxIter rounds (diameter too " +
       "large for label propagation — use runStarContraction instead)")
-    graft.Checkpoints.release(sym) // returned labels are materialized; sym is dead
     labels
   }
 
@@ -97,24 +95,21 @@ object ConnectedComponents {
     * [[Skew.hotKeys]]-style diagnostics upstream.
     */
   def greedyKeepFirstDrops(pairs: DataFrame, src: String = "d1",
-      dst: String = "d2"): DataFrame = {
+      dst: String = "d2"): DataFrame = scoped {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val edges = pairs
+    // leaving the scope frees the edge and label checkpoints, so the result
+    // never reads them: the no-pairs case is the common one on a stream, and
+    // a per-batch leak here is exactly the wave-3 accumulation class
+    val edges = pin(pairs
       .select(least(col(src), col(dst)).cast("long").as("lo"),
         greatest(col(src), col(dst)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi"))
-      .distinct()
-      .localCheckpoint(true)
-    if (edges.isEmpty) {
-      // return a frame independent of `edges` so its checkpoint can be
-      // released NOW — the no-pairs case is the common one on a stream, and
-      // a per-batch leak here is exactly the wave-3 accumulation class
-      graft.Checkpoints.release(edges)
-      spark.range(0).toDF("id")
-    } else {
+      .distinct())
+    if (edges.isEmpty) spark.range(0).toDF("id")
+    else {
       val labels = run(edges, "lo", "hi")
-      val dropped = edges.join(labels.withColumnRenamed("id", "lo"), Seq("lo"))
+      pin(edges.join(labels.withColumnRenamed("id", "lo"), Seq("lo"))
         .select(col("comp"), col("lo"), col("hi"))
         .as[(Long, Long, Long)]
         .groupByKey(_._1)
@@ -135,13 +130,9 @@ object ConnectedComponents {
           }
           dropped.iterator
         }
-        .toDF("id")
-        // materialize the (small: dropped ids) result so the edge and label
+        // materialized (small: dropped ids) so the edge and label
         // checkpoints it reads can be released before returning
-        .localCheckpoint(true)
-      graft.Checkpoints.release(edges)
-      graft.Checkpoints.release(labels)
-      dropped
+        .toDF("id"))
     }
   }
 
@@ -164,19 +155,18 @@ object ConnectedComponents {
     * below — a count/checksum heuristic would accept non-star fixpoints).
     */
   def runStarContraction(edges: DataFrame, src: String = "src",
-      dst: String = "dst", maxRounds: Int = 40): DataFrame = {
+      dst: String = "dst", maxRounds: Int = 40): DataFrame = scoped {
     // Canonicalize BEFORE the initial convergence test: orient every edge
     // high→low. The input is an arbitrary directed pair list (LSH emits
     // d1 < d2, i.e. low→high), and the star-forest test below is only
     // meaningful on a high→low-oriented set — a root-written star like
     // (1,2),(1,3) would otherwise pass the test untouched and come back as
     // two components.
-    var e = edges
+    var e = pin(edges
       .select(col(src).cast("long").as("a"), col(dst).cast("long").as("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
     def both(d: DataFrame): DataFrame =
       d.union(d.select(col("v").as("u"), col("u").as("v")))
@@ -226,8 +216,8 @@ object ConnectedComponents {
     var converged = isStarForest(e)
     var round = 0
     while (!converged && round < maxRounds) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      graft.Checkpoints.release(e) // next is materialized; last round is dead
+      val next = pin(smallStar(largeStar(e)))
+      release(e) // next is materialized; last round is dead
       e = next
       converged = isStarForest(e)
       round += 1

@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{cache, scoped}
 
 /** **Inverted multi-index** (Babenko & Lempitsky, CVPR 2012): the two-level
   * coarse quantizer that replaces a flat √n-cell IVF when the centroid probe
@@ -51,29 +52,26 @@ object Imi {
     * centroids, capped by the sample size); `nTotal` skips the count job
     * when the caller already knows it. */
   def train(vecs: DataFrame, dim: Int, targetCells: Int, seed: Long = 42L,
-      sampleCap: Int = 65536, nTotal: Long = -1L): Model = {
+      sampleCap: Int = 65536, nTotal: Long = -1L): Model = scoped {
     require(dim >= 2, s"dim must be >= 2 to split, got $dim")
     val n = if (nTotal >= 0) nTotal else vecs.count()
     val frac = math.min(1.0, sampleCap.toDouble / math.max(1L, n))
-    val sample =
-      (if (frac >= 1.0) vecs else vecs.sample(withReplacement = false, frac, seed))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val s = (dim + 1) / 2
-      val kHalf = math.max(2, math.ceil(math.sqrt(targetCells.toDouble)).toInt)
-      val nSample = sample.count()
-      def fit(sliceFrom: Int, width: Int): Array[Array[Float]] = {
-        val feat = sample.select(array_to_vector(
-          expr(s"slice(embedding, $sliceFrom, $width)").cast("array<double>"))
-          .as("features"))
-        val k = math.max(1L, math.min(kHalf.toLong, nSample)).toInt
-        new KMeans().setK(k).setSeed(seed)
-          .setFeaturesCol("features").setPredictionCol("cell")
-          .fit(feat)
-          .clusterCenters.map(_.toArray.map(_.toFloat))
-      }
-      Model(fit(1, s), fit(s + 1, dim - s), dim)
-    } finally { sample.unpersist(blocking = false); () }
+    val sample = cache(
+      if (frac >= 1.0) vecs else vecs.sample(withReplacement = false, frac, seed))
+    val s = (dim + 1) / 2
+    val kHalf = math.max(2, math.ceil(math.sqrt(targetCells.toDouble)).toInt)
+    val nSample = sample.count()
+    def fit(sliceFrom: Int, width: Int): Array[Array[Float]] = {
+      val feat = sample.select(array_to_vector(
+        expr(s"slice(embedding, $sliceFrom, $width)").cast("array<double>"))
+        .as("features"))
+      val k = math.max(1L, math.min(kHalf.toLong, nSample)).toInt
+      new KMeans().setK(k).setSeed(seed)
+        .setFeaturesCol("features").setPredictionCol("cell")
+        .fit(feat)
+        .clusterCenters.map(_.toArray.map(_.toFloat))
+    }
+    Model(fit(1, s), fit(s + 1, dim - s), dim)
   }
 
   /** Persist the trained codebooks (one tiny parquet row — centroids are

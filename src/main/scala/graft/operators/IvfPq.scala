@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{cache, scoped}
 
 /** IVF-PQ: the composed billion-scale ANN index (the FAISS `IVFxx,PQyy`
   * architecture) — [[Ivf]]'s coarse quantizer prunes WHICH vectors are
@@ -28,11 +29,7 @@ object IvfPq {
     * index's tombstone set (vec_id), excluded from every search until
     * [[compactIndex]] physically purges the rows. */
   final case class Index(ivf: Ivf.Index, cb: Pq.Codebooks, encoded: DataFrame,
-      deleted: Option[DataFrame] = None) {
-    /** Release the cached code table (the index's executor-storage footprint).
-      * Searches after this recompute the encode lineage per action. */
-    def unpersist(): Unit = { encoded.unpersist(); () }
-  }
+      deleted: Option[DataFrame] = None)
 
   private def residualCol = expr(
     "zip_with(CAST(embedding AS ARRAY<DOUBLE>), centroid, (x, c) -> x - c)")
@@ -42,27 +39,27 @@ object IvfPq {
     * The returned `encoded` frame is CACHED and materialized — it IS the
     * index; without it the residual lineage (KMeans assign + centroid join
     * + subtraction over the corpus) would re-execute for each of the m
-    * codebook fits and on every later search. Unpersist it when done. */
+    * codebook fits and on every later search. It belongs to the caller's
+    * scope (or `Checkpoints.release(idx.encoded)` frees it when done). */
   def build(vecs: DataFrame, dim: Int, nLists: Int = 16, m: Int = 16,
-      k: Int = 16, seed: Long = 42L): Index = {
+      k: Int = 16, seed: Long = 42L): Index = scoped {
     val ivf = Ivf.build(vecs, nLists, seed)
-    val resid = ivf.assigned
+    // leaving the scope frees the residual lineage; `encoded` is
+    // materialized first and stays, as the returned index reads it
+    val resid = cache(ivf.assigned
       .join(broadcast(ivf.centroids), Seq("cell"))
-      .withColumn("residual", residualCol)
-      .cache()
+      .withColumn("residual", residualCol))
     // PQ over residuals: Pq.encode/train read a column named `embedding`
     val cb = Pq.train(
       resid.select(col("vec_id"), col("residual").as("embedding")),
       dim, m, k, seed)
-    val encoded = Pq.encode(
+    val encoded = cache(Pq.encode(
         resid.select(col("vec_id"), col("cell"),
           col("embedding").as("orig_emb"), col("residual").as("embedding")),
         cb)
       .select(col("vec_id"), col("cell"), col("codes"),
-        col("orig_emb").as("embedding"))
-      .cache()
-    encoded.count() // materialize before dropping the residual lineage
-    resid.unpersist()
+        col("orig_emb").as("embedding")))
+    encoded.count()
     Index(ivf, cb, encoded)
   }
 

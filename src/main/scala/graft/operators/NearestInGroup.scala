@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.pin
 
 /** **Scale-adaptive nearest-in-group** (SURVEY §2.3 J7; reference: per-frame
   * nearest defender, BDB_2026.ipynb cell 69 / preprocess.py:489-499): for
@@ -287,13 +288,12 @@ object NearestInGroup {
       leftX: String, leftY: String, rightX: String, rightY: String,
       eps: Double): DataFrame = {
     val keyCols = leftKeys.indices.map(i => s"__nk$i")
-    val lid = leftKeys.zip(keyCols).foldLeft(left) {
+    val lid = pin(leftKeys.zip(keyCols).foldLeft(left) {
         case (df, (k, kc)) => df.withColumn(kc, col(k))
       }
       .withColumn("__nid", monotonically_increasing_id())
       .withColumn("__nlx", col(leftX).cast("double"))
-      .withColumn("__nly", col(leftY).cast("double"))
-      .localCheckpoint()
+      .withColumn("__nly", col(leftY).cast("double")))
     val rRows = right.select(
       rightKeys.zip(keyCols).map { case (k, n) => col(k).as(n) } :+
       col(rightX).cast("double").as("__nrx") :+

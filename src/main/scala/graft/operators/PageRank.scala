@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{cache, pin, release, scoped}
 
 /** Fixed-iteration PageRank over an edge list — the canonical iterative
   * graph centrality, run as K co-partitioned rounds of join + aggregate.
@@ -132,59 +133,65 @@ object PageRank {
     // `Exchange hashpartitioning(user_id, 1)`). Scoped-down partitions are
     // for the ITERATION's metadata-scale frames only.
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val pairs = e0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    pairs.persist()
-    val nPairs = pairs.count()
-    // the local path declares its node column as src's type, while the
-    // distributed path WIDENS mixed src/dst types via unionByName — so
-    // mixed-type edges must take the distributed iteration or the two
-    // paths would fork (or createDataFrame would reject the rows)
-    val typesAgree = e0.schema("src").dataType == e0.schema("dst").dataType
-    val tolPico = tol.map(t => (t * Unit).toLong)
-    if (localMaxNodes > 0 && typesAgree && nPairs <= SmallGraphMaxPairs) {
+    // `pairs` is freed when this scope exits: after the local iteration
+    // (which runs no Spark job), or once the distributed result is pinned
+    scoped {
+      val pairs = cache(
+        e0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
+      val nPairs = pairs.count()
+      // the local path declares its node column as src's type, while the
+      // distributed path WIDENS mixed src/dst types via unionByName — so
+      // mixed-type edges must take the distributed iteration or the two
+      // paths would fork (or createDataFrame would reject the rows)
+      val typesAgree = e0.schema("src").dataType == e0.schema("dst").dataType
+      val tolPico = tol.map(t => (t * Unit).toLong)
       // SMALL-GRAPH fast path: collect the collapsed pairs (bounded by the
       // gate), derive nodes/degrees on the driver, iterate locally —
       // bit-identical arithmetic (spec-pinned against the distributed
       // path), zero node-layout jobs, zero per-round stages, and no
       // private-session plumbing at all.
-      val es = pairs.collect()
-      val nodeType = e0.schema("src").dataType
-      val distinctNodes = {
-        val s = new java.util.HashSet[Any]()
-        es.foreach { r => s.add(r.get(0)); s.add(r.get(1)) }
-        s.size()
+      val local =
+        if (localMaxNodes > 0 && typesAgree && nPairs <= SmallGraphMaxPairs) {
+          val es = pairs.collect()
+          val distinctNodes = {
+            val s = new java.util.HashSet[Any]()
+            es.foreach { r => s.add(r.get(0)); s.add(r.get(1)) }
+            s.size()
+          }
+          Option.when(distinctNodes <= localMaxNodes)(es)
+        } else None
+      local match {
+        case Some(es) =>
+          runLocal(caller, es, e0.schema("src").dataType, damping, iterations,
+            tolPico)
+        case None =>
+          // Distributed iteration: isolate its scoped confs on a private
+          // session (see the comment block above); the already-collapsed
+          // and cached pair frame crosses via a global temp view, and
+          // CacheManager is shared-state so the iso plan reads its blocks.
+          val iso = caller.newSession()
+          caller.conf.getAll.foreach { case (k, v) =>
+            if (iso.conf.isModifiable(k) && iso.conf.getOption(k) != Some(v))
+              try iso.conf.set(k, v)
+              catch { case _: org.apache.spark.sql.AnalysisException => () }
+          }
+          val vid = viewIds.incrementAndGet()
+          val inView = s"graft_pagerank_in_$vid"
+          val outView = s"graft_pagerank_out_$vid"
+          try {
+            pairs.createOrReplaceGlobalTempView(inView)
+            val pIso = iso.table(s"global_temp.$inView")
+            iso.conf.set("spark.sql.shuffle.partitions",
+              partitionCountFor(pIso).toString)
+            val (res, rounds) = runScoped(pIso, iterations, damping, tolPico)
+            res.createOrReplaceGlobalTempView(outView)
+            (caller.table(s"global_temp.$outView"), rounds)
+          } finally {
+            caller.catalog.dropGlobalTempView(inView)
+            caller.catalog.dropGlobalTempView(outView)
+            ()
+          }
       }
-      if (distinctNodes <= localMaxNodes) {
-        pairs.unpersist(false)
-        return runLocal(caller, es, nodeType, damping, iterations, tolPico)
-      }
-    }
-    // Distributed iteration: isolate its scoped confs on a private session
-    // (see the comment block above); the already-collapsed-and-persisted
-    // pair frame crosses via a global temp view, and CacheManager is
-    // shared-state so the iso plan reads the materialized blocks.
-    val iso = caller.newSession()
-    caller.conf.getAll.foreach { case (k, v) =>
-      if (iso.conf.isModifiable(k) && iso.conf.getOption(k) != Some(v))
-        try iso.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    val vid = viewIds.incrementAndGet()
-    val inView = s"graft_pagerank_in_$vid"
-    val outView = s"graft_pagerank_out_$vid"
-    try {
-      pairs.createOrReplaceGlobalTempView(inView)
-      val pIso = iso.table(s"global_temp.$inView")
-      iso.conf.set("spark.sql.shuffle.partitions",
-        partitionCountFor(pIso).toString)
-      val (res, rounds) = runScoped(pIso, iterations, damping, tolPico)
-      res.createOrReplaceGlobalTempView(outView)
-      (caller.table(s"global_temp.$outView"), rounds)
-    } finally {
-      pairs.unpersist(false)
-      caller.catalog.dropGlobalTempView(inView)
-      caller.catalog.dropGlobalTempView(outView)
-      ()
     }
   }
 
@@ -198,62 +205,55 @@ object PageRank {
     * convergence threshold in exact pico-units — floor: any delta strictly
     * below tol·Unit stops; the comparison itself is integer-exact). */
   private def runScoped(pairs: DataFrame, iterations: Int, damping: Double,
-      tolPico: Option[Long]): (DataFrame, Int) = {
+      tolPico: Option[Long]): (DataFrame, Int) = scoped {
+    // leaving the scope frees stateBase, eP and the final cut, all AFTER
+    // the result below is materialized (the cache-leak class the round-5
+    // ADVICE flagged on IVF-PQ): what remains cached is exactly one O(|V|)
+    // block backing the returned frame
     val (stateBase, eP, n) = prepareFromPairs(pairs,
       pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    if (n == 0) {
-      // materialize BEFORE releasing the inputs it reads from
-      val empty = stateBase.select(col("node"))
-        .withColumn("rank", lit(0.0)).localCheckpoint(true)
-      Seq(stateBase, eP).foreach(_.unpersist(false))
-      return (empty, 0)
-    }
-    val nD = n.toDouble
-
-    // r0 = round(Unit / N) pico each; deg rides along so no per-round
-    // ranks⋈deg join is ever needed
-    var state = stateBase.withColumn("r_mc",
-      round(lit(Unit.toDouble) / nD).cast("long"))
-    var prevCut: Option[DataFrame] = None
-    var rounds = 0
-    var converged = false
-    while (rounds < iterations && !converged) {
-      // materialize EVERY round (the Pregel superstep shape): `step` reads
-      // `state` twice (dangling + contribs), so a lazily-chained tree would
-      // DOUBLE per round — 2^K logical blowup — and even short chains spend
-      // more driver time re-analyzing nested copies than the cut job costs.
-      // Each round is one flat, pipelined job over LogicalRDD leaves;
-      // measured at sf0.1: cut-every-5 ≈ 4.8 s, cut-every-round ≈ 2.2 s.
-      val c = cut(step(stateBase, state, eP, nD, damping))
-      rounds += 1
-      // L1 delta vs the previous round, only when a tolerance is set: both
-      // frames are node-partitioned (cut preserves the layout), so this is
-      // an exchange-free join + a 1-row agg — exact BIGINT arithmetic, no
-      // float drift in the stopping rule itself.
-      tolPico.foreach { tp =>
-        val d = c.select(col("node"), col("r_mc").as("r_new"))
-          .join(state.select(col("node"), col("r_mc").as("r_old")), Seq("node"))
-          .agg(coalesce(sum(abs(col("r_new") - col("r_old"))), lit(0L)))
-          .head.getLong(0)
-        if (d <= tp) converged = true
+    if (n == 0)
+      (pin(stateBase.select(col("node"))
+        .withColumn("rank", lit(0.0))), 0)
+    else {
+      val nD = n.toDouble
+      // r0 = round(Unit / N) pico each; deg rides along so no per-round
+      // ranks⋈deg join is ever needed
+      var state = stateBase.withColumn("r_mc",
+        round(lit(Unit.toDouble) / nD).cast("long"))
+      var prevCut: Option[DataFrame] = None
+      var rounds = 0
+      var converged = false
+      while (rounds < iterations && !converged) {
+        // materialize EVERY round (the Pregel superstep shape): `step` reads
+        // `state` twice (dangling + contribs), so a lazily-chained tree would
+        // DOUBLE per round — 2^K logical blowup — and even short chains spend
+        // more driver time re-analyzing nested copies than the cut job costs.
+        // Each round is one flat, pipelined job over LogicalRDD leaves;
+        // measured at sf0.1: cut-every-5 ≈ 4.8 s, cut-every-round ≈ 2.2 s.
+        val c = cut(step(stateBase, state, eP, nD, damping))
+        rounds += 1
+        // L1 delta vs the previous round, only when a tolerance is set: both
+        // frames are node-partitioned (cut preserves the layout), so this is
+        // an exchange-free join + a 1-row agg — exact BIGINT arithmetic, no
+        // float drift in the stopping rule itself.
+        tolPico.foreach { tp =>
+          val d = c.select(col("node"), col("r_mc").as("r_new"))
+            .join(state.select(col("node"), col("r_mc").as("r_old")), Seq("node"))
+            .agg(coalesce(sum(abs(col("r_new") - col("r_old"))), lit(0L)))
+            .head.getLong(0)
+          if (d <= tp) converged = true
+        }
+        // release the superseded round's blocks IMMEDIATELY: round k+1 reads
+        // only cut k, so live cached state stays at 2 × O(|V|), not K ×
+        // (eager cut ⇒ cut k is fully materialized before cut k−1 goes)
+        prevCut.foreach(release)
+        prevCut = Some(c)
+        state = c
       }
-      // release the superseded round's blocks IMMEDIATELY: round k+1 reads
-      // only cut k, so live cached state stays at 2 × O(|V|), not K ×
-      // (eager cut ⇒ cut k is fully materialized before cut k−1 goes)
-      prevCut.foreach(graft.Checkpoints.release)
-      prevCut = Some(c)
-      state = c
+      (pin(state.select(col("node"),
+        (col("r_mc").cast("double") / Unit.toDouble).as("rank"))), rounds)
     }
-    // Materialize the result as its own checkpoint, then RELEASE the
-    // remaining intermediates (stateBase, edges, final cut — the
-    // cache-leak class the round-5 ADVICE flagged on IVF-PQ). What remains
-    // cached is exactly one O(|V|) block backing the returned frame.
-    val result = state.select(col("node"),
-      (col("r_mc").cast("double") / Unit.toDouble).as("rank"))
-      .localCheckpoint(true)
-    prevCut.foreach(graft.Checkpoints.release)
-    Seq(stateBase, eP).foreach(_.unpersist(false))
-    (result, rounds)
   }
 
   /** Spark's `round(double)` (HALF_UP via the canonical
@@ -343,8 +343,8 @@ object PageRank {
     * hash-partitioned by `node`; `eP` = (src, dst, w) hash-partitioned by
     * `src`; both pinned to the session shuffle-partition count (explicit
     * count ⇒ AQE never coalesces a REPARTITION_BY_NUM exchange) so the two
-    * per-round joins are exchange-free. Both frames are persisted and
-    * materialized — caller must unpersist them. Also returns |V|. */
+    * per-round joins are exchange-free. Both frames are cached and
+    * materialized, and belong to the caller's scope. Also returns |V|. */
   private[graft] def prepare(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): (DataFrame, DataFrame, Long) = {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -358,13 +358,13 @@ object PageRank {
     // pays only this one extra upfront exchange, which the iteration
     // amortizes. (Under run() the collapse is the small-path PROBE and its
     // cache is handed to prepareFromPairs directly.)
-    val pairs = e0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-    pairs.persist()
-    pairs.count()
-    val out = prepareFromPairs(pairs,
-      edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    pairs.unpersist(false)
-    out
+    scoped {
+      val pairs = cache(
+        e0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
+      pairs.count()
+      prepareFromPairs(pairs,
+        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    }
   }
 
   /** The node-co-partitioned layout from an already-collapsed (and
@@ -447,9 +447,9 @@ object PageRank {
     * reports the frame's real hash partitioning to downstream joins (which
     * a localCheckpoint under AQE would lose — see class doc). */
   private[graft] def materialize(df: DataFrame): DataFrame = {
-    df.persist()
-    df.count()
-    df
+    val c = cache(df)
+    c.count()
+    c
   }
 
   /** Truncate the lineage of an iterated frame without losing its hash
@@ -471,6 +471,6 @@ object PageRank {
     val key = "spark.sql.adaptive.enabled"
     val prev = conf.get(key)
     conf.set(key, "false")
-    try df.localCheckpoint(true) finally conf.set(key, prev)
+    try pin(df) finally conf.set(key, prev)
   }
 }

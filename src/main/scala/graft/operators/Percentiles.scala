@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import graft.Checkpoints.{cache, scoped}
 
 /** Exact per-group interpolated percentiles (percentile_cont semantics) as
   * distributed two-pass order statistics.
@@ -168,11 +168,11 @@ object Percentiles {
               math.min(spark.sparkContext.defaultParallelism,
                 spark.sessionState.conf.numShufflePartitions),
               graft.GraftSession.frameSizedPartitions(vals))
-    val sorted = vals
-      .repartitionByRange(p, col("__g"), col("__v"))
-      .sortWithinPartitions("__g", "__v")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    // leaving the scope frees `sorted`; the result is a local relation
+    scoped {
+      val sorted = cache(vals
+        .repartitionByRange(p, col("__g"), col("__v"))
+        .sortWithinPartitions("__g", "__v"))
       // one RDD handle for both scans: identical partition ids by
       // construction. Row-based (not a typed Dataset) so the group key keeps
       // whatever external type its DataType maps to; keys are compared and
@@ -200,67 +200,69 @@ object Percentiles {
           if (started) out += ((pid, cur, cnt))
           out.iterator
         }.collect()
-      if (runs.isEmpty) return empty
+      if (runs.isEmpty) empty
+      else {
 
-      // prefix-sum to per-(partition, group) global rank offsets + totals
-      val totals = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
-      val offsets = runs.map { case (pid, g, cnt) =>
-        val off = totals.getOrElse(g, 0L)
-        totals(g) = off + cnt
-        (pid, g) -> off
-      }.toMap
-      if (totals.size > maxGroups) {
-        throw new IllegalArgumentException(
-          s"Percentiles.exactByGroup: ${totals.size} groups exceeds " +
-          s"maxGroups=$maxGroups — driver rank metadata would not be " +
-          "metadata-scale. The many-small-groups regime belongs on " +
-          "Percentiles.ranked/medianAgg (one distributed window pass, " +
-          "no driver state); raise maxGroups only if the driver heap is " +
-          "sized for it.")
-      }
+        // prefix-sum to per-(partition, group) global rank offsets + totals
+        val totals = scala.collection.mutable.LinkedHashMap.empty[Any, Long]
+        val offsets = runs.map { case (pid, g, cnt) =>
+          val off = totals.getOrElse(g, 0L)
+          totals(g) = off + cnt
+          (pid, g) -> off
+        }.toMap
+        if (totals.size > maxGroups) {
+          throw new IllegalArgumentException(
+            s"Percentiles.exactByGroup: ${totals.size} groups exceeds " +
+            s"maxGroups=$maxGroups — driver rank metadata would not be " +
+            "metadata-scale. The many-small-groups regime belongs on " +
+            "Percentiles.ranked/medianAgg (one distributed window pass, " +
+            "no driver state); raise maxGroups only if the driver heap is " +
+            "sized for it.")
+        }
 
-      // target ranks per group: floor/ceil of (n−1)·q for every q
-      val targets: Map[Any, Set[Long]] = totals.map { case (g, n) =>
-        g -> qs.flatMap { q =>
-          val pos = (n - 1) * q
-          Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
-        }.toSet
-      }.toMap
-      val bOff = spark.sparkContext.broadcast(offsets)
-      val bTgt = spark.sparkContext.broadcast(targets)
+        // target ranks per group: floor/ceil of (n−1)·q for every q
+        val targets: Map[Any, Set[Long]] = totals.map { case (g, n) =>
+          g -> qs.flatMap { q =>
+            val pos = (n - 1) * q
+            Seq(math.floor(pos).toLong, math.ceil(pos).toLong)
+          }.toSet
+        }.toMap
+        val bOff = spark.sparkContext.broadcast(offsets)
+        val bTgt = spark.sparkContext.broadcast(targets)
 
-      // pass 2: emit exactly the target-rank rows
-      val hits: Array[(Any, Long, Double)] =
-        rdd.mapPartitionsWithIndex { (pid, it) =>
-          val off = bOff.value
-          val tgt = bTgt.value
-          var cur: Any = null
-          var started = false
-          var rank = 0L
-          it.flatMap { row =>
-            val g = canonKey(row.get(0))
-            val v = row.getDouble(1)
-            if (!started || !eq(g, cur)) {
-              cur = g; started = true; rank = off((pid, g))
+        // pass 2: emit exactly the target-rank rows
+        val hits: Array[(Any, Long, Double)] =
+          rdd.mapPartitionsWithIndex { (pid, it) =>
+            val off = bOff.value
+            val tgt = bTgt.value
+            var cur: Any = null
+            var started = false
+            var rank = 0L
+            it.flatMap { row =>
+              val g = canonKey(row.get(0))
+              val v = row.getDouble(1)
+              if (!started || !eq(g, cur)) {
+                cur = g; started = true; rank = off((pid, g))
+              }
+              val r = rank
+              rank += 1
+              if (tgt(g).contains(r)) Some((g, r, v)) else None
             }
-            val r = rank
-            rank += 1
-            if (tgt(g).contains(r)) Some((g, r, v)) else None
-          }
-        }.collect()
+          }.collect()
 
-      val byGroup: Map[Any, Map[Long, Double]] =
-        hits.groupBy(_._1).map { case (g, a) =>
-          g -> a.map(h => h._2 -> h._3).toMap
+        val byGroup: Map[Any, Map[Long, Double]] =
+          hits.groupBy(_._1).map { case (g, a) =>
+            g -> a.map(h => h._2 -> h._3).toMap
+          }
+        val rows = new java.util.ArrayList[Row]()
+        totals.foreach { case (g, n) =>
+          val at = byGroup(g)
+          qs.foreach { q =>
+            rows.add(Row(decanonKey(g), q, interpolate(n, q, at.apply)))
+          }
         }
-      val rows = new java.util.ArrayList[Row]()
-      totals.foreach { case (g, n) =>
-        val at = byGroup(g)
-        qs.foreach { q =>
-          rows.add(Row(decanonKey(g), q, interpolate(n, q, at.apply)))
-        }
+        spark.createDataFrame(rows, schema)
       }
-      spark.createDataFrame(rows, schema)
-    } finally sorted.unpersist(blocking = false)
+    }
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{cache, scoped}
 
 /** Product quantization (PQ) for approximate nearest neighbor — the
   * memory-compression scale path, complementing [[Ivf]] (cell pruning) and the
@@ -40,13 +41,14 @@ object Pq {
     * Input: (vec_id, embedding array<float>) with dim % m == 0.
     */
   def train(vecs: DataFrame, dim: Int, m: Int = 8, k: Int = 16,
-      seed: Long = 42L, sampleFraction: Double = 1.0): Codebooks = {
+      seed: Long = 42L, sampleFraction: Double = 1.0): Codebooks = scoped {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    // cache only a sample WE created — never (un)persist the caller's frame
+    // cache only a sample WE created — never (un)persist the caller's frame;
+    // leaving the scope frees it
     val ownSample = sampleFraction < 1.0
     val sample =
-      if (ownSample) vecs.sample(withReplacement = false, sampleFraction, seed).cache()
+      if (ownSample) cache(vecs.sample(withReplacement = false, sampleFraction, seed))
       else vecs
     if (ownSample) sample.count() // materialize BEFORE the concurrent fits
     // The m subspace fits are independent models over the same (cached)
@@ -72,7 +74,6 @@ object Pq {
         }}.toSeq),
         Duration.Inf)
     } finally pool.shutdown()
-    if (ownSample) sample.unpersist()
     Codebooks(m, k, subDim, cents)
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, CountVectorizer
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.{cache, pin, scoped}
 
 /** Production-scale near-dup detection via MLlib LSH — the `approxSimilarityJoin`
   * path that complements the oracle-exact sketch queries in
@@ -151,12 +152,7 @@ object ScalableDedup {
         log.info(s"semantic-dedup [hierarchical-imi]: n=$n >= " +
           s"$hierarchicalMin, cells=${model.nCells} (${model.k1}x${model.k2} " +
           s"half-space codebooks, target occupancy ~64), nProbe=$nProbe")
-        val withProbes = vecs
-          .select(col("vec_id"), col("embedding"),
-            Imi.probesUdf(model, nProbe)(col("embedding")).as("probes"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try imiPairs(withProbes, maxSqDistance).localCheckpoint(true)
-        finally { withProbes.unpersist(blocking = false); () }
+        probedPairs(vecs, model, nProbe, maxSqDistance)
       }
     }
   }
@@ -164,13 +160,12 @@ object ScalableDedup {
   /** The r15 flat-IVF route (explicit or small-corpus). */
   private def flatPairs(vecs: DataFrame, dim: Int, lists: Int, nProbe: Int,
       m: Int, k: Int, maxSqDistance: Double): DataFrame = {
-    val idx = IvfPq.build(vecs, dim, lists, m, k)
     // materialize the (bounded: pairs within threshold) result so the
-    // index cache can be released before returning
-    val pairs = ivfPqCandidatePairs(vecs, idx, nProbe, maxSqDistance)
-      .localCheckpoint(true)
-    idx.unpersist()
-    pairs
+    // index cache can be released (on leaving the scope) before returning
+    scoped {
+      val idx = IvfPq.build(vecs, dim, lists, m, k)
+      pin(ivfPqCandidatePairs(vecs, idx, nProbe, maxSqDistance))
+    }
   }
 
   /** Candidate pairs from a staged (vec_id, embedding, probes) frame:
@@ -282,13 +277,18 @@ object ScalableDedup {
   def semanticNearDupsFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, maxSqDistance: Double, nProbe: Int = 2): DataFrame = {
     val model = Imi.readModel(spark, s"$path/imi_model")
-    val vecs = spark.read.parquet(s"$path/vectors")
-    val withProbes = vecs
+    probedPairs(spark.read.parquet(s"$path/vectors"), model, nProbe,
+      maxSqDistance)
+  }
+
+  /** [[imiPairs]] over `vecs` staged with their probe lists, materialized;
+    * the staged frame is freed on leaving the scope. */
+  private def probedPairs(vecs: DataFrame, model: Imi.Model, nProbe: Int,
+      maxSqDistance: Double): DataFrame = scoped {
+    val withProbes = cache(vecs
       .select(col("vec_id"), col("embedding"),
-        Imi.probesUdf(model, nProbe)(col("embedding")).as("probes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try imiPairs(withProbes, maxSqDistance).localCheckpoint(true)
-    finally { withProbes.unpersist(blocking = false); () }
+        Imi.probesUdf(model, nProbe)(col("embedding")).as("probes")))
+    pin(imiPairs(withProbes, maxSqDistance))
   }
 
   /** (vec_id, embedding, cell): cell = the vector's IMI assignment (probe

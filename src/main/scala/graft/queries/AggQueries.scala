@@ -3,6 +3,7 @@ package graft.queries
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Checkpoints.pin
 
 /** Aggregation operators (SURVEY §2.4).
   *
@@ -436,10 +437,9 @@ object AggQueries {
     QueryDef(
       "a12_having_global",
       (s, dir) => {
-        val totals = Tables.orders(s, dir)
+        val totals = pin(Tables.orders(s, dir)
           .groupBy("o_custkey")
-          .agg(Exact.dsum(col("o_totalprice")).as("total"))
-          .localCheckpoint()
+          .agg(Exact.dsum(col("o_totalprice")).as("total")))
         // threshold multiplied ONCE on the 1-row aggregate: the filter
         // lands in the (interpreted, non-codegen) BNLJ join condition, so a
         // per-row `mx * 0.5` pays an interpreted decimal multiply +

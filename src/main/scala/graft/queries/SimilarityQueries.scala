@@ -4,6 +4,7 @@ import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.Checkpoints.{pin, scoped}
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, 64-d):
   * brute-force cosine top-k (the correctness baseline) and a random-hyperplane
@@ -293,17 +294,15 @@ object SimilarityQueries {
       (s, dir) => {
         val vecs = graft.sources.Tables.embeddings(s, dir)
           .select("vec_id", "embedding")
-        val idx = graft.operators.IvfPq.build(vecs, dim = 64)
-        // One-shot query: pin the tiny (queries × k rows) result eagerly,
-        // then free the cached code table build() left in executor storage
-        // (round-5 ADVICE). localCheckpoint blocks are ContextCleaner-managed
-        // — unlike a cache, they vanish when the frame is GC'd.
-        val res = graft.operators.IvfPq.search(idx,
-            vecs.filter(col("vec_id") < 20), kNN = 5, nProbe = 4)
-          .orderBy("q_id", "rank")
-          .localCheckpoint(true)
-        idx.unpersist()
-        res
+        // One-shot query: pin the tiny (queries × k rows) result eagerly;
+        // leaving the scope then frees the cached code table build() left in
+        // executor storage (round-5 ADVICE)
+        scoped {
+          val idx = graft.operators.IvfPq.build(vecs, dim = 64)
+          pin(graft.operators.IvfPq.search(idx,
+              vecs.filter(col("vec_id") < 20), kNN = 5, nProbe = 4)
+            .orderBy("q_id", "rank"))
+        }
       },
       None),
 
@@ -339,14 +338,13 @@ object SimilarityQueries {
       (s, dir) => {
         val vecs = graft.sources.Tables.embeddings(s, dir)
           .select("vec_id", "embedding")
-        val idx = graft.operators.IvfPq.build(vecs, dim = 64, nLists = 16)
-        val res = graft.operators.IvfPq.search(idx,
-            vecs.filter(col("vec_id") < QN), kNN = 10, nProbe = 16,
-            shortlist = Int.MaxValue)
-          .orderBy("q_id", "rank")
-          .localCheckpoint(true) // same pin-then-free as s_ivfpq_knn
-        idx.unpersist()
-        res
+        scoped { // same pin-then-free as s_ivfpq_knn
+          val idx = graft.operators.IvfPq.build(vecs, dim = 64, nLists = 16)
+          pin(graft.operators.IvfPq.search(idx,
+              vecs.filter(col("vec_id") < QN), kNN = 10, nProbe = 16,
+              shortlist = Int.MaxValue)
+            .orderBy("q_id", "rank"))
+        }
       },
       Some(sqlBruteL2)),
 
@@ -466,12 +464,12 @@ object SimilarityQueries {
         val vecs = graft.sources.Tables.embeddings(s, dir)
           .select("vec_id", "embedding")
         val queries = vecs.filter(col("vec_id") < 20)
-        val idx = graft.operators.IvfPq.build(vecs, dim = 64)
-        val ann = graft.operators.IvfPq.search(idx, queries, kNN = 5,
-            nProbe = 4)
-          .select("q_id", "vec_id")
-          .localCheckpoint(true) // pin-then-free, as s_ivfpq_knn
-        idx.unpersist()
+        val ann = scoped { // pin-then-free, as s_ivfpq_knn
+          val idx = graft.operators.IvfPq.build(vecs, dim = 64)
+          pin(graft.operators.IvfPq.search(idx, queries,
+              kNN = 5, nProbe = 4)
+            .select("q_id", "vec_id"))
+        }
         val brute = graft.operators.Ivf.bruteForce(vecs, queries, k = 5)
           .select("q_id", "vec_id")
         val hits = ann.join(brute, Seq("q_id", "vec_id"), "left_semi")

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.Checkpoints.{pin, scoped}
 
 /** Physical table layout for 100 TB operation (SURVEY §4): partitioned +
   * bucketed Parquet tables.
@@ -165,7 +166,7 @@ object Lake {
     */
   private def upsertPruned(spark: SparkSession, path: String,
       updates: DataFrame, keys: Seq[String], p: String,
-      where: Option[Column]): Unit = {
+      where: Option[Column]): Unit = scoped {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     where.foreach { w =>
@@ -186,8 +187,9 @@ object Lake {
     require(visible.forall(s => s.isDirectory && s.getPath.getName.startsWith(s"$p=")),
       s"upsertByKey: $path is not hive-partitioned on '$p'")
     // materialize once: the updates lineage is otherwise re-executed for the
-    // distinct() below plus the merge write
-    val u = updates.localCheckpoint(true)
+    // distinct() below plus the merge write; freed once the staging write is
+    // done and the lineage is dead
+    val u = pin(updates)
     val vals = u.select(p).distinct().collect().map(_.get(0))
     require(!vals.contains(null),
       "upsertByKey: NULL partition values are not supported on the pruned path")
@@ -255,7 +257,6 @@ object Lake {
           .unionByName(u)
       }
     stageAndSwapPartitions(spark, rootP, p, dirNames, merged)
-    graft.Checkpoints.release(u) // staging write done — the lineage is dead
   }
 
   /** Batch delete-by-key (the GDPR / right-to-be-forgotten path): rows whose
@@ -305,7 +306,7 @@ object Lake {
   }
 
   private def deletePruned(spark: SparkSession, path: String,
-      deletes: DataFrame, keys: Seq[String], p: String): Unit = {
+      deletes: DataFrame, keys: Seq[String], p: String): Unit = scoped {
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.StructType
@@ -317,7 +318,7 @@ object Lake {
     }
     require(visible.forall(s => s.isDirectory && s.getPath.getName.startsWith(s"$p=")),
       s"deleteByKey: $path is not hive-partitioned on '$p'")
-    val del = deletes.localCheckpoint(true)
+    val del = pin(deletes)
     val vals = del.select(p).distinct().collect().map(_.get(0))
     val dirNames = vals.map(v =>
       s"$p=${ExternalCatalogUtils.escapePathName(v.toString)}").toSeq
@@ -350,7 +351,6 @@ object Lake {
       stageAndSwapPartitions(spark, rootP, p, existingDirs, remaining,
         emptyMeansDrop = true)
     }
-    graft.Checkpoints.release(del)
   }
 
   /** Stage `newData` (which must cover exactly the partition values named by
@@ -598,17 +598,17 @@ object Lake {
     * correctly). The GDPR/retention companion to [[scdMerge]]; committed
     * via [[safeReplace]]. Returns (rowsBefore, rowsAfter).
     */
-  def scdVacuum(spark: SparkSession, path: String, horizon: Long): (Long, Long) = {
+  def scdVacuum(spark: SparkSession, path: String,
+      horizon: Long): (Long, Long) = scoped {
     import org.apache.spark.sql.functions.col
     // one read: history tables can be large and count/filter/rewrite would
     // otherwise scan the files three times
-    val table = spark.read.parquet(path).localCheckpoint(true)
+    val table = pin(spark.read.parquet(path))
     val before = table.count()
     val kept = table.filter(col("is_current") ||
       col("effective_to").isNull || col("effective_to") > horizon)
     val after = kept.count()
     if (after < before) safeReplace(spark, path, kept)
-    graft.Checkpoints.release(table)
     (before, after)
   }
 
@@ -631,10 +631,11 @@ object Lake {
     val before = parquetFiles
     // one read: count() then the safeReplace rewrite would otherwise scan
     // the directory twice (same fix as scdVacuum above)
-    val df = spark.read.parquet(path).localCheckpoint(true)
-    val nFiles = math.max(1, math.ceil(df.count().toDouble / rowsPerFile).toInt)
-    safeReplace(spark, path, df.repartition(nFiles))
-    graft.Checkpoints.release(df)
+    scoped {
+      val df = pin(spark.read.parquet(path))
+      val nFiles = math.max(1, math.ceil(df.count().toDouble / rowsPerFile).toInt)
+      safeReplace(spark, path, df.repartition(nFiles))
+    }
     (before, parquetFiles)
   }
 

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.ThetaSketch
+import graft.Checkpoints.{pin, scoped}
 
 /** **Incremental materialized-aggregate maintenance** — keep a GROUP BY
   * result current over an append-only table by folding in ONLY the rows
@@ -816,9 +817,9 @@ object MaterializedAgg {
           }
         del.select(flipped: _*)
       }
-      val merged = mergeStates(readState(spark, viewPath, cur), negated, spec)
-        .localCheckpoint(true) // validate ONCE, then write the same rows
-      try {
+      scoped {
+        // validate ONCE, then write the same rows
+        val merged = pin(mergeStates(readState(spark, viewPath, cur), negated, spec))
         val negCols = col("__cnt") < 0 ||
           spec.sumCols.map(c => col(s"__cnt_$c") < 0)
             .foldLeft(lit(false))(_ || _)
@@ -842,7 +843,7 @@ object MaterializedAgg {
         publishCommit(fs, viewPath, newId)
         committed = true
         newId
-      } finally graft.Checkpoints.release(merged)
+      }
     } catch {
       case t: Throwable =>
         if (!committed)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 import graft.quality.Checks
+import graft.Checkpoints.{pin, scoped}
 
 /** The composed training-data ingest pipeline with a DEAD-LETTER channel:
   *
@@ -71,9 +72,9 @@ object IngestFlow {
           batchId: Long) =>
         // one materialization feeds both sinks — without it the quarantine
         // write and the corpus ingest would each re-run the micro-batch's
-        // decode+tag lineage
-        val batch = b.toDF().localCheckpoint(true)
-        try {
+        // decode+tag lineage; freed when the batch ends
+        scoped {
+          val batch = pin(b.toDF())
           val late = batch.filter(col("late")).drop("late")
           // skip the write job entirely on late-free batches (the common
           // steady state) — it would also leave a _SUCCESS-only directory
@@ -84,7 +85,7 @@ object IngestFlow {
             batch.filter(!col("late")), rules)
           StreamingDedup.ingestBatch(
             fresh.select(payloadCols.map(col): _*), storePath, corpusPath)
-        } finally graft.Checkpoints.release(batch)
+        }
       }
       .start()
   }

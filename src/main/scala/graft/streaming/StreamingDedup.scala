@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Checkpoints.{pin, scoped}
 
 /** Streaming corpus dedup with a PERSISTENT signature store — the ingestion
   * pattern for a training-data pipeline: documents arrive as a stream, exact
@@ -48,7 +49,8 @@ object StreamingDedup {
     * can drop by `h`. The opposite order would leave the hash in the store
     * with no corpus row, so the replay anti-joins the document away and it is
     * silently lost forever. Duplicates are recoverable; loss is not. */
-  def ingestBatch(batch: DataFrame, storePath: String, corpusPath: String): Unit = {
+  def ingestBatch(batch: DataFrame, storePath: String,
+      corpusPath: String): Unit = scoped {
     val spark = batch.sparkSession
     val hashed = batch
       .withColumn("h", md5(col("text").cast("binary")))
@@ -59,13 +61,12 @@ object StreamingDedup {
     }
     // eager localCheckpoint: the store append below would otherwise mutate
     // what the corpus append's lineage re-reads (lazy self-poisoning) — the
-    // materialized rows must be fixed before either write.
-    val fresh = freshLazy.localCheckpoint(true)
+    // materialized rows must be fixed before either write. Freed per batch:
+    // on a long-lived stream, waiting for the ContextCleaner accumulates one
+    // checkpoint's blocks per micro-batch.
+    val fresh = pin(freshLazy)
     fresh.drop("h").write.mode("append").parquet(corpusPath)
     fresh.select("h").write.mode("append").parquet(storePath)
-    // release per batch: on a long-lived stream, waiting for the
-    // ContextCleaner accumulates one checkpoint's blocks per micro-batch
-    graft.Checkpoints.release(fresh)
   }
 
   /** None only when the store genuinely doesn't exist yet (first batch).
@@ -85,24 +86,21 @@ object StreamingDedup {
     * rewrites both corpus and store consistently. Run it like any compaction
     * — periodically, or after a recovery. Returns rows dropped. */
   def compactCorpus(spark: SparkSession, storePath: String,
-      corpusPath: String): Long = {
+      corpusPath: String): Long = scoped {
     val corpus = spark.read.parquet(corpusPath)
     val hashed = corpus.withColumn("h", md5(col("text").cast("binary")))
     val before = hashed.count()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("h").orderBy("doc_id")
-    val keep = hashed
+    // materialized once so both replacements write the same snapshot
+    val keep = pin(hashed
       .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
-      // materialized once so both replacements write the same snapshot
-      .localCheckpoint(true)
+      .filter(col("__rn") === 1).drop("__rn"))
     // crash-safe swaps (Lake.safeReplace): a crash between the two leaves a
     // compacted corpus with the uncompacted store — harmless, the distinct
     // hash SET is identical either way.
     graft.sources.Lake.safeReplace(spark, corpusPath, keep.drop("h"))
     graft.sources.Lake.safeReplace(spark, storePath, keep.select("h").distinct())
-    val dropped = before - keep.count()
-    graft.Checkpoints.release(keep)
-    dropped
+    before - keep.count()
   }
 }

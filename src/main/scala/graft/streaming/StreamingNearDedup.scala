@@ -4,6 +4,7 @@ import graft.operators.MinHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.Checkpoints.{pin, scoped}
 
 /** Streaming NEAR-duplicate ingest: [[StreamingDedup]]'s exact-hash gate
   * composed with the MinHash signature path — documents arrive as a stream
@@ -67,7 +68,10 @@ object StreamingNearDedup {
 
   /** One batch; also usable directly for batch backfills (same store). */
   def ingestBatch(batch: DataFrame, storePath: String, corpusPath: String,
-      simThreshold: Double = 0.5): Unit = {
+      simThreshold: Double = 0.5): Unit = scoped {
+    // the four checkpoints below are freed per batch, also when a write
+    // fails: waiting for the ContextCleaner would accumulate them until a
+    // driver GC happens to run (round-7 review wave 3)
     val spark = batch.sparkSession
     val exactDeduped = batch
       .withColumn("__h", md5(col("text").cast("binary")))
@@ -76,7 +80,7 @@ object StreamingNearDedup {
     val sigs = MinHash.signatures(exactDeduped) // (doc_id, sig); absent if unshingleable
     // materialized once: three consumers below (store check, in-batch pairs,
     // store append) would otherwise each re-run the shingling + signature agg
-    val banded = MinHash.bands(sigs).localCheckpoint(true)
+    val banded = pin(MinHash.bands(sigs))
 
     val vsStore = knownBands(spark, storePath) match {
       case Some(store) =>
@@ -113,26 +117,19 @@ object StreamingNearDedup {
 
     // materialized once: referenced by both outputs below, and its lineage
     // (two joins against the store) must not re-execute per consumer
-    val dropIds = vsStore.unionByName(inBatch).distinct().localCheckpoint(true)
+    val dropIds = pin(vsStore.unionByName(inBatch).distinct())
     // BOTH outputs are materialized eagerly BEFORE either write: the store
     // append must not re-read the store it is appending to (dropIds' lineage
     // scans it), and the corpus append's lineage must not see the new store
     // rows (same reasoning as StreamingDedup). The band rows are reused from
     // `banded` — recomputing signatures for the survivors would double the
     // per-batch shingling cost.
-    val fresh = exactDeduped
-      .join(dropIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    val freshBands = banded
-      .join(dropIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val fresh = pin(exactDeduped.join(dropIds, Seq("doc_id"), "left_anti"))
+    val freshBands = pin(banded.join(dropIds, Seq("doc_id"), "left_anti"))
 
     fresh.write.mode("append").parquet(corpusPath)
     freshBands.write.mode("append").parquet(storePath)
     ensureVersionMarker(spark, storePath)
-    // release per batch: four checkpoints per micro-batch would otherwise
-    // accumulate until a driver GC happens to run (round-7 review wave 3)
-    Seq(banded, dropIds, fresh, freshBands).foreach(graft.Checkpoints.release)
   }
 
   /** Underscore-prefixed so parquet readers skip it (like `_SUCCESS`). */

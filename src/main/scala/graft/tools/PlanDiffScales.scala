@@ -40,8 +40,7 @@ object PlanDiffScales {
     val dirB = args(2)
     val names =
       if (args.length > 3) args.drop(3).toSeq else Registry.all.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.min(32).toString).toInt
+    val cpus = GraftSession.cpus
     val runsPerCell = sys.env.getOrElse("SPARK_GRAFT_PLANDIFF_RUNS", "2").toInt
     val spark = GraftSession.builder(cpus, dirB).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

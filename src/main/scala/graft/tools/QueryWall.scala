@@ -19,8 +19,7 @@ object QueryWall {
     val dir = args(0)
     val qname = args(1)
     val runs = if (args.length > 2) args(2).toInt else 5
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = GraftSession.builder(cpus, dir).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, dir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val q = Registry.all.find(_.name == qname)
       .getOrElse(sys.error(s"no registry query named $qname"))

@@ -3,6 +3,7 @@ package graft.tools
 import graft.GraftSession
 import graft.bdb._
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.cache
 
 /** Reference-scale throughput demo: generates a synthetic season at the
   * reference's data scale (~4.9 M pre-throw player-frames; BASELINE.md row 1)
@@ -26,20 +27,20 @@ object ScaleDemo {
     // 272 games × 52 plays × 14 players × ~30 frames ≈ 5.9M rows (reference:
     // 4.88M rows, 272 games, 14,108 plays)
     val tracking = timed("generate+materialize tracking") {
-      val t = Synth.tracking(spark, nGames = 272, playsPerGame = 52)
-        .repartition(32, col("game_id"), col("play_id")).cache()
+      val t = cache(Synth.tracking(spark, nGames = 272, playsPerGame = 52)
+        .repartition(32, col("game_id"), col("play_id")))
       println(s"[scale] rows: ${t.count()}")
       t
     }
-    val supp = Synth.supplementary(tracking).cache()
+    val supp = cache(Synth.supplementary(tracking))
     supp.count()
 
     val frames = timed("normalize + kinematics (full season)") {
-      val f = Kinematics.addDirectionChange(
+      val f = cache(Kinematics.addDirectionChange(
         Kinematics.addFrameIndex(
           Kinematics.addBallGeometry(
             Kinematics.addVelocity(
-              Normalize.notebookStyle(tracking))))).cache()
+              Normalize.notebookStyle(tracking))))))
       f.count()
       f
     }

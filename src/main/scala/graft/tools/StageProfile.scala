@@ -25,8 +25,7 @@ object StageProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val qname = if (args.length > 1) args(1) else "e_pagerank_types"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(32)
-    val spark = graft.GraftSession.builder(cpus, dir).getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.cpus, dir).getOrCreate()
     val q = graft.queries.Registry.all.find(_.name == qname)
       .getOrElse(sys.error(s"no registry query named $qname"))
     // SPARK_GRAFT_SWEEP_ACTION=noop: consume every output column (the r15

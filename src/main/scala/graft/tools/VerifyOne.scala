@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{GraftSession, SparkEntry}
+import graft.{GraftSession, SparkEntry, Verify}
 import java.nio.file.{Files, Paths}
 
 /** Targeted re-verification helper: dump ONE OR MORE registry queries (and
@@ -19,18 +19,19 @@ object VerifyOne {
       System.err.println("usage: graft.tools.VerifyOne <sfDir> <outDir> [query ...]")
       sys.exit(2)
     }
-    val spark = GraftSession.builder(16, args(0)).getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cpus, args(0)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(args(1)).mkdirs()
-    args.drop(2).foreach { name =>
+    val failed = args.drop(2).count { name =>
       require(SparkEntry.queries.contains(name), s"unknown query $name")
-      SparkEntry.queries(name)(spark, args(0)).coalesce(1)
-        .write.mode("overwrite").parquet(s"${args(1)}/$name")
+      try { Verify.dump(spark, args(0), args(1), name, SparkEntry.queries(name)); false }
+      catch { case e: Throwable => System.err.println(Verify.failureLine(name, e)); true }
     }
     Files.writeString(Paths.get(s"${args(1)}/oracle_sql.json"),
       SparkEntry.oracleSql.map { case (k, v) =>
         s"${graft.JsonText.quote(k)}: ${graft.JsonText.quote(v)}"
       }.mkString("{", ",", "}"))
     spark.stop()
+    if (failed > 0) sys.exit(1)
   }
 }

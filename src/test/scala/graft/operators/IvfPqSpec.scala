@@ -350,7 +350,7 @@ class IvfPqSpec extends SparkSpec {
       .select("q_id", "rank", "vec_id").collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(got === bf, "post-migration append must serve exact results")
-    base.unpersist()
+    graft.Checkpoints.release(base.encoded)
   }
 
   test("plan: corpus codes reached by an equi-join on cell, never a cross join") {

@@ -262,6 +262,6 @@ class ScalableDedupSpec extends SparkSpec {
     val onCorpus = bad.filter(_.output.exists(_.name == "dist"))
     assert(onCorpus.isEmpty,
       s"candidate scan must be an equi-join on cell, found: ${onCorpus.map(_.nodeName)}")
-    idx.unpersist()
+    graft.Checkpoints.release(idx.encoded)
   }
 }

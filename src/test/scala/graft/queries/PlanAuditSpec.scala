@@ -270,7 +270,7 @@ class PlanAuditSpec extends SparkSpec {
       val readFiles = codeScans.map(_.metrics("numFiles").value).max
       assert(readFiles < totalFiles,
         s"expected directory pruning: read $readFiles of $totalFiles files")
-    } finally idx.unpersist()
+    } finally graft.Checkpoints.release(idx.encoded)
   }
 
   test("q1_pricing_summary: scan prunes to the 6 referenced columns") {
