@@ -33,10 +33,10 @@ Classes, checked in order per query:
                 on an idle box; the single-query calibration probe
                 amortizes per-thread overhead and cannot normalize it).
                 Since r18 both sidecars carry a measured `burst_factor`
-                (BurstProbe) and cpu ratios are pre-divided by the factor
+                (Bench.burstFactor) and cpu ratios are pre-divided by the factor
                 ratio, so a pure VM-class swap self-normalizes; residual
                 cpu-only rows are within-class burst spread.
-                Adjudicate with StageProfile at SPARK_GRAFT_CPUS=8 vs 32:
+                Adjudicate with tools.Trace at SPARK_GRAFT_CPUS=8 vs 32:
                 if cpu collapses with thread count, it is the box, not the
                 code.
   box-noise     RAW cpu or wall crossed its band but the NORMALIZED value
@@ -88,7 +88,7 @@ def main():
         for q in qs) if r is not None]
     cal = statistics.median(cal_ratios) if cal_ratios else 1.0
     # box-CLASS cpu factor (r17 verdict #4): each sidecar's burst-concurrency
-    # accounting factor (BurstProbe: N-wide allocation-heavy burst cpu over
+    # accounting factor (Bench.burstFactor: N-wide allocation-heavy burst cpu over
     # N x single-task cpu; honest accounting = 1.0). The calibration probe
     # tracks core SPEED but amortizes per-burst allocator contention, so a
     # VM-class swap moves cpu_s without moving cal_s (NOTES_r17 par3: fixed

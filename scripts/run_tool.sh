@@ -3,7 +3,7 @@
 # sbt-compiled classes - no sbt lock, so compiles/tests and long-running
 # sweeps can proceed concurrently. Mirrors build.sbt's forked-run JVM
 # options (JDK17 add-opens, UTC, no UI, SPARK_DRIVER_MEM heap).
-#   scripts/run_tool.sh graft.tools.StageProfile <sfDir> e_pagerank_types 3
+#   scripts/run_tool.sh graft.tools.Trace <sfDir> e_pagerank_types 3
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CP="$REPO/target/scala-2.13/classes:/opt/spark/jars/*"

@@ -39,7 +39,7 @@ object Bench {
   // the envelope are re-measured once (see the retry pass) — transients
   // heal, sustained load flags again.
 
-  /** The 12-query sf1 heavy tail: the scale-predictive section of the bench
+  /** The 13-query sf1 heavy tail: the scale-predictive section of the bench
     * (also the query set of the r13-r15 constrained-memory soak, NOTES_r14). */
   val Sf1Heavy: Seq[String] = Seq("e_pagerank_types", "t_bpe_train",
     "m_lstm_infer", "t_bigram_lm", "j_star_chain", "j_star_chain_bucketed",
@@ -53,6 +53,48 @@ object Bench {
       body
       (System.nanoTime() - t0) / 1e9
     }
+
+  /** The box's BURST-CONCURRENCY cpu-accounting factor: executor cpu of
+    * `cpus` concurrent allocation-heavy tasks over `cpus` × one such task's
+    * cpu. PER-TASK work is identical in both jobs, so honest accounting
+    * reads 1.0. NOTES_r17 §3 measured 1.5-3.2× on a 32-thread VM class: a
+    * FIXED 40-task plan burned that much more executor cpu at 32 concurrent
+    * threads than at 8, while the tight-loop calibration probe (no
+    * allocation) tracks only core speed. The inflation lives in
+    * allocator/memory contention inside short wide stage bursts, so the
+    * probe must ALLOCATE like a real task, not just spin; it is what
+    * inflated cpu_total_s across rounds while bytes stayed bit-flat. */
+  private def burstFactor(spark: org.apache.spark.sql.SparkSession,
+      meter: StageMeter): Double = {
+    val cpus = spark.sparkContext.defaultParallelism
+    // median-of-`runs` executor-cpu seconds of `parts` concurrent churn tasks
+    def cpuOf(parts: Int, runs: Int): Double = (1 to runs).map { _ =>
+      meter.measure(spark.sparkContext.parallelize(0 until parts, parts)
+        .map(p => churn(BurstItersPerTask, p.toLong)).count())._2.cpuS
+    }.sorted.apply(runs / 2)
+    cpuOf(1, 1) // untimed warm (C2)
+    cpuOf(cpus, 1)
+    val single = cpuOf(1, 3)
+    cpuOf(cpus, 3) / (cpus * single)
+  }
+
+  private val BurstItersPerTask = 2_000_000L
+
+  /** One burst task's work: byte-array + string churn per iteration, the
+    * allocation profile of an agg/codegen task. Returns a value so nothing
+    * folds away. */
+  private def churn(iters: Long, salt: Long): Long = {
+    var h = salt
+    var i = 0L
+    while (i < iters) {
+      val a = new Array[Byte](((i + salt) % 48 + 16).toInt)
+      a(0) = (i ^ h).toByte
+      h ^= java.util.Arrays.hashCode(a)
+      h += java.lang.Long.toString(h ^ i).length
+      i += 1
+    }
+    h
+  }
 
   // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
   // comma-decimal locale would make the one adjudication artifact invalid
@@ -134,90 +176,26 @@ object Bench {
       drift.foreach(p => System.err.println(s"[bench]   $p"))
     }
 
-    // Box-class instrument (r17 verdict #4): the burst-concurrency cpu
-    // accounting factor — executor-cpu of N concurrent allocation-heavy
-    // tasks over N × one task's cpu (honest accounting = 1.0; NOTES_r17 §3
-    // measured 1.5-3.2× on this VM class at 32 threads, which is what
-    // inflated cpu_total_s across rounds while bytes stayed bit-flat).
-    // Riding the line + sidecar lets bench_diff normalize cpu by the two
-    // runs' factor RATIO, so BASELINE.md's pinned cpu column gates again
-    // across VM classes. Measured before the run's own listener attaches
-    // and before any query, on the plateau-warm principle (its own warm
-    // jobs are untimed).
-    val burstFactor: Option[Double] =
-      try Some(graft.tools.BurstProbe.burstFactor(spark))
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] burst probe failed: $e"); None }
-
-    // Run-total shuffle-write bytes + executor CPU time (stage-completion
-    // listener). Events deliver async; totals are read after a
-    // stabilization poll at the end of the run.
+    // Every per-query cpu / shuffle figure below comes from this meter.
     // CPU time is the BOX-SPEED-INVARIANT adjudication number: wall time
     // moves with background load and per-box clock speed (the r9→r10
     // compare needed manual calibration-ratio reasoning to conclude
     // "flat"); task CPU nanoseconds move only when the plan does more work.
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong
+    val meter = StageMeter(spark)
+
+    // Box-class instrument (r17 verdict #4), measured before any query on
+    // the plateau-warm principle (its own warm jobs are untimed). Riding the
+    // line + sidecar lets bench_diff normalize cpu by the two runs' factor
+    // RATIO, so BASELINE.md's pinned cpu column gates again across VM
+    // classes.
+    val burstFactor: Option[Double] =
+      try Some(Bench.burstFactor(spark, meter))
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] burst probe failed: $e"); None }
+
     val perQueryShuffle = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val perQueryCpu = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          shuffleBytes.addAndGet(
-            st.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          cpuNanos.addAndGet(st.stageInfo.taskMetrics.executorCpuTime)
-          ()
-        }
-      })
-    /** (shuffle bytes, executor CPU seconds) accrued while running `body`,
-      * read after the async listener queue quiesces (values stable across
-      * two 50 ms polls, 1 s bound). Advisory trend data, never a gate — a
-      * lagging event costs accuracy, not correctness. CPU covers all 3
-      * timed runs; the detail file records it as-is (a per-run mean would
-      * suggest precision the async listener can't promise). */
-    def metricsDelta(body: => Unit): (Long, Double) = {
-      stableMetrics()
-      val b0 = shuffleBytes.get; val c0 = cpuNanos.get
-      body
-      stableMetrics()
-      (shuffleBytes.get - b0, (cpuNanos.get - c0) / 1e9)
-    }
-    def stableMetrics(): Unit = {
-      var prev = (shuffleBytes.get, cpuNanos.get)
-      var i = 0
-      while (i < 20) {
-        Thread.sleep(50)
-        val cur = (shuffleBytes.get, cpuNanos.get)
-        if (cur == prev) return
-        prev = cur; i += 1
-      }
-    }
-
-    /** Warm a query until its executor CPU hits the C2 plateau: two
-      * consecutive untimed runs whose cpu agrees within 10% (cap 8 runs).
-      * r14 finding (NOTES_r14, ANN jitter + StageProfile): lambda- and
-      * reader-heavy paths compile across their first 2-7 executions
-      * (ANN per-run cpu 0.66→0.14; bucketed-scan 3.7→0.95), so ANY timed
-      * window that starts before the plateau reports compilation, not the
-      * plan — the source of every phantom cpu "regression" rounds 12-14
-      * adjudicated. A warm run that throws stops the loop; the timed runs
-      * record the error as the measurement. */
     var plateauWarmRuns = 0 // emitted on the line so the close gate can verify the methodology ran
-    def warmToPlateau(run: () => Unit): Unit = {
-      var prev = -1.0
-      var i = 0
-      var stable = false
-      while (i < 8 && !stable) {
-        try {
-          val (_, c) = metricsDelta(run())
-          stable = prev >= 0 && math.abs(c - prev) <= 0.1 * math.max(prev, 1e-9)
-          prev = c
-        } catch { case _: Throwable => stable = true }
-        i += 1
-      }
-      plateauWarmRuns += i
-    }
 
     // Fixed CPU-bound probe: one whole-stage-codegen pass over an in-memory
     // range, one partition per thread — measures available compute, nothing
@@ -267,11 +245,6 @@ object Bench {
     }
     probeOnce() // untimed settle: absorb post-warmup GC before labeled probes
 
-    // 3 timed runs per query, preceded by ONE calibration probe labeling
-    // the query's window. A run that THROWS contributes no timing (an
-    // elapsed-until-exception number is not a measurement) — it lands in
-    // the machine-readable "errors" map instead of masquerading as a fast
-    // query.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def recordErr(name: String, e: Throwable): Unit = {
       System.err.println(s"[bench] $name: $e")
@@ -281,29 +254,39 @@ object Bench {
       errors.getOrElseUpdate(name, e.toString.takeWhile(_ != '\n').take(80))
     }
     val perQueryCal = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    type Runs[T] = Seq[(Option[T], StageMeter.Sample)]
+    // 3 timed runs, each measured on its own. A run that THROWS
+    // contributes no timing (an elapsed-until-exception number is not a
+    // measurement) — it lands in the machine-readable "errors" map instead
+    // of masquerading as a fast query.
+    def timed[T](name: String, run: () => T): Runs[T] = (1 to 3).map { _ =>
+      meter.measure(try Some(run()) catch { case e: Throwable => recordErr(name, e); None })
+    }
+    // A query's window: plateau warm, then ONE calibration probe labeling
+    // the window, then the timed runs.
+    def window[T](name: String)(run: () => T): Runs[T] = {
+      plateauWarmRuns += meter.warmToPlateau(() => run())
+      perQueryCal(name) = probeOnce()
+      timed(name, run)
+    }
+    def walls(runs: Runs[_]): Seq[Double] = runs.collect { case (Some(_), s) => s.wallS }
+    def median(t: Seq[Double]): Double = t(t.size / 2 min (t.size - 1))
+    // a bench-SF window's shuffle bytes and cpu over its 3 runs; returns the
+    // sorted walls
+    def record(name: String, runs: Runs[_]): Seq[Double] = {
+      perQueryShuffle(name) = runs.map(_._2.shuffleWriteBytes).sum
+      perQueryCpu(name) = runs.map(_._2.cpuS).sum
+      walls(runs).sorted
+    }
     val results = Registry.headline.map { q =>
       // Plateau-warm AT THE BENCH SF before the window (r14): the sf0.001
       // warm pass misses codepaths the bench-SF execution alone compiles
-      // (the bucketed one-file-per-bucket readers: StageProfile measured
-      // first-sf0.1-run cpu 3.7 s vs 0.95 s steady state), so without
-      // this, the timed window carries C2 compilation and cpu_s_3runs
-      // reads up to ~5x steady state on those queries. min-wall was
-      // already post-warm; this makes the CPU column steady-state too,
-      // which is the bench's stated intent.
-      warmToPlateau(() => scoped(q.run(spark, sfDir).count()))
-      perQueryCal(q.name) = probeOnce()
-      var times = List.empty[Double]
-      val (bytes, cpu) = metricsDelta {
-        (1 to 3).foreach { _ =>
-          val t0 = System.nanoTime()
-          try scoped {
-            q.run(spark, sfDir).count(); times ::= (System.nanoTime() - t0) / 1e9
-          } catch { case e: Throwable => recordErr(q.name, e) }
-        }
-      }
-      perQueryShuffle(q.name) = bytes
-      perQueryCpu(q.name) = cpu
-      q.name -> times.sorted
+      // (the bucketed one-file-per-bucket readers: first-sf0.1-run cpu
+      // 3.7 s vs 0.95 s steady state), so without this, the timed window
+      // carries C2 compilation and cpu_s_3runs reads up to ~5x steady state
+      // on those queries. min-wall was already post-warm; this makes the CPU
+      // column steady-state too, which is the bench's stated intent.
+      q.name -> record(q.name, window(q.name)(() => scoped(q.run(spark, sfDir).count())))
     }
 
     // ANN search benches: the index is a built artifact (its cost is KMeans
@@ -342,15 +325,7 @@ object Bench {
       val runs = Seq("s_ivfpq_search" -> (() => ivfpqSearch()),
         "s_ivfpq_disk" -> (() => ivfpqDisk()),
         "s_pq_search" -> (() => pqSearch()))
-      runs.map { case (name, run) =>
-        warmToPlateau(run)
-        perQueryCal(name) = probeOnce()
-        var ts = Seq.empty[Double]
-        val (bytes, cpu) = metricsDelta { ts = timeRuns(3)(run()) }
-        perQueryShuffle(name) = bytes
-        perQueryCpu(name) = cpu
-        name -> ts.sorted
-      }
+      runs.map { case (name, run) => name -> record(name, window(name)(run)) }
     } catch {
       case e: Throwable => recordErr("ann_search", e); Seq.empty
     } finally {
@@ -366,16 +341,10 @@ object Bench {
     val applyResults = try scoped {
       val docs = graft.sources.Tables.documents(spark, sfDir)
       val model = graft.operators.Bpe.train(docs, "text", 32)
-      def applyRun(): Unit =
+      Seq("t_bpe_apply" -> record("t_bpe_apply", window("t_bpe_apply") { () =>
         graft.operators.Bpe.tokenizeCompiled(docs, "text", model.merges)
           .selectExpr("sum(size(bpe_tokens)) AS n").collect()
-      applyRun() // warm
-      perQueryCal("t_bpe_apply") = probeOnce()
-      var ts = Seq.empty[Double]
-      val (bytes, cpu) = metricsDelta { ts = timeRuns(3)(applyRun()) }
-      perQueryShuffle("t_bpe_apply") = bytes
-      perQueryCpu("t_bpe_apply") = cpu
-      Seq("t_bpe_apply" -> ts.sorted)
+      }))
     } catch {
       case e: Throwable => recordErr("bpe_apply", e); Seq.empty
     }
@@ -388,8 +357,6 @@ object Bench {
     // map). Numbers land in BENCH_DETAIL's "sf1" section and as sf1_total
     // on the line. SPARK_GRAFT_SF1=0 skips (iteration-speed escape hatch).
     val sf1Heavy = Bench.Sf1Heavy
-    val sf1Min = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val sf1Med = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val sf1Shuffle = scala.collection.mutable.LinkedHashMap.empty[String, Long]
     val sf1Cpu = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     // r12 VERDICT #1: the 3-run cpu window hid a single 25× run. Each sf1
@@ -398,10 +365,7 @@ object Bench {
     // is attributable to the run (and the plan) it happened in, and
     // `sf1_unstable` on the adjudication line names any query whose
     // per-run cpu spread exceeds 3× (above a 2 s floor so toy-cost queries
-    // don't flag on listener noise). Caveat (r13 ADVICE): metricsDelta
-    // wraps each run, so a listener event landing after one run's quiesce
-    // window (2×50 ms polls, 1 s bound) is attributed to the NEXT run —
-    // per-run cpu/shuffle are advisory; section totals are unaffected.
+    // don't flag on run-to-run noise).
     val sf1Runs = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val sf1Walls = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Double]]
     val sf1Unstable = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -437,52 +401,32 @@ object Bench {
             // bucketed chain's first timed sf1 run still carried 7.2 cpu_s
             // of compilation vs 2.2 steady — exactly the >3x spread
             // sf1_unstable flags); warm to the C2 plateau instead
-            warmToPlateau(() => scoped(q.run(spark, sf1Dir).count()))
-            perQueryCal(s"sf1:$name") = probeOnce()
-            var times = List.empty[Double]
-            var runRecs = List.empty[String]
-            var runCpus = List.empty[Double]
-            var bytesTot = 0L
-            var cpuTot = 0.0
-            (1 to 3).foreach { _ =>
-              var wall = -1.0
-              var fp = "error"
-              val (bytes, cpu) = metricsDelta {
-                val t0 = System.nanoTime()
-                try {
-                  // mirror of Dataset.count(): the grouped frame is OURS, so
-                  // after collect() its finalized AQE plan is readable —
-                  // count() itself hides its queryExecution
-                  scoped {
-                    val counted = q.run(spark, sf1Dir).groupBy().count()
-                    counted.collect()
-                    wall = (System.nanoTime() - t0) / 1e9
-                    times ::= wall
-                    fp = graft.queries.PlanFingerprints.ofExecuted(counted).brief
-                  }
-                } catch { case e: Throwable => recordErr(s"sf1:$name", e) }
+            val runs = window(s"sf1:$name") { () =>
+              // mirror of Dataset.count(): the grouped frame is OURS, so
+              // after collect() its finalized AQE plan is readable —
+              // count() itself hides its queryExecution
+              scoped {
+                val counted = q.run(spark, sf1Dir).groupBy().count()
+                counted.collect()
+                graft.queries.PlanFingerprints.ofExecuted(counted).brief
               }
-              bytesTot += bytes
-              cpuTot += cpu
-              runCpus ::= cpu
-              runRecs ::= s"""{"wall":${r3(wall)},"cpu_s":${r3(cpu)},""" +
-                s""""shuffle_bytes":$bytes,"fp":"$fp"}"""
             }
-            sf1Runs(name) = runRecs.reverse.mkString("[", ",", "]")
-            if (runCpus.nonEmpty && runCpus.max > 3 * math.max(runCpus.min, 0.001) &&
-                runCpus.max - runCpus.min > 2.0)
-              sf1Unstable(name) = runCpus.reverse.map(r3).mkString("[", ",", "]")
-            sf1Shuffle(name) = bytesTot
-            sf1Cpu(name) = cpuTot
-            sf1Walls(name) = times.reverse
-            val sorted = times.sorted
-            if (sorted.nonEmpty) {
-              sf1Min(name) = sorted.head
-              sf1Med(name) = sorted(sorted.size / 2 min (sorted.size - 1))
-            }
+            sf1Runs(name) = runs.map { case (fp, s) =>
+              s"""{"wall":${r3(fp.fold(-1.0)(_ => s.wallS))},"cpu_s":${r3(s.cpuS)},""" +
+                s""""shuffle_bytes":${s.shuffleWriteBytes},"fp":"${fp.getOrElse("error")}"}"""
+            }.mkString("[", ",", "]")
+            val runCpus = runs.map(_._2.cpuS)
+            if (runCpus.max > 3 * math.max(runCpus.min, 0.001) && runCpus.max - runCpus.min > 2.0)
+              sf1Unstable(name) = runCpus.map(r3).mkString("[", ",", "]")
+            sf1Shuffle(name) = runs.map(_._2.shuffleWriteBytes).sum
+            sf1Cpu(name) = runCpus.sum
+            sf1Walls(name) = walls(runs)
         }
       }
     } catch { case e: Throwable => recordErr("sf1_profile", e) }
+    val sf1Sorted = sf1Walls.filter(_._2.nonEmpty).map { case (k, v) => k -> v.sorted }
+    val sf1Min = sf1Sorted.map { case (k, v) => k -> v.head }
+    val sf1Med = sf1Sorted.map { case (k, v) => k -> median(v) }
 
     val calLast = calibrate()
 
@@ -508,21 +452,10 @@ object Bench {
         val probe = probeOnce()
         if (probe <= calEnvelope) {
           val q = byName(name)
-          var times = List.empty[Double]
-          val (bytes, cpu) = metricsDelta {
-            (1 to 3).foreach { _ =>
-              val t0 = System.nanoTime()
-              try scoped {
-                q.run(spark, sfDir).count()
-                times ::= (System.nanoTime() - t0) / 1e9
-              } catch { case e: Throwable => recordErr(name, e) }
-            }
-          }
-          if (times.size == 3) {
+          val runs = timed(name, () => scoped(q.run(spark, sfDir).count()))
+          if (runs.forall(_._1.isDefined)) {
             retried(name) = perQueryCal(name)
-            resultsMap(name) = times.sorted
-            perQueryShuffle(name) = bytes
-            perQueryCpu(name) = cpu
+            resultsMap(name) = record(name, runs)
             perQueryCal(name) = probe
           }
         }
@@ -561,7 +494,6 @@ object Bench {
     // Partial failures (1-2 of 3 runs threw) are EXCLUDED from "total" and
     // counted in `n_partial`; their surviving timings still appear in the
     // per-query map for diagnosis.
-    def median(t: Seq[Double]): Double = t(t.size / 2 min (t.size - 1))
     val all = (resultsMap.toSeq ++ annResults ++ applyResults).filter(_._2.nonEmpty)
     val qsMin = all.map { case (k, t) => "\"" + k + "\":" + r3(t.head) }
       .mkString("{", ",", "}")

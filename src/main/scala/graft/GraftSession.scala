@@ -18,8 +18,14 @@ object GraftSession {
 
   /** Local cores for a driver main: `SPARK_GRAFT_CPUS`, else the box's
     * processors capped at 32. */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(parseCpus)
     .getOrElse(Runtime.getRuntime.availableProcessors.min(32))
+
+  /** A `SPARK_GRAFT_CPUS` value as a core count; rejects a non-integer or a
+    * count below 1 with a message naming the variable and the value. */
+  def parseCpus(value: String): Int =
+    value.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be an integer of at least 1, got '$value'"))
 
   /** Compressed parquet bytes per shuffle partition the session targets when
     * it can see its input directory. 8 MiB of parquet is ~64–128 MiB of

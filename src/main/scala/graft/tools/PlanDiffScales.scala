@@ -50,25 +50,7 @@ object PlanDiffScales {
       catch { case e: Throwable => System.err.println(s"[plandiff] staging $d: $e") }
     }
 
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            st: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          cpuNanos.addAndGet(st.stageInfo.taskMetrics.executorCpuTime)
-          ()
-        }
-      })
-    def settled(): Long = {
-      var prev = cpuNanos.get
-      var i = 0
-      while (i < 20) {
-        Thread.sleep(50)
-        val cur = cpuNanos.get
-        if (cur == prev) i = 20 else { prev = cur; i += 1 }
-      }
-      prev
-    }
+    val meter = graft.StageMeter(spark)
 
     def scaleOf(dir: String): Option[Double] = {
       val m = "([0-9]+\\.?[0-9]*)\\s*$".r.findFirstIn(
@@ -89,17 +71,12 @@ object PlanDiffScales {
           def cell(dir: String): (String, Double) =
             try {
               GraftSession.tuneShuffleFor(spark, cpus, dir)
-              settled()
               val fp = PlanFingerprints.of(q.run(spark, dir)).brief // run 1 = warm
-              var best = -1.0
-              (2 to runsPerCell).foreach { _ =>
-                val c0 = settled()
-                q.run(spark, dir)
-                  .foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ())
-                val c = (settled() - c0) / 1e9
-                if (best < 0 || c < best) best = c
+              val runCpu = (2 to runsPerCell).map { _ =>
+                meter.measure(q.run(spark, dir)
+                  .foreachPartition((_: Iterator[org.apache.spark.sql.Row]) => ()))._2.cpuS
               }
-              (fp, best)
+              (fp, runCpu.minOption.getOrElse(-1.0))
             } catch { case e: Throwable =>
               (s"error:${e.getClass.getSimpleName}", -1.0)
             }

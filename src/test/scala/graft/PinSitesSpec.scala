@@ -4,24 +4,38 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `graft.Checkpoints` is the one place that pins or frees a frame: no
-  * other main source calls `localCheckpoint`, `persist`, `cache` or
-  * `unpersist` directly (each such call is a pin with no owner). */
+/** One owner per mechanism in main sources: `graft.Checkpoints` is the one
+  * place that pins or frees a frame (no other main source calls
+  * `localCheckpoint`, `persist`, `cache` or `unpersist` directly: each such
+  * call is a pin with no owner), and `graft.StageMeter` is the one Spark
+  * listener (each other listener is a meter that guesses when the
+  * listener bus is done). */
 class PinSitesSpec extends AnyFunSuite {
 
   private val direct = """\.(localCheckpoint|persist|cache|unpersist)\(""".r
 
-  test("only graft/Checkpoints.scala pins or unpins directly") {
-    val owner = Paths.get("src/main/scala/graft/Checkpoints.scala")
+  /** `file:line: text` of every main-source line outside `owner` that
+    * matches `pattern`. */
+  private def callsOutside(owner: String, pattern: scala.util.matching.Regex): Seq[String] = {
+    val ownerPath = Paths.get(owner)
     val sources = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
-      .filterNot(_ == owner).toSeq
+      .filterNot(_ == ownerPath).toSeq
     assert(sources.size > 50, s"the scan found only ${sources.size} sources")
-    val hits = sources.flatMap { p: Path =>
+    sources.flatMap { p: Path =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if direct.findFirstIn(line).nonEmpty => s"$p:${i + 1}: ${line.trim}"
+        case (line, i) if pattern.findFirstIn(line).nonEmpty => s"$p:${i + 1}: ${line.trim}"
       }
     }
+  }
+
+  test("only graft/Checkpoints.scala pins or unpins directly") {
+    val hits = callsOutside("src/main/scala/graft/Checkpoints.scala", direct)
     assert(hits.isEmpty, s"direct pin/unpin calls outside Checkpoints:\n${hits.mkString("\n")}")
+  }
+
+  test("only graft/StageMeter.scala adds a Spark listener") {
+    val hits = callsOutside("src/main/scala/graft/StageMeter.scala", "addSparkListener".r)
+    assert(hits.isEmpty, s"Spark listeners outside StageMeter:\n${hits.mkString("\n")}")
   }
 }

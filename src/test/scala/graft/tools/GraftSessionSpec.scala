@@ -41,4 +41,15 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(derivedShufflePartitions(32, d.toString, cap = 512) == 512)
     assert(derivedShufflePartitions(32, "/nonexistent/graft/dir") == 32)
   }
+
+  test("SPARK_GRAFT_CPUS must be an integer of at least 1, and a bad value names itself") {
+    import graft.GraftSession.parseCpus
+    assert(parseCpus("8") == 8)
+    assert(parseCpus("1") == 1)
+    for (bad <- Seq("abc", "0", "-1", "", "4.5")) {
+      val e = intercept[IllegalArgumentException](parseCpus(bad))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
+    }
+  }
 }
