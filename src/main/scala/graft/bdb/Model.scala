@@ -1,8 +1,7 @@
 package graft.bdb
 
-import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.ml.regression.{GBTRegressionModel, GBTRegressor}
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The expected-convergence regressor behind a narrow contract
@@ -14,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   *  - [[StubModel]]: joins precomputed predictions (e.g. the reference's
   *    committed predictions CSV) — unblocks every downstream metric exactly.
-  *  - [[GbtModel]]: distributed MLlib GBTRegressor on the same per-frame
-  *    features — no sequence memory, but residual metrics stay well-defined
-  *    and the whole pipeline remains one Spark DAG.
+  *  - [[GbtModel]]: squared-error gradient-boosted trees on the same
+  *    per-frame features, fit in one Spark task — no sequence memory, but
+  *    residual metrics stay well-defined and the fit stays one Spark query.
   *  - External LSTM parity runs against the padded sequence table from
   *    [[Sequences]] exported to Parquet — explicitly outside the core.
   *
@@ -95,7 +94,7 @@ private[bdb] object LstmScoring {
   * model; applied at predict, predictions un-scaled back): with ~200 Adam
   * steps on the fixture, raw-magnitude labels would spend the whole budget
   * growing the output head. Null features impute to the mean (0 after
-  * scaling) — same tolerance as GBT's handleInvalid=keep. */
+  * scaling), so a null feature does not fail training, as in the GBT. */
 final class TrainedLstmModel private (
     val model: graft.ml.KerasLstm.Model,
     features: Seq[String],
@@ -163,33 +162,203 @@ final class StubModel(predictions: DataFrame) extends ConvergenceModel {
       Seq("game_id", "play_id", "frame_id"), "left")
 }
 
-/** Distributed gradient-boosted-trees regressor on per-frame features. */
-final class GbtModel private (model: GBTRegressionModel, features: Seq[String])
+/** Squared-error gradient-boosted trees on per-frame features, fit in one
+  * Spark task by [[GbtModel.train]]. `predict` is one deterministic UDF over
+  * the feature columns; a null or NaN feature goes right at every split. */
+final class GbtModel private (private[bdb] val trees: GbtModel.Trees, features: Seq[String])
     extends ConvergenceModel {
   override def predict(frames: DataFrame): DataFrame = {
-    val assembled = GbtModel.assemble(frames, features)
-    model.setPredictionCol("predicted_converge_rate")
-      .transform(assembled).drop("gbt_features")
+    val t = trees
+    val score = udf((x: Seq[Double]) => t.predict(x))
+    frames.withColumn("predicted_converge_rate",
+      score(array(GbtModel.featureValues(features): _*)))
   }
 }
 
 object GbtModel {
-  private def assemble(df: DataFrame, features: Seq[String]): DataFrame =
-    new VectorAssembler().setInputCols(features.toArray)
-      .setOutputCol("gbt_features").setHandleInvalid("keep")
-      .transform(df)
+  /** MLlib's default `maxBins`: at most `MaxBins - 1` split candidates per
+    * feature. */
+  private val MaxBins = 32
 
+  /** The boosted trees as flat node arrays. Tree `t` starts at node
+    * `roots(t)`; a node with `feature >= 0` sends `x(feature) <= threshold`
+    * to `left`, everything else (NaN too) to `right`; a leaf
+    * (`feature == -1`) holds `value`. */
+  final case class Trees(roots: Array[Int], weights: Array[Double],
+      feature: Array[Int], threshold: Array[Double], left: Array[Int],
+      right: Array[Int], value: Array[Double]) {
+    def leaf(tree: Int, x: Int => Double): Int = {
+      var j = roots(tree)
+      while (feature(j) >= 0) j = if (x(feature(j)) <= threshold(j)) left(j) else right(j)
+      j
+    }
+    def predict(x: Int => Double): Double = {
+      var s = 0.0
+      var t = 0
+      while (t < roots.length) { s += weights(t) * value(leaf(t, x)); t += 1 }
+      s
+    }
+  }
+
+  /** Feature values as doubles, null as NaN. */
+  private def featureValues(features: Seq[String]): Seq[Column] =
+    features.map(f => coalesce(col(f).cast("double"), lit(Double.NaN)))
+
+  /** Fits squared-error gradient boosting (MLlib's `GradientBoostedTrees`
+    * recipe) in ONE task: the features and the label are exchanged to a
+    * single partition, sorted by those columns, and boosted there, so 100
+    * rounds cost one query instead of a job per tree level, and the model is
+    * a pure function of the row set (not of cores, partitioning or caching):
+    * rows equal in every sorted column are interchangeable in the fit.
+    *
+    * Tree 0 fits the label with weight 1; tree m ≥ 1 fits the negative
+    * gradient 2·(y − F) with weight 0.1. Splits maximize the variance gain
+    * over at most `MaxBins - 1` candidates per feature ([[splitCandidates]]),
+    * need `minInstancesPerNode` rows on each side and a positive gain; a leaf
+    * is its rows' mean target. Round m draws its Bernoulli subsample from
+    * `SplittableRandom(seed + m)` over the sorted rows.
+    *
+    * Scale bound: the task holds about n × 8(d + 1) bytes while the rows
+    * load (n rows, d features), then n × (d + 24) bytes of bins, labels,
+    * predictions and targets plus 4 bytes per row and tree level of row
+    * indices while it boosts, so tens of millions of rows fit in a few GB;
+    * the BDB training set is 10^5–10^6 rows. An empty set fails; more than
+    * `Int.MaxValue` rows fail, naming the count. */
   def train(train: DataFrame, features: Seq[String],
       labelCol: String = "converge_rate",
       maxIter: Int = 20, maxDepth: Int = 5, seed: Long = 42L,
       minInstancesPerNode: Int = 1, subsamplingRate: Double = 1.0): GbtModel = {
-    val fitted = new GBTRegressor()
-      .setFeaturesCol("gbt_features").setLabelCol(labelCol)
-      .setMaxIter(maxIter).setMaxDepth(maxDepth).setSeed(seed)
-      .setMinInstancesPerNode(minInstancesPerNode)
-      .setSubsamplingRate(subsamplingRate)
-      .fit(assemble(train, features))
-    new GbtModel(fitted, features)
+    val d = features.size
+    val names = features.indices.map(i => s"__x$i") :+ "__y"
+    val values = featureValues(features) :+ col(labelCol).cast("double")
+    val rows = train.select(values.zip(names).map { case (v, n) => v.as(n) }: _*)
+      .repartition(1)
+      .sortWithinPartitions(names.map(col): _*)
+    // an empty input may plan to no partition at all, so fit sees no rows
+    val trees = rows.rdd.mapPartitions(it => if (it.isEmpty) Iterator.empty
+        else Iterator(fit(it, d, labelCol, maxIter, maxDepth, seed,
+          minInstancesPerNode, subsamplingRate)))
+      .collect().headOption
+      .getOrElse(throw new IllegalArgumentException("GbtModel.train: the training set is empty"))
+    new GbtModel(trees, features)
+  }
+
+  private def fit(rows: Iterator[Row], d: Int, labelCol: String, maxIter: Int,
+      maxDepth: Int, seed: Long, minInstances: Int, rate: Double): Trees = {
+    val cols = Array.fill(d)(Array.newBuilder[Double])
+    val labels = Array.newBuilder[Double]
+    var count = 0L
+    rows.foreach { r =>
+      if (count < Int.MaxValue) {
+        require(!r.isNullAt(d), s"GbtModel.train: null $labelCol in a training row")
+        for (f <- 0 until d) cols(f) += r.getDouble(f)
+        labels += r.getDouble(d)
+      }
+      count += 1
+    }
+    require(count <= Int.MaxValue, s"GbtModel.train fits in one task, which holds at " +
+      s"most ${Int.MaxValue} rows; the training set has $count")
+    val y = labels.result()
+    val n = y.length
+    val thresholds = new Array[Array[Double]](d)
+    val bins = Array.tabulate(d) { f =>
+      val x = cols(f).result()
+      cols(f) = null
+      thresholds(f) = splitCandidates(x)
+      x.map(v => binOf(thresholds(f), v).toByte)
+    }
+
+    val feature, splitBin, left, right = mutable.ArrayBuffer.empty[Int]
+    val threshold, value = mutable.ArrayBuffer.empty[Double]
+    val target, pred = new Array[Double](n)
+    def grow(idx: Array[Int], depth: Int): Int = {
+      val c = idx.length.toDouble
+      var s, q = 0.0
+      idx.foreach { i => s += target(i); q += target(i) * target(i) }
+      val node = feature.size
+      feature += -1; splitBin += -1; threshold += 0.0; left += -1; right += -1
+      value += (if (idx.isEmpty) 0.0 else s / c)
+      var best = (0.0, -1, -1) // (gain, feature, bin)
+      if (depth < maxDepth) {
+        for (f <- 0 until d) {
+          val nb = thresholds(f).length + 1
+          val hc, hs, hq = new Array[Double](nb)
+          idx.foreach { i =>
+            val b = bins(f)(i)
+            hc(b) += 1; hs(b) += target(i); hq(b) += target(i) * target(i)
+          }
+          var (lc, ls, lq) = (0.0, 0.0, 0.0)
+          for (b <- 0 until nb - 1) {
+            lc += hc(b); ls += hs(b); lq += hq(b)
+            if (lc >= minInstances && c - lc >= minInstances) {
+              val gain = variance(c, s, q) - lc / c * variance(lc, ls, lq) -
+                (c - lc) / c * variance(c - lc, s - ls, q - lq)
+              if (gain > best._1) best = (gain, f, b)
+            }
+          }
+        }
+      }
+      val (_, f, b) = best
+      if (f >= 0) {
+        val (l, r) = idx.partition(i => bins(f)(i) <= b)
+        feature(node) = f; splitBin(node) = b; threshold(node) = thresholds(f)(b)
+        left(node) = grow(l, depth + 1)
+        right(node) = grow(r, depth + 1)
+      }
+      node
+    }
+
+    val weights = Array.tabulate(maxIter)(m => if (m == 0) 1.0 else 0.1)
+    val roots = Array.tabulate(maxIter) { m =>
+      for (i <- 0 until n) target(i) = if (m == 0) y(i) else 2 * (y(i) - pred(i))
+      val rng = new java.util.SplittableRandom(seed + m)
+      val sample = if (rate >= 1.0) Array.range(0, n)
+        else (0 until n).filter(_ => rng.nextDouble() < rate).toArray
+      val root = grow(sample, 0)
+      for (i <- 0 until n) {
+        var j = root
+        while (feature(j) >= 0) j = if (bins(feature(j))(i) <= splitBin(j)) left(j) else right(j)
+        pred(i) += weights(m) * value(j)
+      }
+      root
+    }
+    Trees(roots, weights, feature.toArray, threshold.toArray, left.toArray,
+      right.toArray, value.toArray)
+  }
+
+  private def variance(c: Double, s: Double, q: Double): Double = q / c - (s / c) * (s / c)
+
+  /** The bin of `v`: the first threshold index `i` with `v <= thresholds(i)`,
+    * else `thresholds.length` (NaN lands there, right of every split). */
+  private def binOf(thresholds: Array[Double], v: Double): Int = {
+    var (lo, hi) = (0, thresholds.length)
+    while (lo < hi) { val mid = (lo + hi) >>> 1; if (v <= thresholds(mid)) hi = mid else lo = mid + 1 }
+    lo
+  }
+
+  /** MLlib's `findSplitsForContinuousFeature` over the non-NaN values: the
+    * midpoints between adjacent distinct values when there are at most
+    * `MaxBins` of them, else `MaxBins - 1` quantile-strided cut points, each
+    * the midpoint to the preceding distinct value. */
+  private[bdb] def splitCandidates(values: Array[Double]): Array[Double] = {
+    val sorted = values.filterNot(_.isNaN)
+    java.util.Arrays.sort(sorted)
+    val distinct, counts = mutable.ArrayBuffer.empty[Double]
+    sorted.foreach { v =>
+      if (distinct.nonEmpty && distinct.last == v) counts(counts.size - 1) += 1
+      else { distinct += v; counts += 1 }
+    }
+    def mid(i: Int) = (distinct(i - 1) + distinct(i)) / 2.0
+    if (distinct.size <= MaxBins) (1 until distinct.size).map(mid).toArray
+    else {
+      val stride = sorted.length.toDouble / MaxBins
+      var (seen, goal) = (counts(0), stride)
+      (1 until distinct.size).flatMap { i =>
+        val before = seen
+        seen += counts(i)
+        Option.when(math.abs(before - goal) < math.abs(seen - goal)) { goal += stride; mid(i) }
+      }.toArray
+    }
   }
 }
 
@@ -198,8 +367,10 @@ object ModelEval {
   /** Leakage-safe split: hash-partition whole games into train/val
     * (reference: BDB_2026.ipynb cell 91 splits by game_id). */
   def splitByGame(df: DataFrame, valFraction: Double = 0.2): (DataFrame, DataFrame) = {
+    require(valFraction >= 0.0 && valFraction <= 1.0,
+      s"splitByGame: valFraction must be in [0, 1], got $valFraction")
     val bucket = pmod(hash(col("game_id")), lit(100))
-    val cut = (valFraction * 100).toInt
+    val cut = math.round(valFraction * 100).toInt
     (df.filter(bucket >= cut), df.filter(bucket < cut))
   }
 

@@ -7,20 +7,21 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One owner per mechanism in main sources: `graft.Checkpoints` is the one
   * place that pins or frees a frame (no other main source calls
   * `localCheckpoint`, `persist`, `cache` or `unpersist` directly: each such
-  * call is a pin with no owner), and `graft.StageMeter` is the one Spark
+  * call is a pin with no owner), `graft.StageMeter` is the one Spark
   * listener (each other listener is a meter that guesses when the
-  * listener bus is done). */
+  * listener bus is done), and `graft.bdb.GbtModel`'s single-task booster is
+  * the one GBT (no MLlib regressor path beside it). */
 class PinSitesSpec extends AnyFunSuite {
 
   private val direct = """\.(localCheckpoint|persist|cache|unpersist)\(""".r
 
-  /** `file:line: text` of every main-source line outside `owner` that
-    * matches `pattern`. */
-  private def callsOutside(owner: String, pattern: scala.util.matching.Regex): Seq[String] = {
-    val ownerPath = Paths.get(owner)
+  /** `file:line: text` of every main-source line outside `owner` (if any)
+    * that matches `pattern`. */
+  private def callsOutside(owner: Option[String], pattern: scala.util.matching.Regex): Seq[String] = {
+    val ownerPath = owner.map(Paths.get(_))
     val sources = Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") || p.toString.endsWith(".java"))
-      .filterNot(_ == ownerPath).toSeq
+      .filterNot(p => ownerPath.contains(p)).toSeq
     assert(sources.size > 50, s"the scan found only ${sources.size} sources")
     sources.flatMap { p: Path =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
@@ -30,12 +31,17 @@ class PinSitesSpec extends AnyFunSuite {
   }
 
   test("only graft/Checkpoints.scala pins or unpins directly") {
-    val hits = callsOutside("src/main/scala/graft/Checkpoints.scala", direct)
+    val hits = callsOutside(Some("src/main/scala/graft/Checkpoints.scala"), direct)
     assert(hits.isEmpty, s"direct pin/unpin calls outside Checkpoints:\n${hits.mkString("\n")}")
   }
 
   test("only graft/StageMeter.scala adds a Spark listener") {
-    val hits = callsOutside("src/main/scala/graft/StageMeter.scala", "addSparkListener".r)
+    val hits = callsOutside(Some("src/main/scala/graft/StageMeter.scala"), "addSparkListener".r)
     assert(hits.isEmpty, s"Spark listeners outside StageMeter:\n${hits.mkString("\n")}")
+  }
+
+  test("no main source uses MLlib's regressors") {
+    val hits = callsOutside(None, """org\.apache\.spark\.ml\.regression|GBTRegressor""".r)
+    assert(hits.isEmpty, s"MLlib regressor references in main:\n${hits.mkString("\n")}")
   }
 }

@@ -113,6 +113,21 @@ class ModelSpec extends SparkSpec {
     assert(valid.count() > 25 && valid.count() < 175) // ~20% ± slack
   }
 
+  test("splitByGame rounds the fraction and rejects one outside [0, 1]") {
+    import spark.implicits._
+    val df = (1 to 500).map(g => (g.toLong, g * 2.0)).toDF("game_id", "v")
+    val bucket = pmod(hash(col("game_id")), lit(100))
+    // 0.29 * 100 is 28.999…: truncated, bucket 28 would fall to the train side
+    assert(df.filter(bucket === 28).count() > 0, "no game lands in bucket 28")
+    val expected = df.filter(bucket < 29).select("game_id").as[Long].collect().toSet
+    val (_, valid) = ModelEval.splitByGame(df, 0.29)
+    assert(valid.select("game_id").as[Long].collect().toSet === expected)
+    Seq(-0.1, 1.5, Double.NaN).foreach { v =>
+      val e = intercept[IllegalArgumentException](ModelEval.splitByGame(df, v))
+      assert(e.getMessage.contains(v.toString))
+    }
+  }
+
   test("regressionMetrics: perfect prediction → rmse 0, r2 1") {
     import spark.implicits._
     val df = Seq((1.0, 1.0), (2.0, 2.0), (3.0, 3.0))
