@@ -234,7 +234,7 @@ object GbtModel {
     val rows = train.select(values.zip(names).map { case (v, n) => v.as(n) }: _*)
       .repartition(1)
       .sortWithinPartitions(names.map(col): _*)
-    // an empty input may plan to no partition at all, so fit sees no rows
+    // an empty input plans to no partition or to one empty partition
     val trees = rows.rdd.mapPartitions(it => if (it.isEmpty) Iterator.empty
         else Iterator(fit(it, d, labelCol, maxIter, maxDepth, seed,
           minInstancesPerNode, subsamplingRate)))

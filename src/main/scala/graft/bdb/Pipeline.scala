@@ -63,7 +63,7 @@ object Pipeline {
     val clustered = Routes.clusterRoutes(routeFeats, k = 4)
     val withIq = Routes.routeExecIQ(Routes.routeDeviation(clustered.assigned))
 
-    // Phase 2 — convergence model (distributed GBT + relational sequence
+    // Phase 2 — convergence model (single-task GBT + relational sequence
     // features standing in for the reference LSTM's memory) + residuals
     val seqFeatured = SequenceFeatures.add(labeled)
     val featureCols = Seq("dist_to_ball", "heading_align_cos", "vx", "vy", "s",
