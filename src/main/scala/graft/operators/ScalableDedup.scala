@@ -1,70 +1,27 @@
 package graft.operators
 
-import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, CountVectorizer, MinHashLSH, NGram, RegexTokenizer}
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Checkpoints.{cache, pin, scoped}
 
-/** Production-scale near-dup detection via MLlib LSH — the `approxSimilarityJoin`
-  * path that complements the oracle-exact sketch queries in
-  * [[graft.queries.DedupQueries]] (those prove semantics; these are the tuned
-  * implementations with banded hashing and candidate pruning built in).
+/** Semantic near-dup detection at scale through the [[IvfPq]] index: the
+  * embedding-pair candidate generator that complements the oracle-exact
+  * sketch queries in [[graft.queries.DedupQueries]] (those prove semantics;
+  * this is the tuned path for corpora too large to pair up).
   *
-  * Shapes:
-  *  - text → RegexTokenizer → NGram(shingles) → CountVectorizer(binary) →
-  *    MinHashLSH.approxSimilarityJoin on Jaccard distance
-  *  - embeddings → dense vectors → BucketedRandomProjectionLSH
-  *    .approxSimilarityJoin on Euclidean distance
+  *  - [[embeddingNearDupsIvfPq]]: one-shot near-dup pairs. Every vector
+  *    probes its nearest coarse cells; candidates meet on an EQUI-JOIN on
+  *    the cell key, never all-pairs. The coarse quantizer is flat IVF below
+  *    `hierarchicalMin` vectors and a two-level inverted multi-index
+  *    ([[Imi]]) above it.
+  *  - [[buildSemanticIndex]] / [[appendSemantic]] / [[appendSemanticStream]]
+  *    / [[semanticNearDupsFromIndex]]: the same search over a persisted,
+  *    cell-partitioned index with saved codebooks, appended exactly-once.
   *
-  * Both run as: map-side hashing → explode over hash tables → join on
-  * (table, band) — candidate pairs only, never all-pairs.
+  * Text near-dups go through [[MinHash]] (banded signatures on the engine's
+  * shared rolling hash), not through this object.
   */
 object ScalableDedup {
-
-  /** Near-duplicate text pairs with Jaccard distance ≤ maxDistance.
-    * Input: (doc_id, text). Output: (d1, d2, jaccard_dist).
-    */
-  def minhashNearDups(docs: DataFrame, maxDistance: Double = 0.4,
-      shingleSize: Int = 3, numHashTables: Int = 8): DataFrame = {
-    val tokenized = new RegexTokenizer().setInputCol("text")
-      .setOutputCol("tokens").setPattern("\\s+")
-      .transform(docs)
-    val shingled = new NGram().setN(shingleSize)
-      .setInputCol("tokens").setOutputCol("shingles")
-      .transform(tokenized)
-      .filter(size(col("shingles")) > 0)
-    val vectorizer = new CountVectorizer().setInputCol("shingles")
-      .setOutputCol("features").setBinary(true)
-      .fit(shingled)
-    val vectorized = vectorizer.transform(shingled)
-      // MinHashLSH requires at least one non-zero entry
-      .filter(col("features").isNotNull)
-    val lsh = new MinHashLSH().setInputCol("features")
-      .setOutputCol("hashes").setNumHashTables(numHashTables).setSeed(42L)
-      .fit(vectorized)
-    lsh.approxSimilarityJoin(vectorized, vectorized, maxDistance, "jaccard_dist")
-      .select(col("datasetA.doc_id").as("d1"), col("datasetB.doc_id").as("d2"),
-        col("jaccard_dist"))
-      .filter(col("d1") < col("d2"))
-  }
-
-  /** Near-duplicate embedding pairs within Euclidean `maxDistance`.
-    * Input: (vec_id, embedding array<float|double>). Output: (v1, v2, dist).
-    */
-  def embeddingNearDups(vecs: DataFrame, maxDistance: Double,
-      bucketLength: Double = 2.0, numHashTables: Int = 4): DataFrame = {
-    val vectorized = vecs.withColumn("features",
-      org.apache.spark.ml.functions.array_to_vector(col("embedding")))
-    val lsh = new BucketedRandomProjectionLSH().setInputCol("features")
-      .setOutputCol("hashes").setBucketLength(bucketLength)
-      .setNumHashTables(numHashTables).setSeed(42L)
-      .fit(vectorized)
-    lsh.approxSimilarityJoin(vectorized, vectorized, maxDistance, "dist")
-      .select(col("datasetA.vec_id").as("v1"), col("datasetB.vec_id").as("v2"),
-        col("dist"))
-      .filter(col("v1") < col("v2"))
-  }
 
   /** Near-duplicate embedding pairs through the [[IvfPq]] index — the
     * 100 TB semantic-dedup candidate generator: every vector probes its
@@ -73,8 +30,7 @@ object ScalableDedup {
     * the exact L2 distance is computed only for in-cell candidate pairs.
     * Recall characteristics are the IVF ones: a pair split across cells
     * neither probes is missed — raise `nProbe` (or `nLists` down) to trade
-    * cost for recall; the spec pins recall ≥ the LSH path on a planted
-    * corpus.
+    * cost for recall; the spec pins full recall on a planted corpus.
     *
     * Input: (vec_id, embedding array<float|double>), all of dimension
     * `dim`. Output: (v1, v2, dist) with dist = L2² ≤ maxSqDistance, each

@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `localCheckpoint`, `persist`, `cache` or `unpersist` directly: each such
   * call is a pin with no owner), `graft.StageMeter` is the one Spark
   * listener (each other listener is a meter that guesses when the
-  * listener bus is done), and `graft.bdb.GbtModel`'s single-task booster is
-  * the one GBT (no MLlib regressor path beside it). */
+  * listener bus is done), `graft.bdb.GbtModel`'s single-task booster is
+  * the one GBT (no MLlib regressor path beside it), and
+  * `graft.operators.MinHash` is the one MinHash LSH (no MLlib LSH path
+  * beside it or beside the IVF-PQ semantic dedup). */
 class PinSitesSpec extends AnyFunSuite {
 
   private val direct = """\.(localCheckpoint|persist|cache|unpersist)\(""".r
@@ -43,5 +45,10 @@ class PinSitesSpec extends AnyFunSuite {
   test("no main source uses MLlib's regressors") {
     val hits = callsOutside(None, """org\.apache\.spark\.ml\.regression|GBTRegressor""".r)
     assert(hits.isEmpty, s"MLlib regressor references in main:\n${hits.mkString("\n")}")
+  }
+
+  test("no main source uses MLlib's LSH") {
+    val hits = callsOutside(None, "MinHashLSH|BucketedRandomProjectionLSH".r)
+    assert(hits.isEmpty, s"MLlib LSH references in main:\n${hits.mkString("\n")}")
   }
 }
