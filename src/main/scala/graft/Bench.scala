@@ -289,9 +289,9 @@ object Bench {
       q.name -> record(q.name, window(q.name)(() => scoped(q.run(spark, sfDir).count())))
     }
 
-    // ANN search benches: the index is a built artifact (its cost is KMeans
-    // fits, which would swamp the engine signal) — build OUTSIDE the timed
-    // region, then time search only.
+    // ANN search benches: the index is a built artifact (its cost is the
+    // k-means fits, which would swamp the engine signal) — build OUTSIDE the
+    // timed region, then time search only.
     val calAnn = calibrate()
     // bench-local serialized index copy: deleted in the finally so a failed
     // run doesn't leak one bench_ivfpq temp dir per attempt

@@ -1,9 +1,9 @@
 package graft.bdb
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.feature.{StandardScaler, StandardScalerModel, VectorAssembler}
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ml.KMeans
 
 /** Route feature engineering + clustering (SURVEY §7 step 6).
   *
@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
   * the trajectory key. First/last-by-frame use `min_by`/`max_by`, which are
   * order-insensitive (no sort needed, unlike the pandas sort+first idiom).
   *
-  * Clustering is MLlib StandardScaler + KMeans(k=12, seed=42)
-  * (reference: routes.py:213-217). sklearn and MLlib initialization differ, so
-  * cluster *labels* are not bit-comparable; correctness is asserted on
-  * invariants (assignment = nearest centroid, k clusters, downstream-metric
-  * stability) per SURVEY §5.
+  * Clustering is standardize + k-means(k=12, seed=42) (reference:
+  * routes.py:213-217), fit by [[graft.ml.KMeans]] in one task. sklearn's
+  * initialization differs, so cluster *labels* are not bit-comparable;
+  * correctness is asserted on invariants (assignment = nearest centroid, k
+  * clusters, downstream-metric stability) per SURVEY §5.
   */
 object Routes {
 
@@ -71,46 +71,54 @@ object Routes {
       .withColumn("route_duration", col("route_frames") * Kinematics.FrameDt)
   }
 
-  final case class RouteClustering(
-      scaler: StandardScalerModel,
-      kmeans: KMeansModel,
-      assigned: DataFrame)
+  /** `centers` are in standardized units; `assigned` is the input plus the
+    * standardized `features` array and `route_cluster`. */
+  final case class RouteClustering(centers: Array[Array[Double]], assigned: DataFrame)
 
-  /** Median-impute → standardize → KMeans(k, seed). Adds `route_cluster`.
-    * (reference: routes.py:173-233; imputation :202-205 via percentile_approx.)
-    */
+  /** Median-impute → standardize → k-means(k, seed). Adds the standardized
+    * `features` array and `route_cluster`. (reference: routes.py:173-233;
+    * imputation :202-205.) One task ([[KMeans.inOneTask]]) takes each
+    * feature's lower median (what percentile_approx returns at these sizes),
+    * the imputed column's mean and stddev_samp, standardizes by MLlib's
+    * rule (0.0 where the std is 0) and fits; `assigned` applies the same
+    * medians, means and stds as column expressions. Past
+    * `KMeans.SampleCap` routes the statistics are the sample's. */
   def clusterRoutes(features: DataFrame, k: Int = 12, seed: Long = 42L): RouteClustering = {
-    // median imputation without a separate Imputer pass: one global agg, then coalesce
-    val medians = featureCols.map(c =>
-      percentile_approx(col(c), lit(0.5), lit(10000)).as(s"med_$c"))
-    val medRow = features.agg(medians.head, medians.tail: _*)
-    val imputed = features.crossJoin(broadcast(medRow))
-    val filled = featureCols.foldLeft(imputed) { (df, c) =>
-      df.withColumn(c, coalesce(col(c), col(s"med_$c")))
-    }.drop(featureCols.map(c => s"med_$c"): _*)
-
-    val assembled = new VectorAssembler()
-      .setInputCols(featureCols.toArray)
-      .setOutputCol("features_raw")
-      .transform(filled)
-    val scaler = new StandardScaler()
-      .setInputCol("features_raw").setOutputCol("features")
-      .setWithMean(true).setWithStd(true)
-      .fit(assembled)
-    val scaled = scaler.transform(assembled)
-    val km = new KMeans().setK(k).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("route_cluster")
-      .fit(scaled)
-    RouteClustering(scaler, km, km.transform(scaled))
+    val (medians, means, stds, centers) =
+      KMeans.inOneTask(features, featureCols.map(c => col(c).cast("double"))) { it =>
+        val rows = it.toArray
+        val stats = featureCols.indices.map { i =>
+          val seen = rows.filterNot(_.isNullAt(i)).map(_.getDouble(i))
+          require(seen.nonEmpty, s"clusterRoutes: ${featureCols(i)} is null in every route")
+          java.util.Arrays.sort(seen)
+          val median = seen((seen.length - 1) / 2)
+          val v = rows.map(r => if (r.isNullAt(i)) median else r.getDouble(i))
+          val mean = v.sum / v.length
+          val std = if (v.length < 2) 0.0
+            else math.sqrt(v.map(x => (x - mean) * (x - mean)).sum / (v.length - 1))
+          (median, mean, std, v)
+        }
+        val x = rows.indices.map(r => stats.map { case (_, mean, std, v) =>
+          if (std == 0.0) 0.0 else (v(r) - mean) / std }.toArray).toArray
+        (stats.map(_._1), stats.map(_._2), stats.map(_._3), KMeans.fitPoints(x, k, seed))
+      }
+    val withFeatures = features
+      .withColumns(featureCols.zip(medians).map { case (c, m) => c -> coalesce(col(c), lit(m)) }.toMap)
+      .withColumn("features", array(featureCols.indices.map(i =>
+        if (stds(i) == 0.0) lit(0.0) else (col(featureCols(i)) - means(i)) / stds(i)): _*))
+    RouteClustering(centers,
+      withFeatures.withColumn("route_cluster", KMeans.nearest(col("features"), centers)))
   }
 
   /** M4 — 2-component PCA of the scaled feature vectors (reference:
     * BDB_2026.ipynb cell 39; visualization aid, exposed for parity). Expects
-    * the `features` vector column from [[clusterRoutes]]'s scaler. */
-  def pca2(scaled: DataFrame): DataFrame =
+    * the standardized `features` array from [[clusterRoutes]]. */
+  def pca2(scaled: DataFrame): DataFrame = {
+    val vectors = scaled.withColumn("features", array_to_vector(col("features")))
     new org.apache.spark.ml.feature.PCA()
       .setInputCol("features").setOutputCol("pca_features").setK(2)
-      .fit(scaled).transform(scaled)
+      .fit(vectors).transform(vectors)
+  }
 
   /** One-hot embedding table route_emb_0..k-1 (reference: routes.py:284-295). */
   def oneHotEmbeddings(assigned: DataFrame, k: Int = 12): DataFrame =
@@ -121,7 +129,7 @@ object Routes {
 
   /** Per-cluster centroids in *feature space* as a small DataFrame — broadcast
     * side of the deviation join (reference: Phase3 cell 10 recomputes means;
-    * equivalently KMeansModel.clusterCenters unscaled).
+    * equivalently the k-means centers unscaled).
     */
   def clusterCentroids(assigned: DataFrame): DataFrame =
     assigned.groupBy("route_cluster")

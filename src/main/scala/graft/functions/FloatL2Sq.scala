@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * codegen.
   *
   * Sides may independently be `array<float>` or `array<double>` (query
-  * vectors are float, KMeans centroids are double — the FD mix is the probe
+  * vectors are float, k-means centroids are double — the FD mix is the probe
   * path's shape). Null-safe (null array → null). Length mismatch means
   * corrupt data and fails loudly, matching [[FloatDot]]; the HOF form would
   * null-pad silently.

@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.{cache, scoped}
+import graft.ml.KMeans
 
 /** **Inverted multi-index** (Babenko & Lempitsky, CVPR 2012): the two-level
   * coarse quantizer that replaces a flat √n-cell IVF when the centroid probe
@@ -14,15 +12,16 @@ import graft.Checkpoints.{cache, scoped}
   * them is O(n·√n) and the codebook no longer broadcasts for free).
   *
   * Structure: the embedding splits into two coordinate halves; each half
-  * gets its own KMeans codebook of ~√C centroids, and a cell is the PAIR
+  * gets its own k-means codebook of ~√C centroids, and a cell is the PAIR
   * (c1, c2) — C = k1·k2 total cells from k1+k2 trained centroids. Because
   * the halves are DISJOINT coordinates, the squared distance to the product
   * centroid (cb1(i) ++ cb2(j)) is EXACTLY d²₁(i) + d²₂(j), so ranking cells
   * by the sum of per-half distances is exact product-centroid ranking, not
   * a heuristic. Costs:
   *
-  *  - train: two KMeans fits of k ≈ √C on a BOUNDED sample of half-vectors
-  *    (vs one fit of k = C on full vectors);
+  *  - train: two k-means fits of k ≈ √C in one task, on the bounded
+  *    sample of half-vectors [[graft.ml.KMeans]] draws (vs one fit of
+  *    k = C on full vectors);
   *  - assign/probe: k1 + k2 ≈ 2√C distance evaluations per vector
   *    (vs C) — with C sized for constant cell occupancy (n/τ), that is
   *    O(√n) per vector with a ~2·√τ constant, and candidate verification
@@ -47,31 +46,17 @@ object Imi {
     def split: Int = (dim + 1) / 2
   }
 
-  /** Train the two half-space codebooks on a bounded sample.
-    * `targetCells` is the desired k1·k2 (each half gets ~√targetCells
-    * centroids, capped by the sample size); `nTotal` skips the count job
-    * when the caller already knows it. */
-  def train(vecs: DataFrame, dim: Int, targetCells: Int, seed: Long = 42L,
-      sampleCap: Int = 65536, nTotal: Long = -1L): Model = scoped {
+  /** Train the two half-space codebooks, both in one [[KMeans.fit]].
+    * `targetCells` is the desired k1·k2: each half gets ~√targetCells
+    * centroids, fewer when the sample holds fewer distinct half-vectors. */
+  def train(vecs: DataFrame, dim: Int, targetCells: Int, seed: Long = 42L): Model = {
     require(dim >= 2, s"dim must be >= 2 to split, got $dim")
-    val n = if (nTotal >= 0) nTotal else vecs.count()
-    val frac = math.min(1.0, sampleCap.toDouble / math.max(1L, n))
-    val sample = cache(
-      if (frac >= 1.0) vecs else vecs.sample(withReplacement = false, frac, seed))
     val s = (dim + 1) / 2
     val kHalf = math.max(2, math.ceil(math.sqrt(targetCells.toDouble)).toInt)
-    val nSample = sample.count()
-    def fit(sliceFrom: Int, width: Int): Array[Array[Float]] = {
-      val feat = sample.select(array_to_vector(
-        expr(s"slice(embedding, $sliceFrom, $width)").cast("array<double>"))
-        .as("features"))
-      val k = math.max(1L, math.min(kHalf.toLong, nSample)).toInt
-      new KMeans().setK(k).setSeed(seed)
-        .setFeaturesCol("features").setPredictionCol("cell")
-        .fit(feat)
-        .clusterCenters.map(_.toArray.map(_.toFloat))
-    }
-    Model(fit(1, s), fit(s + 1, dim - s), dim)
+    val emb = col("embedding")
+    val Seq(cb1, cb2) = KMeans.fit(vecs, Seq(slice(emb, 1, s), slice(emb, s + 1, dim - s)),
+      kHalf, seed)
+    Model(cb1.map(_.map(_.toFloat)), cb2.map(_.map(_.toFloat)), dim)
   }
 
   /** Persist the trained codebooks (one tiny parquet row — centroids are

@@ -1,17 +1,17 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ml.KMeans
 
-/** IVF (inverted-file) approximate nearest neighbor: a KMeans coarse
+/** IVF (inverted-file) approximate nearest neighbor: a k-means coarse
   * quantizer partitions the corpus into nLists cells; a query scores only the
   * nProbe nearest cells' vectors. The complement to the random-hyperplane LSH
   * path in [[graft.queries.SimilarityQueries]].
   *
-  * Scale shape: the index build is one MLlib KMeans fit + a map-side assign;
+  * Scale shape: the index build is one single-task k-means fit on a capped
+  * sample ([[graft.ml.KMeans]]) + a map-side assign;
   * cells are the PHYSICAL partition key (at 100 TB: write the corpus
   * partitioned by `cell` so a query's probe list prunes whole directories —
   * see [[graft.sources.Lake]]). Search is broadcast(queries×probes) →
@@ -20,22 +20,17 @@ import org.apache.spark.sql.functions._
   */
 object Ivf {
 
-  final case class Index(centroids: DataFrame, assigned: DataFrame, nLists: Int)
+  final case class Index(centroids: DataFrame, assigned: DataFrame)
 
-  /** Build the coarse quantizer. Input: (vec_id, embedding array<float>). */
+  /** Build the coarse quantizer. Input: (vec_id, embedding array<float>).
+    * `assigned` adds each vector's nearest `cell` ([[KMeans.nearest]]). */
   def build(vecs: DataFrame, nLists: Int = 16, seed: Long = 42L): Index = {
-    val featurized = vecs.withColumn("features",
-      array_to_vector(col("embedding").cast("array<double>")))
-    val km = new KMeans().setK(nLists).setSeed(seed)
-      .setFeaturesCol("features").setPredictionCol("cell")
-      .fit(featurized)
-    val assigned = km.transform(featurized).drop("features")
+    val Seq(centers) = KMeans.fit(vecs, Seq(col("embedding")), nLists, seed)
     val spark = vecs.sparkSession
     import spark.implicits._
-    val centroids = km.clusterCenters.zipWithIndex.toSeq
-      .map { case (c, i) => (i, c.toArray.toSeq) }
+    val centroids = centers.toSeq.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
       .toDF("cell", "centroid")
-    Index(centroids, assigned, nLists)
+    Index(centroids, vecs.withColumn("cell", KMeans.nearest(col("embedding"), centers)))
   }
 
   // Distances via the native codegen'd sequential fold

@@ -3,13 +3,13 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.{cache, scoped}
+import graft.Checkpoints.cache
 
 /** IVF-PQ: the composed billion-scale ANN index (the FAISS `IVFxx,PQyy`
   * architecture) — [[Ivf]]'s coarse quantizer prunes WHICH vectors are
   * scored, [[Pq]]'s product codes shrink WHAT is scored.
   *
-  * Build: KMeans cells (coarse), then PQ codebooks trained on RESIDUALS
+  * Build: k-means cells (coarse), then PQ codebooks trained on RESIDUALS
   * (vector − its cell centroid) — residuals concentrate near zero, so the
   * same number of codes quantizes them much more finely than raw vectors.
   *
@@ -37,18 +37,17 @@ object IvfPq {
   /** Build the composed index. `vecs`: (vec_id, embedding array<float>).
     *
     * The returned `encoded` frame is CACHED and materialized — it IS the
-    * index; without it the residual lineage (KMeans assign + centroid join
-    * + subtraction over the corpus) would re-execute for each of the m
-    * codebook fits and on every later search. It belongs to the caller's
-    * scope (or `Checkpoints.release(idx.encoded)` frees it when done). */
+    * index; without it the residual lineage (nearest-cell assign +
+    * centroid join + subtraction over the corpus) would re-execute on every
+    * later search. It belongs to the caller's scope (or
+    * `Checkpoints.release(idx.encoded)` frees it when done). */
   def build(vecs: DataFrame, dim: Int, nLists: Int = 16, m: Int = 16,
-      k: Int = 16, seed: Long = 42L): Index = scoped {
+      k: Int = 16, seed: Long = 42L): Index = {
     val ivf = Ivf.build(vecs, nLists, seed)
-    // leaving the scope frees the residual lineage; `encoded` is
-    // materialized first and stays, as the returned index reads it
-    val resid = cache(ivf.assigned
+    // read twice (the codebook fit, the encode), so not cached
+    val resid = ivf.assigned
       .join(broadcast(ivf.centroids), Seq("cell"))
-      .withColumn("residual", residualCol))
+      .withColumn("residual", residualCol)
     // PQ over residuals: Pq.encode/train read a column named `embedding`
     val cb = Pq.train(
       resid.select(col("vec_id"), col("residual").as("embedding")),
@@ -87,14 +86,13 @@ object IvfPq {
 
   /** Incremental maintenance for a disk index written by [[writeIndex]]: at
     * 100 TB you APPEND new vectors, you don't rebuild. New vectors are
-    * assigned to the EXISTING cells (nearest centroid — the same argmin the
-    * coarse quantizer's transform applies, ties to the lowest cell id),
+    * assigned to the EXISTING cells by [[graft.ml.KMeans.nearest]] — the
+    * argmin [[Ivf.build]] assigns with, ties to the lowest cell id —
     * their residuals PQ-encoded with the EXISTING codebooks, and the rows
     * appended into the same cell-partitioned layout — existing files are
     * never touched, and `search(pruneCellScan = true)` keeps pruning
-    * directories because the partition key is unchanged. Assignment is a
-    * map-side crossJoin against the broadcast centroids + one `min_by`
-    * hash-agg (partial-aggregable; no window sort).
+    * directories because the partition key is unchanged. Assignment is one
+    * map-side expression over the centroids literal (no join, no shuffle).
     *
     * Quantizer drift is the price of not refitting: appended vectors are
     * coded against centroids fit BEFORE they existed. The returned
@@ -106,7 +104,7 @@ object IvfPq {
       batchId: Option[Long] = None): DataFrame = {
     requireBatchLayout(spark, path)
     val (cents, cb) = readQuantizers(spark, path)
-    appendBatch(spark, path, newVecs, batchId, cents, cb)
+    appendBatch(path, newVecs, batchId, cents.collect(), cb)
     val hist = spark.read.parquet(s"$path/codes")
       .groupBy("cell").agg(count(lit(1)).as("n"))
     hist.crossJoin(broadcast(hist.agg(avg(col("n")).as("mean_n"))))
@@ -114,12 +112,12 @@ object IvfPq {
       .select("cell", "n", "skewed")
   }
 
-  /** The write half of [[appendToIndex]], against PRE-LOADED quantizers —
-    * what the streaming path runs per micro-batch, so ingest never pays a
-    * per-batch codes-tree listing or an unread histogram scan. */
-  private def appendBatch(spark: org.apache.spark.sql.SparkSession,
-      path: String, newVecs: DataFrame, batchId: Option[Long],
-      cents: DataFrame, cb: Pq.Codebooks): Unit = {
+  /** The write half of [[appendToIndex]], against PRE-LOADED quantizers
+    * (`cents` is the collected centroid table) — what the streaming path
+    * runs per micro-batch, so ingest never pays a per-batch codes-tree
+    * listing or an unread histogram scan. */
+  private def appendBatch(path: String, newVecs: DataFrame, batchId: Option[Long],
+      cents: Array[org.apache.spark.sql.Row], cb: Pq.Codebooks): Unit = {
     val dim = cb.m * cb.subDim
     // same dim guard as search: zip_with would pad a short vector with
     // nulls and silently store all-null residual codes
@@ -128,15 +126,12 @@ object IvfPq {
          |ELSE raise_error(concat('PQ append: vector dim ', size(embedding),
          |                        ', index expects $dim')) END""".stripMargin)
       .as("embedding"))
+    val rows = cents.sortBy(_.getInt(0))
+    val centers = rows.map(_.getSeq[Double](1).toSeq)
+    val i = graft.ml.KMeans.nearest(col("embedding"), centers.map(_.toArray)) + 1
     val best = guarded
-      .crossJoin(broadcast(cents))
-      // native codegen'd fold — bit-identical to the HOF zip_with form
-      .withColumn("cdist", expr("float_l2sq(embedding, centroid)"))
-      .groupBy("vec_id")
-      .agg(min_by(struct(col("cell"), col("centroid"), col("embedding")),
-        struct(col("cdist"), col("cell"))).as("b"))
-      .select(col("vec_id"), col("b.cell").as("cell"),
-        col("b.centroid").as("centroid"), col("b.embedding").as("embedding"))
+      .withColumn("cell", element_at(typedlit(rows.map(_.getInt(0)).toSeq), i))
+      .withColumn("centroid", element_at(typedlit(centers.toSeq), i))
       .withColumn("residual", residualCol)
     val encoded = Pq.encode(
         best.select(col("vec_id"), col("cell"),
@@ -183,8 +178,8 @@ object IvfPq {
     * `readIndex` + a groupBy) periodically and [[splitCell]] what it
     * flags.
     *
-    * The quantizers (centroids + codebooks) are loaded ONCE at start and
-    * pinned as a LocalRelation — per micro-batch the ingest pays only the
+    * The quantizers (centroids + codebooks) are loaded and collected ONCE
+    * at start — per micro-batch the ingest pays only the
     * assignment job and the partitioned write, never a codes-tree listing
     * (which grows with total file count) or a histogram scan nobody reads.
     * Single-writer contract: do not run [[splitCell]] (which moves
@@ -193,17 +188,15 @@ object IvfPq {
       vecStream: DataFrame, checkpoint: String,
       name: String = "ann_ingest"): org.apache.spark.sql.streaming.StreamingQuery = {
     requireBatchLayout(spark, path)
-    val (centsLazy, cb) = readQuantizers(spark, path)
-    val rows = centsLazy.collect()
-    val cents = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), centsLazy.schema)
+    val (centsTable, cb) = readQuantizers(spark, path)
+    val cents = centsTable.collect()
     vecStream.writeStream.queryName(name)
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         // skip empty micro-batches: the assignment job would still run
         if (!batch.isEmpty)
-          appendBatch(spark, path, batch.toDF(), Some(batchId), cents, cb)
+          appendBatch(path, batch.toDF(), Some(batchId), cents, cb)
         ()
       }
       .start()
@@ -357,18 +350,18 @@ object IvfPq {
     require(nRows >= k2,
       s"cell $cell holds $nRows vectors — cannot split into $k2")
     val maxCell = cents.map(_.getInt(0)).max
-    // sub-quantizer fit on THIS cell only (local KMeans; the heavy part,
-    // and it touches one cell's data, not the corpus)
+    // sub-quantizer fit on THIS cell only (one single-task k-means on the
+    // capped sample; it touches one cell's data, not the corpus)
     val sub = Ivf.build(rows.select("vec_id", "embedding"), nLists = k2, seed)
     val shift = maxCell + 1
-    // MLlib KMeans can return FEWER than k2 centers (a cell hot with
-    // near-duplicate vectors has fewer distinct points than k2) — abort
+    // k-means returns one center per distinct vector when the cell holds
+    // fewer than k2 distinct vectors (a cell hot with duplicates) — abort
     // BEFORE any write rather than report a split that changed nothing,
     // and return the ids actually produced, never a ghost range
     val subCells = sub.centroids.select("cell").collect()
       .map(_.getInt(0)).sorted
     require(subCells.length >= 2,
-      s"cell $cell cannot be split: KMeans found only ${subCells.length} " +
+      s"cell $cell cannot be split: k-means found only ${subCells.length} " +
         s"distinct center(s) among $nRows vectors — the cell is hot with " +
         "(near-)duplicates; dedup it instead of splitting")
     val newCents = sub.centroids
@@ -409,8 +402,7 @@ object IvfPq {
   def readIndex(spark: org.apache.spark.sql.SparkSession, path: String): Index = {
     val codes = spark.read.parquet(s"$path/codes")
     val (centroids, cb) = readQuantizers(spark, path)
-    Index(Ivf.Index(centroids, codes.select("vec_id", "cell"),
-      nLists = centroids.count().toInt), cb, codes,
+    Index(Ivf.Index(centroids, codes.select("vec_id", "cell")), cb, codes,
       deleted = readDeleted(spark, path))
   }
 

@@ -1,26 +1,25 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.{cache, scoped}
+import graft.ml.KMeans
 
 /** Product quantization (PQ) for approximate nearest neighbor — the
   * memory-compression scale path, complementing [[Ivf]] (cell pruning) and the
   * LSH route in [[graft.queries.SimilarityQueries]] (hash bucketing).
   *
   * A D-dim float vector is split into `m` subvectors; each subspace gets its
-  * own `k`-centroid KMeans codebook; a vector is stored as `m` small codes
+  * own `k`-centroid k-means codebook; a vector is stored as `m` small codes
   * (k<=256 → m bytes — a 64-dim float32 embedding compresses 256→8 bytes,
   * 32×). Search is asymmetric distance computation (ADC): per query, build an
   * m×k lookup table of query-subvector→centroid distances once, then score
   * every corpus code with m table lookups instead of D float ops, take a
   * shortlist, and exactly re-rank only the shortlist against full vectors.
   *
-  * Scale shape: codebook training is `m` MLlib KMeans fits over a SAMPLE (the
-  * codebook is a model, not a per-row artifact); encoding is one map-side pass
+  * Scale shape: codebook training is `m` k-means fits in ONE task over a
+  * bounded sample ([[graft.ml.KMeans]]; the codebook is a model, not a
+  * per-row artifact); encoding is one map-side pass
   * (all Catalyst HOFs — argmin over centroid distances — no UDFs, stays in
   * codegen); the ADC scan broadcasts queries+tables and is embarrassingly
   * parallel over the (32× smaller) code table; only the shortlist join-back
@@ -37,85 +36,47 @@ object Pq {
   final case class Codebooks(m: Int, k: Int, subDim: Int,
       cents: Seq[Seq[Seq[Double]]])
 
-  /** Train per-subspace codebooks on (a sample of) the corpus.
-    * Input: (vec_id, embedding array<float>) with dim % m == 0.
+  /** Train per-subspace codebooks on (a `sampleFraction` sample of) the
+    * corpus: the m subspaces are one [[KMeans.fit]], subspace j seeded
+    * `seed + j`. A subspace with fewer than k distinct subvectors gets fewer
+    * centroids. Input: (vec_id, embedding array<float>) with dim % m == 0.
     */
   def train(vecs: DataFrame, dim: Int, m: Int = 8, k: Int = 16,
-      seed: Long = 42L, sampleFraction: Double = 1.0): Codebooks = scoped {
+      seed: Long = 42L, sampleFraction: Double = 1.0): Codebooks = {
     require(dim % m == 0, s"dim $dim not divisible by m $m")
     val subDim = dim / m
-    // cache only a sample WE created — never (un)persist the caller's frame;
-    // leaving the scope frees it
-    val ownSample = sampleFraction < 1.0
     val sample =
-      if (ownSample) cache(vecs.sample(withReplacement = false, sampleFraction, seed))
+      if (sampleFraction < 1.0) vecs.sample(withReplacement = false, sampleFraction, seed)
       else vecs
-    if (ownSample) sample.count() // materialize BEFORE the concurrent fits
-    // The m subspace fits are independent models over the same (cached)
-    // sample — run them as concurrent Spark jobs instead of a serial driver
-    // loop: at scale the serial form multiplies wall-clock passes by m
-    // (round-5 VERDICT #3). Results keep subspace order via the indexed map.
-    // BOUNDED pool (not the unbounded global EC): all m fits racing at once
-    // contend for executors and driver memory at large m; a fixed pool of 4
-    // pipelines them instead.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(4, m))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val cents = try {
-      Await.result(
-        Future.sequence((0 until m).map { j => Future {
-          val sub = sample.select(array_to_vector(
-            slice(col("embedding").cast("array<double>"), j * subDim + 1, subDim))
-            .as("features"))
-          val km = new KMeans().setK(k).setSeed(seed + j)
-            .setFeaturesCol("features").setPredictionCol("c").fit(sub)
-          km.clusterCenters.toSeq.map(_.toArray.toSeq)
-        }}.toSeq),
-        Duration.Inf)
-    } finally pool.shutdown()
-    Codebooks(m, k, subDim, cents)
+    val cents = KMeans.fit(sample,
+      (0 until m).map(j => slice(col("embedding"), j * subDim + 1, subDim)), k, seed)
+    Codebooks(m, k, subDim, cents.map(_.map(_.toSeq).toSeq))
   }
 
   /** Codebooks as a literal Catalyst value: array[m][k][subDim] of double. */
   private[operators] def cbCol(cb: Codebooks): Column = typedlit(cb.cents)
 
-  /** L2² between a subvector slice of `vecCol` (subspace j, 1-based slicing)
-    * and a centroid array expression — pure HOFs, whole-stage codegen. */
-  private[operators] def subL2(vecCol: String, j: String, subDim: Int, cent: String): String =
-    s"""aggregate(zip_with(slice(CAST($vecCol AS ARRAY<DOUBLE>), $j * $subDim + 1, $subDim),
-       |  $cent, (x, c) -> (x - c) * (x - c)), 0.0D, (a, p) -> a + p)""".stripMargin
-
-  /** Encode vectors to PQ codes: (input columns..., codes array<int> of length m).
-    * Map-side only; the codebook rides along as a broadcast literal.
+  /** Encode vectors to PQ codes: (input columns..., codes array<int> of length m),
+    * each code the [[KMeans.argmin]] of its subspace's row of the vector's
+    * own ADC table. Map-side only; the codebook rides along as a literal.
     */
-  def encode(vecs: DataFrame, cb: Codebooks): DataFrame = {
-    val dim = cb.m * cb.subDim
-    val dists = // per subspace j: distances to that subspace's k centroids
-      s"""transform(sequence(0, ${cb.m - 1}), j ->
-         |  transform(element_at(__cb, j + 1), c -> ${subL2("embedding", "j", cb.subDim, "c")}))"""
-        .stripMargin
-    // dim guard INSIDE the codes expression (an unused assert column would
-    // be pruned away): a short vector would otherwise slice short and encode
-    // silently-wrong codes
+  def encode(vecs: DataFrame, cb: Codebooks): DataFrame =
     vecs.withColumn("__cb", cbCol(cb))
-      .withColumn("codes", expr(
-        s"""CASE WHEN size(embedding) = $dim
-           |  THEN transform($dists, ds -> CAST(array_position(ds, array_min(ds)) - 1 AS INT))
-           |  ELSE raise_error(concat('PQ encode: embedding dim ', size(embedding), ', codebook expects $dim'))
-           |END""".stripMargin))
+      .withColumn("codes", transform(expr(adcTableExpr(cb, "embedding", "PQ encode: embedding")),
+        KMeans.argmin(_)))
       .drop("__cb")
-  }
 
-  /** Per-query ADC table over `vecCol`: m×k distances, query subvector →
-    * centroid. Shared with [[IvfPq]] (which feeds residuals). Expects the
-    * codebook literal bound as `__cb`. Same dim guard as [[encode]]: a
-    * short query vector would silently score truncated subspaces. */
-  private[operators] def adcTableExpr(cb: Codebooks, vecCol: String): String =
+  /** Per-vector ADC table over `vecCol`: m×k `float_l2sq` distances,
+    * subvector → centroid. Shared with [[IvfPq]] (which feeds residuals).
+    * Expects the codebook literal bound as `__cb`. The dim guard sits INSIDE
+    * the expression (an unused assert column would be pruned away): a short
+    * vector would otherwise slice short and score truncated subspaces. */
+  private[operators] def adcTableExpr(cb: Codebooks, vecCol: String,
+      what: String = "PQ query: vector"): String =
     s"""CASE WHEN size($vecCol) = ${cb.m * cb.subDim}
-       |  THEN transform(sequence(0, ${cb.m - 1}), j ->
-       |    transform(element_at(__cb, j + 1), c -> ${subL2(vecCol, "j", cb.subDim, "c")}))
-       |  ELSE raise_error(concat('PQ query: vector dim ', size($vecCol), ', codebook expects ${cb.m * cb.subDim}'))
+       |  THEN transform(sequence(0, ${cb.m - 1}), j -> transform(element_at(__cb, j + 1),
+       |    c -> float_l2sq(slice($vecCol, j * ${cb.subDim} + 1, ${cb.subDim}), c)))
+       |  ELSE raise_error(concat('$what dim ', size($vecCol), ', codebook expects ${cb.m * cb.subDim}'))
        |END""".stripMargin
 
   /** ADC score: m table lookups against a `codes` column, `tbl` bound.

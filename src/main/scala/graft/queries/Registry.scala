@@ -29,8 +29,8 @@ object Registry {
       "s_knn_brute", "t_pack", "e_interval_join",
       // round-4 scale-path operators: timing trend, not just correctness rows
       "d_simhash_banded", "d_contamination", "s_lsh_knn_multiprobe",
-      // round-5 operators. s_pq_knn is deliberately NOT benched: its cost is
-      // 16 MLlib KMeans fits (index build), which would swamp the engine
+      // round-5 operators. s_pq_knn is deliberately NOT benched: most of its
+      // cost is the codebook fit (index build), which would swamp the engine
       // signal the bench exists to trend.
       "e_asof_join", "d_fuzzy_verify", "a_hll_mergeable", "t_chunk",
       // round-7: new operator families from round 6 with no timing trend yet,

@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * call is a pin with no owner), `graft.StageMeter` is the one Spark
   * listener (each other listener is a meter that guesses when the
   * listener bus is done), `graft.bdb.GbtModel`'s single-task booster is
-  * the one GBT (no MLlib regressor path beside it), and
+  * the one GBT (no MLlib regressor path beside it),
   * `graft.operators.MinHash` is the one MinHash LSH (no MLlib LSH path
-  * beside it or beside the IVF-PQ semantic dedup). */
+  * beside it or beside the IVF-PQ semantic dedup), and `graft.ml.KMeans` is
+  * the one k-means (no MLlib clustering, and no MLlib scaler or assembler
+  * to feed it). */
 class PinSitesSpec extends AnyFunSuite {
 
   private val direct = """\.(localCheckpoint|persist|cache|unpersist)\(""".r
@@ -50,5 +52,10 @@ class PinSitesSpec extends AnyFunSuite {
   test("no main source uses MLlib's LSH") {
     val hits = callsOutside(None, "MinHashLSH|BucketedRandomProjectionLSH".r)
     assert(hits.isEmpty, s"MLlib LSH references in main:\n${hits.mkString("\n")}")
+  }
+
+  test("no main source uses MLlib's clustering or scalers") {
+    val hits = callsOutside(None, """org\.apache\.spark\.ml\.clustering|StandardScaler|VectorAssembler""".r)
+    assert(hits.isEmpty, s"MLlib clustering or scaler references in main:\n${hits.mkString("\n")}")
   }
 }

@@ -39,18 +39,4 @@ class MetricsExtraSpec extends SparkSpec {
       .getAs[org.apache.spark.ml.linalg.Vector](0)
     assert(v.size === 2)
   }
-
-  test("model artifact save/load round-trips (S6)") {
-    import spark.implicits._
-    val rows = (0 until 30).map { i =>
-      (1L, i.toLong, 10L, i * 1.0, i * 2.0, 30.0 - i, 5.0, 1.0, 0.5, 2.0, 2.5, 1.5)
-    }.toDF("game_id" +: "play_id" +: "nfl_id" +: Routes.featureCols: _*)
-    val clustered = Routes.clusterRoutes(rows, k = 2)
-    val dir = java.nio.file.Files.createTempDirectory("kmtest").toString
-    clustered.kmeans.write.overwrite().save(s"$dir/km")
-    val back = org.apache.spark.ml.clustering.KMeansModel.load(s"$dir/km")
-    assert(back.clusterCenters.length === 2)
-    assert(back.clusterCenters.map(_.toArray.toSeq).toSet ===
-      clustered.kmeans.clusterCenters.map(_.toArray.toSeq).toSet)
-  }
 }

@@ -1,6 +1,7 @@
 package graft.bdb
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class RoutesSpec extends SparkSpec {
@@ -49,6 +50,33 @@ class RoutesSpec extends SparkSpec {
       .groupBy("blob").agg(countDistinct("route_cluster").as("nc"))
       .select("nc").as[Long].collect()
     assert(agree.toSeq === Seq(1L, 1L))
+  }
+
+  test("route clusters are the same on pinned and unpinned input, at 1 and 4 " +
+      "partitions") {
+    val h = (salt: Int) => pmod(hash(col("id"), lit(salt)), lit(1000)) / 100.0
+    val features = spark.range(300).select(Seq((col("id") / 25).cast("long").as("game_id"),
+      (col("id") % 25).as("play_id"), lit(10L).as("nfl_id")) ++
+      Routes.featureCols.zipWithIndex.map { case (c, i) =>
+        (if (i == 0) when(col("id") % 17 === 0, lit(null)).otherwise(h(i)) else h(i)).as(c)
+      }: _*)
+    val keys = Seq("game_id", "play_id", "nfl_id")
+    def clusters(df: DataFrame): Map[Seq[Long], Int] =
+      Routes.clusterRoutes(df, k = 4).assigned.select((keys :+ "route_cluster").map(col): _*)
+        .collect().map(r => Seq(r.getLong(0), r.getLong(1), r.getLong(2)) -> r.getInt(3)).toMap
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val reference = clusters(features)
+    assert(reference.size === 300 && reference.values.toSet.size === 4)
+    try Seq(1, 4).foreach { p =>
+      spark.conf.set("spark.sql.shuffle.partitions", p.toString)
+      val input = features.orderBy(rand(p)).repartition(p)
+      assert(clusters(input) === reference, s"unpinned, $p partitions")
+      val pinned = input.cache()
+      try {
+        pinned.count()
+        assert(clusters(pinned) === reference, s"pinned, $p partitions")
+      } finally pinned.unpersist()
+    } finally spark.conf.set("spark.sql.shuffle.partitions", shufflePartitions)
   }
 
   test("one-hot embeddings are a unit vector per route") {

@@ -12,18 +12,14 @@ class PinLeakSpec extends SparkSpec {
 
   /** Registry queries outside the headline set whose builders pin or cache
     * (found by running every registry query once and watching for RDDs
-    * persisted and unpersisted during the run). Left out, each ~8 s of
-    * KMeans per run at sf0.001, which would take this spec far past its
-    * two-minute budget: s_ivfpq_knn and s_ivfpq_knn_exact pin through the
-    * same `IvfPq.build` + pinned search as s_ivfpq_recall,
-    * d_semantic_ivfpq_exact and d_semantic_subset_audit through the same
-    * `ScalableDedup` path as d_semantic_ivfpq, and s_pq_knn_exact through
-    * the same `Pq.train` sample cache as s_pq_knn. */
+    * persisted and unpersisted during the run). All of them are here: with
+    * every k-means fit one job, the whole spec runs in 57 s on 4 vCPUs. */
   private val pinning = Seq("a12_having_global", "a_percentiles",
     "a_approx_quantiles", "p_winsorize", "e_pagerank_converged",
     "t_bpe_retokenize", "t_bpe_tokenize", "d_cc_labels", "d_cc_keep_best",
     "l_upsert_merge", "l_incr_agg_retract", "s_pq_knn", "s_ivfpq_recall",
-    "d_semantic_ivfpq")
+    "d_semantic_ivfpq", "s_ivfpq_knn", "s_ivfpq_knn_exact", "d_semantic_ivfpq_exact",
+    "d_semantic_subset_audit", "s_pq_knn_exact")
 
   /** m_lstm_infer needs the reference LSTM weights, which its default model
     * path does not provide yet (ROADMAP item B1); it fails before building
