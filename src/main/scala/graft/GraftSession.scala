@@ -11,8 +11,34 @@ import org.apache.spark.sql.SparkSession
   *    full functions surface (unix_millis etc.) applies uniformly.
   *  - AQE on (runtime join-strategy switching + skew splitting at scale).
   *  - shuffle partitions sized to local cores, not the 200 default.
+  *  - generated classes are kept for the driver's lifetime: Spark's codegen
+  *    cache holds [[GeneratedClassCacheEntries]] classes, not its default
+  *    100, so a warm driver compiles no class twice.
   */
 object GraftSession {
+  /** Entries in Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100), sized to the
+    * largest working set one driver was measured to need (distinct classes
+    * compiled, 4 cores):
+    *  - one `query_mix` pass (perfbench, sf0.02): 187;
+    *  - one cold `Pipeline.run` (perfbench `pipeline`): 341;
+    *  - one `graft.Bench` sweep (sf0.1 and its sf1 tail): 668;
+    *  - one `graft.Verify` sweep at sf0.01: 1,878, the largest.
+    * At 100 a warm driver recompiles most of them on every pass (a warm
+    * `query_mix` pass: 147–183 compiles, and 2.2 s instead of 1.4 s; a
+    * Verify sweep: 3,109 compiles); at this size it compiles none twice. The cost
+    * is driver memory, because the cache keeps each class and its source
+    * text: at the end of one Verify sweep Metaspace holds 210 MB (197 MB at
+    * 100 entries) and old gen 157 MB after a full GC (109 MB).
+    *
+    * The setting is static. Spark reads it once, in `CodeGenerator`'s
+    * static initializer on the JVM's first compile, through `SQLConf.get`,
+    * so the session that compiles first sets it for the JVM's life and a
+    * later session's value is ignored. Every session comes from [[builder]],
+    * which sets it; `GraftSessionSpec` checks that a second round over more
+    * than 100 classes compiles none. */
+  val GeneratedClassCacheEntries: Int = 2048
+
   def local(cores: Int = cpus): SparkSession =
     builder(cores).getOrCreate()
 
@@ -145,6 +171,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores.toString))
       .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", GeneratedClassCacheEntries.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       // If a writer produced TIMESTAMP(NANOS) (which the Spark reader otherwise

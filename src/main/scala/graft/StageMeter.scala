@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.ListenerBusBridge
@@ -19,6 +20,11 @@ import org.apache.spark.sql.graft.ListenerBusBridge
   * throws instead of returning partial counters. Bodies run one at a time
   * per SparkContext: a job another thread runs meanwhile is charged to the
   * body.
+  *
+  * Codegen compiles are counted the same way, from Spark's JVM-global
+  * `CodegenMetrics` compile-time histogram. That is exact in `local[*]`,
+  * where the executors and the driver share one JVM, and follows the same
+  * rule: a class another thread compiles meanwhile is charged to the body.
   */
 final class StageMeter private (sc: SparkContext) extends SparkListener {
   import StageMeter._
@@ -42,11 +48,14 @@ final class StageMeter private (sc: SparkContext) extends SparkListener {
     ListenerBusBridge.drain(sc)
     recording = true
     try {
+      val compiles0 = Compilations.getCount
       val t0 = System.nanoTime()
       val out = body
       val wallNs = System.nanoTime() - t0
       ListenerBusBridge.drain(sc)
-      (out, Sample(wallNs, completed.asScala.toVector.sortBy(_.submitMs)))
+      val compiles = Compilations.getCount - compiles0
+      val compileMs = if (compiles == 0) 0.0 else compiles * Compilations.getSnapshot.getMean
+      (out, Sample(wallNs, completed.asScala.toVector.sortBy(_.submitMs), compiles, compileMs))
     } finally {
       recording = false
       completed.clear()
@@ -77,6 +86,10 @@ final class StageMeter private (sc: SparkContext) extends SparkListener {
 object StageMeter {
   val MaxWarmRuns = 8
 
+  /** Spark's record of codegen compiles: one update, the compile's ms, per
+    * generated class compiled in this JVM. */
+  private val Compilations = CodegenMetrics.METRIC_COMPILATION_TIME
+
   /** A meter listening on `spark`'s context from now on. */
   def apply(spark: SparkSession): StageMeter = {
     val meter = new StageMeter(spark.sparkContext)
@@ -89,9 +102,13 @@ object StageMeter {
       tasks: Int, runMs: Long, cpuNs: Long, gcMs: Long, shuffleReadBytes: Long,
       shuffleWriteBytes: Long, memorySpillBytes: Long, diskSpillBytes: Long)
 
-  /** What one [[StageMeter.measure]] saw: the body's wall time and its
-    * stages in submission order. */
-  final case class Sample(wallNs: Long, stages: Seq[Stage]) {
+  /** What one [[StageMeter.measure]] saw: the body's wall time, its stages
+    * in submission order, and the generated classes compiled meanwhile.
+    * `compiles` is exact; `compileMs` is `compiles` times the mean of
+    * Spark's compile-time histogram after the body, an estimate, because
+    * the histogram keeps a time-decaying sample rather than a sum. */
+  final case class Sample(wallNs: Long, stages: Seq[Stage], compiles: Long,
+      compileMs: Double) {
     def wallS: Double = wallNs / 1e9
     def tasks: Int = stages.map(_.tasks).sum
     def runMs: Long = stages.map(_.runMs).sum

@@ -340,24 +340,12 @@ object Bpe {
   }
 
   /** Tokenize text with a learned merge table: per word, chars + EndOfWord,
-    * then every merge applied IN LEARNED ORDER (each exhaustively — the
-    * same sequential semantics training itself applies, so training-corpus
-    * words round-trip to their trained segmentation exactly). Map-side
-    * only; the merge table rides as K nested fold expressions. */
-  def tokenize(docs: DataFrame, textCol: String, merges: Seq[Merge],
-      outCol: String = "bpe_tokens"): DataFrame = {
-    val ordered = merges.sortBy(_.step)
-    docs.withColumn(outCol, flatten(transform(
-      filter(split(lower(col(textCol)), "[^a-z]+"), w => w =!= ""),
-      w => ordered.foldLeft(concat(split(w, ""), array(lit(EndOfWord)))) {
-        (sym, m) => mergeFold(sym, m.left, m.right)
-      })))
-  }
-
-  /** [[tokenize]] for PRODUCTION merge tables. The expression path embeds
-    * one nested fold per merge — perfect at oracle scale (K ≤ a few dozen:
-    * codegen'd, plan-visible) but a real tokenizer carries ~32k merges, and
-    * a 32k-deep expression tree breaks analysis long before codegen. This
+    * then every merge applied in learned order, each exhaustively (the
+    * sequential semantics training applies, so training-corpus words
+    * round-trip to their trained segmentation). An expression path, one
+    * nested [[mergeFold]] per merge, would break analysis long before
+    * codegen at a real tokenizer's ~32k merges; `BpeSpec` keeps that form
+    * as the reference this path is checked against. This
     * path compiles the table to a rank map once on the driver (a few MB —
     * model-artifact sized, broadcast by closure) and applies it per
     * partition: repeatedly merge the LOWEST-RANK adjacent pair, leftmost on

@@ -9,7 +9,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Where one registry query's time goes. Plateau-warms the query, then runs
   * it `runs` times (default 3) and prints per run the wall, stages, tasks,
-  * stage-covered vs dead time, executor run/cpu/GC, shuffle and spill. After
+  * stage-covered vs dead time, executor run/cpu/GC, shuffle, spill and
+  * codegen compiles (count and estimated ms). After
   * the last run it prints that run's per-stage table, its planning phases
   * (analysis, optimization, planning) and its final post-AQE plan.
   *
@@ -55,7 +56,8 @@ object Trace {
         f"${s.deadMs / 1e3}%.3f s, outside stages ${s.wallS - s.spanMs / 1e3}%.3f s; " +
         f"executor run ${s.runMs / 1e3}%.3f s, cpu ${s.cpuS}%.3f s, " +
         f"GC ${s.gcMs / 1e3}%.3f s; shuffle write ${mb(s.shuffleWriteBytes)}%.1f MiB, " +
-        f"read ${mb(s.shuffleReadBytes)}%.1f MiB; spill ${mb(s.spillBytes)}%.1f MiB")
+        f"read ${mb(s.shuffleReadBytes)}%.1f MiB; spill ${mb(s.spillBytes)}%.1f MiB; " +
+        f"compiles ${s.compiles} (${s.compileMs}%.0f ms)")
       (qe, s)
     }
 

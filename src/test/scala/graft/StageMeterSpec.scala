@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** `StageMeter` attribution is exact the moment `measure` returns: no
   * sleep, no poll, and each call sees its own job only — also when the
@@ -76,5 +77,15 @@ class StageMeterSpec extends SparkSpec {
       if (i % 2 == 0) job(2, 2)
     } == StageMeter.MaxWarmRuns)
     assert(i == 8)
+  }
+
+  test("a new projection's first run counts its compiles and a rerun counts none") {
+    def run() = meter.measure(
+      spark.range(4).select((col("id") * lit(7_919_337L)).as("x")).collect())._2
+    val first = run()
+    assert(first.compiles >= 1)
+    assert(first.compileMs >= 0)
+    val again = run()
+    assert(again.compiles == 0 && again.compileMs == 0)
   }
 }

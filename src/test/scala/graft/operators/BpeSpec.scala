@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class BpeSpec extends SparkSpec {
@@ -13,6 +14,19 @@ class BpeSpec extends SparkSpec {
     Seq.fill(6)("newest"), Seq.fill(3)("widest"))
     .flatten.zipWithIndex.map { case (w, i) => (i.toLong, w) }
     .toDF("doc_id", "text")
+
+  /** The expression path `Bpe.tokenizeCompiled` is checked against: per
+    * word, chars + EndOfWord, then one nested [[Bpe.mergeFold]] per merge in
+    * learned order. Map-side only; fine at a few dozen merges. */
+  private def tokenize(docs: DataFrame, textCol: String,
+      merges: Seq[Bpe.Merge]): DataFrame = {
+    val ordered = merges.sortBy(_.step)
+    docs.withColumn("bpe_tokens", flatten(transform(
+      filter(split(lower(col(textCol)), "[^a-z]+"), w => w =!= ""),
+      w => ordered.foldLeft(concat(split(w, ""), array(lit(Bpe.EndOfWord)))) {
+        (sym, m) => Bpe.mergeFold(sym, m.left, m.right)
+      })))
+  }
 
   test("train pins the hand-computed merge sequence on the Sennrich corpus") {
     val model = Bpe.train(sennrich, "text", maxMerges = 8)
@@ -56,13 +70,13 @@ class BpeSpec extends SparkSpec {
 
   test("tokenize applies merges in learned order — held-out word segments correctly") {
     val model = Bpe.train(sennrich, "text", maxMerges = 8)
-    val toks = Bpe.tokenize(Seq((0L, "lowest")).toDF("doc_id", "text"),
+    val toks = tokenize(Seq((0L, "lowest")).toDF("doc_id", "text"),
       "text", model.merges)
       .select("bpe_tokens").as[Seq[String]].head()
     // l o w e s t </w> → es → est → est</w> → lo → low → [low, est</w>]
     assert(toks === Seq("low", "est</w>"))
     // training-corpus text round-trips to the trained segmentation
-    val corpus = Bpe.tokenize(Seq((0L, "newest widest")).toDF("doc_id", "text"),
+    val corpus = tokenize(Seq((0L, "newest widest")).toDF("doc_id", "text"),
       "text", model.merges)
       .select("bpe_tokens").as[Seq[String]].head()
     assert(corpus === Seq("newest</w>", "w", "i", "d", "est</w>"))
@@ -95,7 +109,7 @@ class BpeSpec extends SparkSpec {
       (3L, "Low, LOWER! 42 widest-newest"),
       (4L, ""),
       (5L, null)).toDF("doc_id", "text")
-    val expr = Bpe.tokenize(docs, "text", model.merges)
+    val expr = tokenize(docs, "text", model.merges)
       .select("doc_id", "bpe_tokens").as[(Long, Seq[String])].collect().toMap
     val compiled = Bpe.tokenizeCompiled(docs, "text", model.merges)
       .select("doc_id", "bpe_tokens").as[(Long, Seq[String])].collect().toMap

@@ -1,15 +1,16 @@
 package graft.tools
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.{SparkSpec, StageMeter}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** Shuffle-partition derivation (r15 VERDICT #3): the session sizes
   * `spark.sql.shuffle.partitions` from the input corpus's on-disk bytes —
   * ~8 MiB of compressed parquet per partition (≈ the standard 128 MB of
   * in-flight rows) — replacing the manual SPARK_GRAFT_SHUFFLE_PARTITIONS
   * env knob the r15 scale audit needed to keep d_dup_spans linear at 100×.
-  * Pure function; no SparkSession needed.
+  * Pure functions; only the codegen-cache cases use the shared session.
   */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
   import graft.GraftSession.{derivedShufflePartitions, BytesPerShufflePartition}
 
   private def tmpDirWith(sizes: Long*): java.nio.file.Path = {
@@ -51,5 +52,26 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(e.getMessage.contains("SPARK_GRAFT_CPUS") && e.getMessage.contains(s"'$bad'"),
         e.getMessage)
     }
+  }
+
+  test("the session's generated-class cache holds GeneratedClassCacheEntries") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      graft.GraftSession.GeneratedClassCacheEntries.toString)
+  }
+
+  test("a working set of more than Spark's default 100 classes compiles once") {
+    // each projection differs only in an inlined long literal, so each is
+    // its own generated class; at Spark's default of 100 entries the second
+    // round would find none of the first round's classes left
+    val meter = StageMeter(spark)
+    def round(): StageMeter.Sample = meter.measure {
+      (0 until 160).foreach { i =>
+        spark.range(1).select((col("id") + lit(5_300_017L + i)).as("x")).collect()
+      }
+    }._2
+    val first = round()
+    assert(first.compiles >= 150, s"only ${first.compiles} classes compiled")
+    val second = round()
+    assert(second.compiles == 0, s"${second.compiles} classes compiled again")
   }
 }
