@@ -3,6 +3,7 @@ package graft.bdb
 import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.queries.Exact
 
 /** The expected-convergence regressor behind a narrow contract
   * (SURVEY §7 step 7): DataFrame(per-frame features) → DataFrame(+ pred).
@@ -376,17 +377,19 @@ object ModelEval {
 
   /** MSE/RMSE/MAE/R² in one aggregation pass (reference: cell 102 acceptance:
     * R²=0.9466 for the LSTM; the GBT baseline is graded against the same
-    * formula). R² from sums: 1 − SSE / (Σy² − (Σy)²/n). */
+    * formula). R² from sums: 1 − SSE / (Σy² − (Σy)²/n). The sums are exact
+    * decimal sums at 12 places ([[Exact.dsum12]]: squared errors run near
+    * 1e-3), so the metrics do not depend on the input's partitioning. */
   def regressionMetrics(df: DataFrame, actual: String = "converge_rate",
       pred: String = "predicted_converge_rate"): DataFrame = {
     val err = col(actual) - col(pred)
     val y = col(actual)
     df.agg(
       count(lit(1)).cast("double").as("n"),
-      sum(err * err).as("sse"),
-      sum(abs(err)).as("sae"),
-      sum(y).as("sy"),
-      sum(y * y).as("syy"))
+      Exact.dsum12(err * err).as("sse"),
+      Exact.dsum12(abs(err)).as("sae"),
+      Exact.dsum12(y).as("sy"),
+      Exact.dsum12(y * y).as("syy"))
       .select(
         (col("sse") / col("n")).as("mse"),
         sqrt(col("sse") / col("n")).as("rmse"),

@@ -3,16 +3,16 @@ package graft.bdb
 import graft.GraftSession
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.cache
+import graft.Checkpoints
 
 /** End-to-end pipeline (reference: Submission.ipynb EP1, SURVEY §3): raw
   * tracking → normalized features → separation → labels → route clusters →
   * convergence model → TrueSpeed → scorecard, as ONE Spark DAG.
   *
   * The only intentional departure from the reference lifecycle: nothing is
-  * re-read from intermediate CSVs — lineage stays in Catalyst, with a single
-  * `cache()` on the shared feature table (reference materializes 6 CSVs and
-  * re-ingests them, data_io.py:56-79).
+  * re-read from intermediate CSVs — lineage stays in Catalyst, with one pin
+  * ([[graft.Checkpoints.pin]]) on the shared feature table (reference
+  * materializes 6 CSVs and re-ingests them, data_io.py:56-79).
   *
   * Scale shape: all trajectory ops share the hash(game_id, play_id[, nfl_id])
   * partitioning; the only later reshuffles are the per-player rollup and the
@@ -20,6 +20,11 @@ import graft.Checkpoints.cache
   */
 object Pipeline {
 
+  /** The run's frames. `features` is a pin, owned as [[graft.Checkpoints]]
+    * defines: inside a `scoped` block it passes to the caller's scope (a
+    * result frame reads it); outside any scope it lives until
+    * `Checkpoints.release(result.features)`, or until the `Result` is
+    * dropped and the ContextCleaner frees it. */
   final case class Result(
       features: DataFrame, routeFeatures: DataFrame, perPlay: DataFrame,
       scorecard: DataFrame, modelMetrics: DataFrame)
@@ -52,7 +57,7 @@ object Pipeline {
 
   def run(tracking: DataFrame, output: DataFrame, supp: DataFrame): Result = {
     val (receivers, labeled0) = labeledFeatures(tracking, supp)
-    val labeled = cache(labeled0)
+    val labeled = Checkpoints.pin(labeled0)
 
     // Phase 1 — route features + clustering on receiver trajectories
     val routeFeats = Routes.routeFeatures(

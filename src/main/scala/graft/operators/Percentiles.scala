@@ -230,9 +230,10 @@ object Percentiles {
         val bOff = spark.sparkContext.broadcast(offsets)
         val bTgt = spark.sparkContext.broadcast(targets)
 
-        // pass 2: emit exactly the target-rank rows
+        // pass 2: emit exactly the target-rank rows; only this collect reads
+        // the broadcasts, so they are destroyed right after it
         val hits: Array[(Any, Long, Double)] =
-          rdd.mapPartitionsWithIndex { (pid, it) =>
+          try rdd.mapPartitionsWithIndex { (pid, it) =>
             val off = bOff.value
             val tgt = bTgt.value
             var cur: Any = null
@@ -249,6 +250,7 @@ object Percentiles {
               if (tgt(g).contains(r)) Some((g, r, v)) else None
             }
           }.collect()
+          finally { bOff.destroy(); bTgt.destroy() }
 
         val byGroup: Map[Any, Map[Long, Double]] =
           hits.groupBy(_._1).map { case (g, a) =>

@@ -39,6 +39,36 @@ class PinSitesSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"direct pin/unpin calls outside Checkpoints:\n${hits.mkString("\n")}")
   }
 
+  /** Every broadcast variable main makes, with its release rule: per file,
+    * how many `.broadcast(` calls, and whether the file destroys each one
+    * at the end of its own work or hands it to the frame or stream it
+    * returns (freed by the ContextCleaner once that is dropped). */
+  private val broadcastSites: Map[String, (Int, String)] = Map(
+    "src/main/scala/graft/sources/FileSkipping.scala" -> (4 -> "destroyed"),
+    "src/main/scala/graft/ml/LstmTrainer.scala" -> (2 -> "destroyed"),
+    "src/main/scala/graft/operators/Percentiles.scala" -> (2 -> "destroyed"),
+    "src/main/scala/graft/ml/KerasLstm.scala" -> (1 -> "captured"),
+    "src/main/scala/graft/streaming/StreamingInference.scala" -> (2 -> "captured"))
+
+  test("broadcast variables are made only at the listed sites, each with its release rule") {
+    // the SQL join hint (`functions.broadcast`) and SIMD lane fills
+    // (`FloatVector.broadcast`) make no broadcast variable
+    val hits = callsOutside(None, """(?<!functions|Vector)\.broadcast\(""".r)
+    val byFile = hits.groupBy(_.takeWhile(_ != ':'))
+    val unlisted = byFile.toSeq.flatMap { case (f, lines) =>
+      if (lines.size > broadcastSites.get(f).fold(0)(_._1)) lines else Nil
+    }
+    assert(unlisted.isEmpty,
+      s"broadcast variables at sites with no release rule:\n${unlisted.sorted.mkString("\n")}")
+    broadcastSites.foreach { case (f, (n, rule)) =>
+      assert(byFile.get(f).fold(0)(_.size) == n, s"$f: expected $n broadcast sites")
+      if (rule == "destroyed") {
+        val destroys = """\.destroy\(\)""".r.findAllIn(Files.readString(Paths.get(f))).size
+        assert(destroys >= n, s"$f makes $n broadcasts but destroys $destroys")
+      }
+    }
+  }
+
   test("only graft/StageMeter.scala adds a Spark listener") {
     val hits = callsOutside(Some("src/main/scala/graft/StageMeter.scala"), "addSparkListener".r)
     assert(hits.isEmpty, s"Spark listeners outside StageMeter:\n${hits.mkString("\n")}")

@@ -137,4 +137,21 @@ class ModelSpec extends SparkSpec {
     assert(m.getAs[Double]("mae") === 0.0)
     assert(math.abs(m.getAs[Double]("r2") - 1.0) < 1e-12)
   }
+
+  test("regressionMetrics is bit-equal over the same rows in any order and partitioning") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    // converge-rate-like labels, predictions off by errors near 0.03
+    val rows = (1 to 5000).map { _ =>
+      val y = rnd.nextDouble() * 2 - 1
+      (y, y + rnd.nextGaussian() * 0.03)
+    }
+    val metrics = Seq(1, 4, 8).map { n =>
+      val shuffled = new scala.util.Random(n).shuffle(rows)
+      val m = ModelEval.regressionMetrics(
+        shuffled.toDF("converge_rate", "predicted_converge_rate").repartition(n)).head()
+      Seq("mse", "rmse", "mae", "r2").map(c => java.lang.Double.doubleToRawLongBits(m.getAs[Double](c)))
+    }
+    assert(metrics.distinct.size == 1, metrics.map(_.map(java.lang.Double.longBitsToDouble)))
+  }
 }
