@@ -1,7 +1,7 @@
 package graft
 
 import graft.queries.Registry
-import graft.Checkpoints.{cache, scoped}
+import graft.Checkpoints.{pin, scoped}
 
 /** Benchmark main: times the headline queries on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line sized to survive a bounded tail capture (~2000
@@ -317,8 +317,7 @@ object Bench {
           pruneCellScan = true).count()
       val pqCb = graft.operators.Pq.train(vecs, dim = 64, m = 16, k = 16,
         sampleFraction = 0.5)
-      val pqEnc = cache(graft.operators.Pq.encode(vecs, pqCb))
-      pqEnc.count()
+      val pqEnc = pin(graft.operators.Pq.encode(vecs, pqCb))
       def pqSearch(): Unit =
         graft.operators.Pq.search(pqEnc, queries, pqCb, k = 5, shortlist = 64)
           .count()

@@ -102,21 +102,18 @@ object GraftSession {
   }
 
   /** Builder for a session that will read `dataDir`: shuffle partitions are
-    * sized to the directory's bytes via [[derivedShufflePartitions]] unless
-    * SPARK_GRAFT_SHUFFLE_PARTITIONS explicitly overrides. */
+    * sized to the directory's bytes via [[derivedShufflePartitions]]. */
   def builder(cores: Int, dataDir: String): SparkSession.Builder =
     builder(cores).config("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-        derivedShufflePartitions(cores, dataDir).toString))
+      derivedShufflePartitions(cores, dataDir).toLong)
 
   /** Re-point an EXISTING session at a data dir (`spark.sql.shuffle
-    * .partitions` is runtime-mutable): set the derived count, honoring the
-    * same env override as [[builder]]. Multi-scale tools (PlanDiffScales)
-    * call this per scale so each tier runs with the partitioning a fresh
-    * session over that tier would have. Returns the count it set. */
+    * .partitions` is runtime-mutable): set the derived count, as
+    * [[builder]] does. Multi-scale tools (PlanDiffScales) call this per
+    * scale so each tier runs with the partitioning a fresh session over
+    * that tier would have. Returns the count it set. */
   def tuneShuffleFor(spark: SparkSession, cores: Int, dataDir: String): Int = {
-    val n = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt)
-      .getOrElse(derivedShufflePartitions(cores, dataDir))
+    val n = derivedShufflePartitions(cores, dataDir)
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
     n
   }
@@ -166,10 +163,8 @@ object GraftSession {
       // Default: one shuffle partition per core — right for bench-scale data
       // on this box. Mains that know their input directory use
       // builder(cores, dataDir), which derives the count from input bytes
-      // (see derivedShufflePartitions); SPARK_GRAFT_SHUFFLE_PARTITIONS
-      // remains the explicit override for scale experiments.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cores.toString))
+      // (see derivedShufflePartitions).
+      .config("spark.sql.shuffle.partitions", cores.toLong)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", GeneratedClassCacheEntries.toLong)
       .config("spark.sql.session.timeZone", "UTC")

@@ -2,7 +2,7 @@ package graft.ml
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.{cache, scoped}
+import graft.Checkpoints.{pin, scoped}
 
 /** **In-engine distributed training** for the reference's convergence LSTM
   * (reference: bdb2026/models.py:23-138 — Masking(0.0) → LSTM(64, seq) →
@@ -429,26 +429,25 @@ object LstmTrainer {
     * `monitor="loss"`). Returns the float32 inference model. */
   def train(trainSeqs: DataFrame, valSeqs: Option[DataFrame],
       keyCols: Seq[String], cfg: Config): Trained = scoped {
-    // leaving the scope frees the cached sequence RDDs, also when training
-    // throws
+    // leaving the scope frees the pinned sequence frames, also when
+    // training throws
     val spark = trainSeqs.sparkSession
     val sc = spark.sparkContext
     val s = Shape(cfg.nFeatures, cfg.units1, cfg.units2, cfg.denseUnits)
 
     def toRdd(df: DataFrame) = {
       import spark.implicits._
-      cache(df.select(
+      pin(df.select(
           xxhash64(keyCols.map(col): _*).as("sid"),
           col("seq_len").cast("int").as("n"),
           flatten(slice(col("seq"), lit(1), col("seq_len")))
-            .cast("array<double>").as("flat"))
-        .as[(Long, Int, Array[Double])].rdd)
+            .cast("array<double>").as("flat")))
+        .as[(Long, Int, Array[Double])].rdd
     }
     val trainRdd = toRdd(trainSeqs)
     val valRdd = valSeqs.map(toRdd)
-    val nSeqs = trainRdd.count() // also materializes the cache
+    val nSeqs = trainRdd.count()
     require(nSeqs > 0, "LstmTrainer: empty training set")
-    valRdd.foreach(_.count())
 
     val B = cfg.batchesPerEpoch
     var p = init(s, cfg.seed)

@@ -52,9 +52,9 @@ final class MGSketch(val m: Int) extends Serializable {
 
   def update(h: Long): Unit = {
     n += 1
+    // containsKey, not a null check: `get` unboxes a missing key to 0L
     val key = java.lang.Long.valueOf(h)
-    val cur = counters.get(key)
-    if (cur != null) { counters.put(key, cur + 1L); () }
+    if (counters.containsKey(key)) { counters.put(key, counters.get(key) + 1L); () }
     else if (counters.size < m) { counters.put(key, 1L); () }
     else {
       decrements += 1L
@@ -71,8 +71,7 @@ final class MGSketch(val m: Int) extends Serializable {
   def mergeWith(other: MGSketch): MGSketch = {
     val mm = math.min(m, other.m)
     other.counters.forEach { (k, v) =>
-      val cur = counters.get(k)
-      counters.put(k, if (cur == null) v else cur + v)
+      counters.put(k, if (counters.containsKey(k)) counters.get(k) + v else v)
       ()
     }
     n += other.n

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.cache
+import graft.Checkpoints.pin
 
 /** IVF-PQ: the composed billion-scale ANN index (the FAISS `IVFxx,PQyy`
   * architecture) — [[Ivf]]'s coarse quantizer prunes WHICH vectors are
@@ -36,10 +36,10 @@ object IvfPq {
 
   /** Build the composed index. `vecs`: (vec_id, embedding array<float>).
     *
-    * The returned `encoded` frame is CACHED and materialized — it IS the
-    * index; without it the residual lineage (nearest-cell assign +
-    * centroid join + subtraction over the corpus) would re-execute on every
-    * later search. It belongs to the caller's scope (or
+    * The returned `encoded` frame is a pin (`Checkpoints.pin`, materialized
+    * now) — it IS the index; without it the residual lineage (nearest-cell
+    * assign + centroid join + subtraction over the corpus) would re-execute
+    * on every later search. It belongs to the caller's scope (or
     * `Checkpoints.release(idx.encoded)` frees it when done). */
   def build(vecs: DataFrame, dim: Int, nLists: Int = 16, m: Int = 16,
       k: Int = 16, seed: Long = 42L): Index = {
@@ -52,13 +52,12 @@ object IvfPq {
     val cb = Pq.train(
       resid.select(col("vec_id"), col("residual").as("embedding")),
       dim, m, k, seed)
-    val encoded = cache(Pq.encode(
+    val encoded = pin(Pq.encode(
         resid.select(col("vec_id"), col("cell"),
           col("embedding").as("orig_emb"), col("residual").as("embedding")),
         cb)
       .select(col("vec_id"), col("cell"), col("codes"),
         col("orig_emb").as("embedding")))
-    encoded.count()
     Index(ivf, cb, encoded)
   }
 

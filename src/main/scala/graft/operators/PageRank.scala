@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.{cache, pin, release, scoped}
+import graft.Checkpoints.{pin, release, scoped}
 
 /** Fixed-iteration PageRank over an edge list — the canonical iterative
   * graph centrality, run as K co-partitioned rounds of join + aggregate.
@@ -38,23 +38,22 @@ import graft.Checkpoints.{cache, pin, release, scoped}
   * dangling sum. At 100 TB graph scale that is the difference between one
   * network pass per round and three.
   *
-  * The static frames are `persist()`-based, NOT `localCheckpoint`: under
-  * AQE, `Dataset.localCheckpoint` captures `AdaptiveSparkPlanExec`'s
-  * `outputPartitioning` — `UnknownPartitioning` — so the checkpointed frame
-  * would forget its layout and every downstream join would re-shuffle it.
-  * A cached plan's `InMemoryTableScan` reports the TRUE partitioning
-  * (Spark keeps `canChangeCachedPlanOutputPartitioning=false` for exactly
-  * this reason) and AQE stays on for those materializations. The iterated
-  * state is materialized EVERY round (the Pregel superstep shape) through
-  * `cut` — a localCheckpoint scoped AQE-off, which captures the
-  * partitioning and runs the round as one pipelined non-adaptive job
-  * instead of a fan of individually-scheduled KB-sized AQE stages; lazy
-  * multi-round chains were measured strictly slower (the doubled `state`
-  * reference makes the logical tree grow 2^rounds between cuts, and the
-  * driver re-analysis dwarfs the cut jobs). `run` also scopes
-  * `spark.sql.shuffle.partitions` to a data-sized count so the per-round
-  * aggregation lands on the SAME partitioning as the pinned joins.
-  * `PlanAuditSpec` pins exchanges/round ≤ 1 including across the cut.
+  * Every held frame is a pin (`graft.Checkpoints`). The collapsed pair
+  * list is a plain pin: nothing downstream needs its layout. The static
+  * frames (`stateBase`, `eP`) and the iterated state, materialized EVERY
+  * round (the Pregel superstep shape), go through `cut`: a pin taken with
+  * AQE scoped off. Under AQE, `Dataset.localCheckpoint` would capture
+  * `AdaptiveSparkPlanExec`'s `outputPartitioning` (`UnknownPartitioning`),
+  * so the frame would forget its layout and every downstream join would
+  * re-shuffle it; with AQE off it captures the hash partitioning, and the
+  * round runs as one pipelined job instead of a fan of
+  * individually-scheduled KB-sized AQE stages. Lazy multi-round chains
+  * were measured strictly slower (the doubled `state` reference makes the
+  * logical tree grow 2^rounds between cuts, and the driver re-analysis
+  * dwarfs the cut jobs). `run` also scopes `spark.sql.shuffle.partitions`
+  * to a data-sized count so the per-round aggregation lands on the SAME
+  * partitioning as the cut joins. `PlanAuditSpec` pins exchanges/round ≤ 1
+  * over the cut static frames and across the per-round cut.
   */
 object PageRank {
 
@@ -115,7 +114,7 @@ object PageRank {
     // would silently pick them up — round 10 guarded this with a hostile
     // require(no active streams). Instead, AUTO-ISOLATE: run the whole
     // iteration on a private `newSession()` (own SQLConf; shared
-    // SparkContext, cache, and blocks). Runtime conf the caller set is
+    // SparkContext and blocks). Runtime conf the caller set is
     // copied across (newSession starts from the SparkConf defaults only).
     // Plans cross the session boundary through GLOBAL temp views — the one
     // public cross-session channel — resolved eagerly on the target
@@ -136,7 +135,7 @@ object PageRank {
     // `pairs` is freed when this scope exits: after the local iteration
     // (which runs no Spark job), or once the distributed result is pinned
     scoped {
-      val pairs = cache(
+      val pairs = pin(
         e0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
       val nPairs = pairs.count()
       // the local path declares its node column as src's type, while the
@@ -167,8 +166,8 @@ object PageRank {
         case None =>
           // Distributed iteration: isolate its scoped confs on a private
           // session (see the comment block above); the already-collapsed
-          // and cached pair frame crosses via a global temp view, and
-          // CacheManager is shared-state so the iso plan reads its blocks.
+          // and pinned pair frame crosses via a global temp view, and the
+          // iso plan's LogicalRDD leaf reads the same checkpoint blocks.
           val iso = caller.newSession()
           caller.conf.getAll.foreach { case (k, v) =>
             if (iso.conf.isModifiable(k) && iso.conf.getOption(k) != Some(v))
@@ -200,16 +199,15 @@ object PageRank {
   private val viewIds = new java.util.concurrent.atomic.AtomicLong
 
   /** The distributed iteration, on the ISO session: `pairs` is the
-    * already-collapsed (and persisted) weighted pair frame, re-analyzed on
+    * already-collapsed (and pinned) weighted pair frame, re-analyzed on
     * the session whose confs are scoped for the iteration (tolPico: the
     * convergence threshold in exact pico-units — floor: any delta strictly
     * below tol·Unit stops; the comparison itself is integer-exact). */
   private def runScoped(pairs: DataFrame, iterations: Int, damping: Double,
       tolPico: Option[Long]): (DataFrame, Int) = scoped {
     // leaving the scope frees stateBase, eP and the final cut, all AFTER
-    // the result below is materialized (the cache-leak class the round-5
-    // ADVICE flagged on IVF-PQ): what remains cached is exactly one O(|V|)
-    // block backing the returned frame
+    // the result below is materialized: what remains pinned is exactly one
+    // O(|V|) block backing the returned frame
     val (stateBase, eP, n) = prepareFromPairs(pairs,
       pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     if (n == 0)
@@ -245,7 +243,7 @@ object PageRank {
           if (d <= tp) converged = true
         }
         // release the superseded round's blocks IMMEDIATELY: round k+1 reads
-        // only cut k, so live cached state stays at 2 × O(|V|), not K ×
+        // only cut k, so live pinned state stays at 2 × O(|V|), not K ×
         // (eager cut ⇒ cut k is fully materialized before cut k−1 goes)
         prevCut.foreach(release)
         prevCut = Some(c)
@@ -343,8 +341,8 @@ object PageRank {
     * hash-partitioned by `node`; `eP` = (src, dst, w) hash-partitioned by
     * `src`; both pinned to the session shuffle-partition count (explicit
     * count ⇒ AQE never coalesces a REPARTITION_BY_NUM exchange) so the two
-    * per-round joins are exchange-free. Both frames are cached and
-    * materialized, and belong to the caller's scope. Also returns |V|. */
+    * per-round joins are exchange-free. Both frames are [[cut]] pins and
+    * belong to the caller's scope. Also returns |V|. */
   private[graft] def prepare(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst"): (DataFrame, DataFrame, Long) = {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -357,29 +355,28 @@ object PageRank {
     // O(|E|) to O(|distinct pairs|); a simple graph has w=1 everywhere and
     // pays only this one extra upfront exchange, which the iteration
     // amortizes. (Under run() the collapse is the small-path PROBE and its
-    // cache is handed to prepareFromPairs directly.)
+    // pin is handed to prepareFromPairs directly.)
     scoped {
-      val pairs = cache(
+      val pairs = pin(
         e0.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
-      pairs.count()
       prepareFromPairs(pairs,
         edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     }
   }
 
   /** The node-co-partitioned layout from an already-collapsed (and
-    * persisted) weighted pair frame. `numP` is the CURRENT session
+    * pinned) weighted pair frame. `numP` is the CURRENT session
     * shuffle-partition count — under run() that is the data-sized scoped
     * value — so the explicit repartitions here and every per-round groupBy
     * land on the same partitioning and no round needs a requirement
     * re-shuffle. */
   private def prepareFromPairs(pairs: DataFrame,
       numP: Int): (DataFrame, DataFrame, Long) = {
-    val eP = materialize(pairs.repartition(numP, col("src")))
+    val eP = cut(pairs.repartition(numP, col("src")))
     val nodes = eP.select(col("src").as("node"))
       .unionByName(eP.select(col("dst").as("node"))).distinct()
     val deg = eP.groupBy(col("src").as("node")).agg(sum(col("w")).as("deg"))
-    val stateBase = materialize(nodes.join(deg, Seq("node"), "left")
+    val stateBase = cut(nodes.join(deg, Seq("node"), "left")
       .repartition(numP, col("node")))
     (stateBase, eP, stateBase.count())
   }
@@ -443,30 +440,22 @@ object PageRank {
     }
   }
 
-  /** Cache + eagerly materialize. The cached plan's `InMemoryTableScan`
-    * reports the frame's real hash partitioning to downstream joins (which
-    * a localCheckpoint under AQE would lose — see class doc). */
-  private[graft] def materialize(df: DataFrame): DataFrame = {
-    val c = cache(df)
-    c.count()
-    c
-  }
-
-  /** Truncate the lineage of an iterated frame without losing its hash
-    * partitioning: an eager localCheckpoint executed with AQE scoped off.
-    * `PlanAuditSpec` pins the post-cut round at ≤1 data exchange. */
+  /** Pin a frame without losing its hash partitioning: an eager
+    * localCheckpoint executed with AQE scoped off. Used for the static
+    * frames and the per-round state; `PlanAuditSpec` pins the rounds over
+    * them at ≤1 data exchange. */
   private[graft] def cut(df: DataFrame): DataFrame = {
-    // Scope AQE off for the chain materialization, for two reasons:
+    // Scope AQE off for the materialization, for two reasons:
     //  - capture: `localCheckpoint` records the physical plan's
     //    outputPartitioning into its LogicalRDD, and under AQE the
     //    AdaptiveSparkPlanExec wrapper reports UnknownPartitioning — the
     //    cut frame would forget its layout and re-shuffle every round;
-    //  - latency: AQE materializes every exchange (and every cache read —
-    //    TableCacheQueryStage) as its own scheduled stage; a 5-round chain
+    //  - latency: AQE materializes every exchange as its own scheduled
+    //    stage; a 5-round chain
     //    is ~90 such stages of a few KB each, all scheduling latency. The
     //    non-adaptive plan pipelines them inside one job.
-    // The plans in the chain are explicit co-partitioned joins over pinned
-    // partition counts — exactly the shape AQE would leave alone anyway.
+    // The plans are explicit repartitions and co-partitioned joins over
+    // pinned partition counts — exactly the shape AQE would leave alone.
     val conf = df.sparkSession.conf
     val key = "spark.sql.adaptive.enabled"
     val prev = conf.get(key)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
-import graft.Checkpoints.{cache, scoped}
+import graft.Checkpoints.{pin, scoped}
 
 /** Exact per-group interpolated percentiles (percentile_cont semantics) as
   * distributed two-pass order statistics.
@@ -170,7 +170,7 @@ object Percentiles {
               graft.GraftSession.frameSizedPartitions(vals))
     // leaving the scope frees `sorted`; the result is a local relation
     scoped {
-      val sorted = cache(vals
+      val sorted = pin(vals
         .repartitionByRange(p, col("__g"), col("__v"))
         .sortWithinPartitions("__g", "__v"))
       // one RDD handle for both scans: identical partition ids by

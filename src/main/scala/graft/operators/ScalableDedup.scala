@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.{cache, pin, scoped}
+import graft.Checkpoints.{pin, scoped}
 
 /** Semantic near-dup detection at scale through the [[IvfPq]] index: the
   * embedding-pair candidate generator that complements the oracle-exact
@@ -237,11 +237,11 @@ object ScalableDedup {
       maxSqDistance)
   }
 
-  /** [[imiPairs]] over `vecs` staged with their probe lists, materialized;
-    * the staged frame is freed on leaving the scope. */
+  /** [[imiPairs]] over `vecs` staged (pinned) with their probe lists,
+    * materialized; the staged frame is freed on leaving the scope. */
   private def probedPairs(vecs: DataFrame, model: Imi.Model, nProbe: Int,
       maxSqDistance: Double): DataFrame = scoped {
-    val withProbes = cache(vecs
+    val withProbes = pin(vecs
       .select(col("vec_id"), col("embedding"),
         Imi.probesUdf(model, nProbe)(col("embedding")).as("probes")))
     pin(imiPairs(withProbes, maxSqDistance))

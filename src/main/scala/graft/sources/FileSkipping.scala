@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 /** **File-level min-max data skipping** — the Delta/Iceberg capability
   * re-expressed over plain parquet directories: per-file column bounds let a
@@ -103,22 +104,26 @@ object FileSkipping {
       if (dirs.length >= ParallelListThreshold) {
         // distributed listing: each task recursively lists a slice of the
         // partition dirs; only (path, length) pairs come back to the driver
-        val box = new ConfBox(conf)
-        val bc = spark.sparkContext.broadcast(box)
-        val slices = math.max(1,
-          math.min(dirs.length, spark.sparkContext.defaultParallelism * 2))
-        val listed = spark.sparkContext
-          .parallelize(dirs.map(_.getPath.toString).toSeq, slices)
-          .mapPartitions { it =>
-            val c = bc.value.conf
-            it.flatMap(d => dataFilesUnder(c, d, parquetOnly))
-          }
-          .collect().toSeq
-        bc.destroy()
-        listed
+        onFiles(spark, dirs.map(_.getPath.toString).toSeq)(
+          (c, d) => dataFilesUnder(c, d, parquetOnly))
       } else dirs.toSeq.flatMap(d =>
         dataFilesUnder(conf, d.getPath.toString, parquetOnly))
     topFiles ++ nested
+  }
+
+  /** One Spark job over `items` (file or directory paths, with whatever
+    * rides along): up to 2 × defaultParallelism slices, each task applying
+    * `f` with the driver's Hadoop configuration, shipped once as a
+    * broadcast and destroyed when the results are back. */
+  private def onFiles[A: ClassTag, B: ClassTag](spark: SparkSession, items: Seq[A])(
+      f: (Configuration, A) => IterableOnce[B]): Seq[B] = {
+    val sc = spark.sparkContext
+    val bc = sc.broadcast(new ConfBox(sc.hadoopConfiguration))
+    val slices = math.max(1, math.min(items.size, sc.defaultParallelism * 2))
+    try sc.parallelize(items, slices)
+      .mapPartitions { it => val conf = bc.value.conf; it.flatMap(f(conf, _)) }
+      .collect().toSeq
+    finally bc.destroy()
   }
 
   /** Hadoop Configuration is Writable but not Serializable; this 10-line
@@ -319,17 +324,9 @@ object FileSkipping {
       cols.exists(c => !statsCache.containsKey((f, l, c)))
     }
     if (missing.nonEmpty) {
-      val box = new ConfBox(spark.sparkContext.hadoopConfiguration)
-      val bc = spark.sparkContext.broadcast(box)
-      val slices = math.max(1,
-        math.min(missing.size, spark.sparkContext.defaultParallelism * 2))
-      val rows = spark.sparkContext.parallelize(missing, slices)
-        .mapPartitions { it =>
-          val conf = bc.value.conf
-          it.flatMap { case (file, len) => footerStatsAll(conf, file, len, cols) }
-        }
-        .collect()
-      bc.destroy()
+      val rows = onFiles(spark, missing) { case (conf, (file, len)) =>
+        footerStatsAll(conf, file, len, cols)
+      }
       rows.foreach { case (c, st) => statsCache.put((st.file, st.length, c), st) }
     }
     for { (f, l) <- files; c <- cols; st <- Option(statsCache.get((f, l, c))) }
@@ -561,33 +558,23 @@ object FileSkipping {
       lo: Any, hi: Any): (Seq[String], Seq[String]) = {
     val (kept0, pruned0) = prunedFiles(spark, path, column, lo, hi)
     if (kept0.isEmpty) return (kept0, pruned0)
-    val box = new ConfBox(spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(box)
-    val (col0, l, h) = (column, lo, hi)
-    val slices = math.max(1,
-      math.min(kept0.size, spark.sparkContext.defaultParallelism * 2))
-    val decided = spark.sparkContext.parallelize(kept0, slices)
-      .mapPartitions { it =>
-        val conf = bc.value.conf
-        it.map { f =>
-          val reader = ParquetFileReader.open(
-            HadoopInputFile.fromPath(new Path(f), conf))
-          val may =
-            try reader.getFooter.getBlocks.asScala.exists { block =>
-              block.getColumns.asScala
-                .find(_.getPath.toDotString == col0) match {
-                case None => true // column absent: cannot rule out
-                case Some(chunk) =>
-                  dictionaryAnyInRange(reader, block, chunk, l, h)
-                    .getOrElse(true)
-              }
-            } finally reader.close()
-          (f, may)
-        }
-      }.collect()
-    bc.destroy()
+    val decided = onFiles(spark, kept0) { (conf, f) =>
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new Path(f), conf))
+      val may =
+        try reader.getFooter.getBlocks.asScala.exists { block =>
+          block.getColumns.asScala
+            .find(_.getPath.toDotString == column) match {
+            case None => true // column absent: cannot rule out
+            case Some(chunk) =>
+              dictionaryAnyInRange(reader, block, chunk, lo, hi)
+                .getOrElse(true)
+          }
+        } finally reader.close()
+      Some((f, may))
+    }
     val (kept, prunedMore) = decided.partition(_._2)
-    (kept.map(_._1).toSeq, pruned0 ++ prunedMore.map(_._1))
+    (kept.map(_._1), pruned0 ++ prunedMore.map(_._1))
   }
 
   /** Range scan through stats + dictionary pruning; result is exactly
@@ -607,20 +594,11 @@ object FileSkipping {
       value: Any): (Seq[String], Seq[String]) = {
     val files = listDataFiles(spark, path)
     if (files.isEmpty) return (Seq.empty, Seq.empty)
-    val box = new ConfBox(spark.sparkContext.hadoopConfiguration)
-    val bc = spark.sparkContext.broadcast(box)
-    val v = value
-    val col0 = column
-    val slices = math.max(1,
-      math.min(files.size, spark.sparkContext.defaultParallelism * 2))
-    val decided = spark.sparkContext.parallelize(files, slices)
-      .mapPartitions { it =>
-        val conf = bc.value.conf
-        it.map { case (f, _) => (f, fileMayContain(conf, f, col0, v)) }
-      }.collect()
-    bc.destroy()
+    val decided = onFiles(spark, files) { case (conf, (f, _)) =>
+      Some((f, fileMayContain(conf, f, column, value)))
+    }
     val (kept, pruned) = decided.partition(_._2)
-    (kept.map(_._1).toSeq, pruned.map(_._1).toSeq)
+    (kept.map(_._1), pruned.map(_._1))
   }
 
   /** Point-lookup scan: opens only files whose stats/bloom admit the value;

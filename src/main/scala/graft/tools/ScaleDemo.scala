@@ -3,7 +3,7 @@ package graft.tools
 import graft.GraftSession
 import graft.bdb._
 import org.apache.spark.sql.functions._
-import graft.Checkpoints.cache
+import graft.Checkpoints.pin
 
 /** Reference-scale throughput demo: generates a synthetic season at the
   * reference's data scale (~4.9 M pre-throw player-frames; BASELINE.md row 1)
@@ -27,22 +27,19 @@ object ScaleDemo {
     // 272 games × 52 plays × 14 players × ~30 frames ≈ 5.9M rows (reference:
     // 4.88M rows, 272 games, 14,108 plays)
     val tracking = timed("generate+materialize tracking") {
-      val t = cache(Synth.tracking(spark, nGames = 272, playsPerGame = 52)
+      val t = pin(Synth.tracking(spark, nGames = 272, playsPerGame = 52)
         .repartition(32, col("game_id"), col("play_id")))
       println(s"[scale] rows: ${t.count()}")
       t
     }
-    val supp = cache(Synth.supplementary(tracking))
-    supp.count()
+    val supp = pin(Synth.supplementary(tracking))
 
     val frames = timed("normalize + kinematics (full season)") {
-      val f = cache(Kinematics.addDirectionChange(
+      pin(Kinematics.addDirectionChange(
         Kinematics.addFrameIndex(
           Kinematics.addBallGeometry(
             Kinematics.addVelocity(
               Normalize.notebookStyle(tracking))))))
-      f.count()
-      f
     }
 
     timed("nearest-defender separation (ref: 'may take a minute')") {

@@ -7,28 +7,22 @@ class CheckpointsSpec extends SparkSpec {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** A frame whose plan no other test caches (`cache` of an equal plan
-    * would reuse the existing entry). */
-  private val ids = new java.util.concurrent.atomic.AtomicInteger
-  private def frame(): DataFrame =
-    spark.range(0, 50, 1, 2).selectExpr(s"id * ${ids.incrementAndGet()} AS v")
+  private def frame(): DataFrame = spark.range(0, 50, 1, 2).selectExpr("id * 3 AS v")
 
-  test("scoped releases its pins and caches on normal exit and on a throw") {
+  test("scoped releases its pins on normal exit and on a throw") {
     val before = persisted
     val n = scoped {
       pin(frame())
-      val c = cache(frame())
-      c.count()
+      val p = pin(frame())
       assert(persisted.size == before.size + 2)
-      c.count()
+      p.count()
     }
     assert(n == 50)
     assert(persisted == before)
     intercept[IllegalStateException] {
       scoped {
         pin(frame())
-        cache(frame()).count()
-        cache(spark.sparkContext.parallelize(1 to 10)).count()
+        pin(frame()).count()
         throw new IllegalStateException("boom")
       }
     }
@@ -39,31 +33,35 @@ class CheckpointsSpec extends SparkSpec {
     "scope frees it") {
     val before = persisted
     scoped {
-      val (lazyOverPin, lazyOverCache) = scoped {
+      val (lazyOverPin, lazyOverJoin) = scoped {
         val p = pin(frame())
-        val c = cache(frame())
-        c.count()
+        val q = pin(frame())
         pin(frame()) // not read by the result: freed at the inner exit
-        (p.limit(25), c.limit(25))
+        (p.limit(25), q.join(frame(), "v").limit(25))
       }
       assert(persisted.size == before.size + 2)
       assert(lazyOverPin.count() == 25)
-      assert(lazyOverCache.count() == 25)
+      assert(lazyOverJoin.count() == 25)
       assert(persisted.size == before.size + 2)
     }
     assert(persisted == before)
   }
 
-  test("release frees a pinned and a cached frame at once") {
+  test("release frees a pin at once; other frames are left alone") {
     val before = persisted
     val p = pin(frame())
     assert(persisted.size == before.size + 1)
+    release(frame())
+    release(p.filter("v > 3"))
+    assert(persisted.size == before.size + 1)
     release(p)
     assert(persisted == before)
-    val c = cache(frame())
-    c.count()
-    assert(persisted.size == before.size + 1)
-    release(c)
+    scoped {
+      val q = pin(frame())
+      release(q)
+      assert(persisted == before)
+      pin(frame()).count()
+    }
     assert(persisted == before)
   }
 

@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One owner per mechanism in main sources: `graft.Checkpoints` is the one
   * place that pins or frees a frame (no other main source calls
   * `localCheckpoint`, `persist`, `cache` or `unpersist` directly: each such
-  * call is a pin with no owner), `graft.StageMeter` is the one Spark
+  * call is a pin with no owner), and it holds frames only as pins (it calls
+  * no `persist` or `cache`, whose entries keep their executed plans and
+  * broadcasts alive), `graft.StageMeter` is the one Spark
   * listener (each other listener is a meter that guesses when the
   * listener bus is done), `graft.bdb.GbtModel`'s single-task booster is
   * the one GBT (no MLlib regressor path beside it),
@@ -39,12 +41,18 @@ class PinSitesSpec extends AnyFunSuite {
     assert(hits.isEmpty, s"direct pin/unpin calls outside Checkpoints:\n${hits.mkString("\n")}")
   }
 
+  test("graft/Checkpoints.scala holds frames only as pins: no persist or cache") {
+    val src = Files.readAllLines(Paths.get("src/main/scala/graft/Checkpoints.scala")).asScala
+    val hits = src.filter("""\bpersist\(|\.cache\(|InMemoryRelation""".r.findFirstIn(_).nonEmpty)
+    assert(hits.isEmpty, s"persist/cache calls in Checkpoints:\n${hits.mkString("\n")}")
+  }
+
   /** Every broadcast variable main makes, with its release rule: per file,
     * how many `.broadcast(` calls, and whether the file destroys each one
     * at the end of its own work or hands it to the frame or stream it
     * returns (freed by the ContextCleaner once that is dropped). */
   private val broadcastSites: Map[String, (Int, String)] = Map(
-    "src/main/scala/graft/sources/FileSkipping.scala" -> (4 -> "destroyed"),
+    "src/main/scala/graft/sources/FileSkipping.scala" -> (1 -> "destroyed"),
     "src/main/scala/graft/ml/LstmTrainer.scala" -> (2 -> "destroyed"),
     "src/main/scala/graft/operators/Percentiles.scala" -> (2 -> "destroyed"),
     "src/main/scala/graft/ml/KerasLstm.scala" -> (1 -> "captured"),

@@ -48,6 +48,20 @@ class HeavyHittersSpec extends SparkSpec {
     }
   }
 
+  test("capacity: m counters at most; an overflowing insert decrements") {
+    // 100 distinct keys, each followed by key 0: n = 200, key 0 holds 100 > n/(m+1)
+    val items = (1L to 100L).flatMap(k => Seq(k, 0L))
+    val m = 2
+    val s = sketchOf(items, m)
+    assert(s.counters.size <= m, s"${s.counters.size} counters for m = $m")
+    assert(s.decrements > 0, "no insert ever overflowed the counters")
+    val n = items.size.toLong
+    val exact = items.groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val heavy = exact.filter(_._2 > n / (m + 1)).keys
+    assert(heavy.nonEmpty)
+    heavy.foreach(k => assert(s.counters.containsKey(k), s"heavy key $k missing from sketch"))
+  }
+
   test("merge: any split of the stream keeps the composed bounds") {
     val rnd = new scala.util.Random(23)
     val items = (0 until 9000).map { i =>

@@ -1,18 +1,21 @@
 package graft.queries
 
 import graft.{Checkpoints, SparkSpec}
+import org.apache.spark.sql.graft.BlockStats
 
-/** Running a query again in one driver must not pile up cached blocks: each
-  * run of a headline query, or of a query whose builder pins or caches,
-  * inside one `Checkpoints.scoped` block that also consumes its output,
-  * leaves the persistent-RDD set exactly as it found it. Three runs per
-  * query, in one session, at sf0.001. */
+/** Running a query again in one driver must not pile up held blocks: each
+  * run of a headline query, or of a query whose builder pins, inside one
+  * `Checkpoints.scoped` block that also consumes its output, leaves the
+  * persistent-RDD set and Spark's CacheManager exactly as it found them
+  * (the engine caches nothing; the entry count is compared, not asserted
+  * zero, because specs sharing the session cache their own fixtures).
+  * Three runs per query, in one session, at sf0.001. */
 class PinLeakSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  /** Registry queries outside the headline set whose builders pin or cache
-    * (found by running every registry query once and watching for RDDs
-    * persisted and unpersisted during the run). All of them are here: with
+  /** Registry queries outside the headline set whose builders pin (found
+    * by running every registry query once and watching for RDDs persisted
+    * and unpersisted during the run). All of them are here: with
     * every k-means fit one job, the whole spec runs in 57 s on 4 vCPUs. */
   private val pinning = Seq("a12_having_global", "a_percentiles",
     "a_approx_quantiles", "p_winsorize", "e_pagerank_converged",
@@ -36,11 +39,12 @@ class PinLeakSpec extends SparkSpec {
       Registry.all.find(_.name == n).getOrElse(fail(s"$n is not in the registry"))))
       .filterNot(q => skipped(q.name))
     val leaks = for (q <- queries; run <- 1 to 3) yield {
-      val before = sc.getPersistentRDDs.keySet.toSet
+      val (before, entries) = (sc.getPersistentRDDs.keySet.toSet, BlockStats.cacheEntries(spark))
       Checkpoints.scoped(q.run(spark, dir).collect())
       val after = sc.getPersistentRDDs.keySet.toSet
-      Option.when(after != before)(s"${q.name} run $run: left ${(after -- before).size}, " +
-        s"freed ${(before -- after).size} it did not pin")
+      val cached = BlockStats.cacheEntries(spark) - entries
+      Option.when(after != before || cached != 0)(s"${q.name} run $run: left ${(after -- before).size}, " +
+        s"freed ${(before -- after).size} it did not pin, $cached CacheManager entries added")
     }
     assert(leaks.flatten.isEmpty, leaks.flatten.mkString("\n"))
   }

@@ -231,7 +231,7 @@ class PlanAuditSpec extends SparkSpec {
             round2.map(_.nodeName).mkString(", "))
       } finally graft.Checkpoints.release(cp)
     } finally {
-      Seq(stateBase, eP).foreach(_.unpersist(false))
+      Seq(stateBase, eP).foreach(graft.Checkpoints.release)
       bcastSaved.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions.{col, lit}
 /** Shuffle-partition derivation (r15 VERDICT #3): the session sizes
   * `spark.sql.shuffle.partitions` from the input corpus's on-disk bytes —
   * ~8 MiB of compressed parquet per partition (≈ the standard 128 MB of
-  * in-flight rows) — replacing the manual SPARK_GRAFT_SHUFFLE_PARTITIONS
-  * env knob the r15 scale audit needed to keep d_dup_spans linear at 100×.
+  * in-flight rows), with no override: the derivation replaced the manual
+  * partition count the r15 scale audit needed to keep d_dup_spans linear
+  * at 100×.
   * Pure functions; only the codegen-cache cases use the shared session.
   */
 class GraftSessionSpec extends SparkSpec {
