@@ -17,8 +17,8 @@ import graft.queries.Exact
   *  - [[GbtModel]]: squared-error gradient-boosted trees on the same
   *    per-frame features, fit in one Spark task — no sequence memory, but
   *    residual metrics stay well-defined and the fit stays one Spark query.
-  *  - External LSTM parity runs against the padded sequence table from
-  *    [[Sequences]] exported to Parquet — explicitly outside the core.
+  *  - [[LstmModel]] / [[TrainedLstmModel]]: the reference LSTM, scored (and
+  *    trained) in-engine over the [[Sequences]] table.
   *
   * All implementations add `predicted_converge_rate` and `residual`
   * (= actual − predicted, reference: metrics.py residual convention).
@@ -34,8 +34,8 @@ trait ConvergenceModel {
 
 /** In-engine forward-pass inference over the reference's committed Keras
   * weights (reference: models.py:24-67 architecture; artifacts saved at
-  * BDB_2026.ipynb cell 107): pad sequences with [[Sequences.build]], run the
-  * float32 LSTM forward pass ([[graft.ml.KerasLstm]] — weights read straight
+  * BDB_2026.ipynb cell 107): build sequences with [[Sequences.buildFlat]],
+  * run the float32 LSTM forward pass ([[graft.ml.KerasLstm]] — weights read straight
   * from the `.h5` by the pure-JVM [[graft.ml.H5Lite]]), and join the
   * per-frame predictions back positionally (the reference renumbers
   * post-throw frames 1..L in its predictions CSV — `frame_idx` is the rank
@@ -58,7 +58,7 @@ final class LstmModel(modelPath: String, features: Seq[String],
     LstmScoring.scoreAndAttach(frames, frames, features, model, maxLen)
 }
 
-/** Shared LSTM serving path: build padded sequences from `featFrames`
+/** Shared LSTM serving path: build float32 sequences from `featFrames`
   * (the caller's possibly-standardized view of `frames`), score them with
   * the float32 forward pass, and join the per-frame predictions back to
   * `frames` positionally. */
@@ -67,9 +67,10 @@ private[bdb] object LstmScoring {
       features: Seq[String], model: graft.ml.KerasLstm.Model,
       maxLen: Int, unscale: DataFrame => DataFrame = identity): DataFrame = {
     val keys = Schemas.trajectoryKeys
-    val seqs = Sequences.build(featFrames, features, maxLen)
-    val preds = unscale(graft.ml.KerasLstm.scoreSequences(seqs, model, keys))
-    // Sequences.build keeps the LAST maxLen frames, so seq position 1 is
+    val seqs = Sequences.buildFlat(featFrames, features, maxLen,
+      valueType = "float")
+    val preds = unscale(graft.ml.KerasLstm.scoreFlat(seqs, model, keys))
+    // buildFlat keeps the LAST maxLen frames, so seq position 1 is
     // frame rank (L - maxLen + 1) on long trajectories: shift the rank;
     // truncated head frames get frame_idx <= 0 → no match → null prediction.
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)
@@ -135,7 +136,7 @@ object TrainedLstmModel {
     val labelMean = r.getDouble(2 * features.size)
     val labelStd = math.max(r.getDouble(2 * features.size + 1), 1e-9)
 
-    def prep(df: DataFrame): DataFrame = Sequences.build(
+    def prep(df: DataFrame): DataFrame = Sequences.buildFlat(
       standardize(df, features, featMean, featStd)
         .withColumn(labelCol, (col(labelCol) - labelMean) / labelStd),
       features :+ labelCol, maxLen)

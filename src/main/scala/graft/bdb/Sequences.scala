@@ -1,173 +1,58 @@
 package graft.bdb
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Padded fixed-length sequence assembly for sequence models (SURVEY §2.5 W10;
+/** Per-trajectory sequence assembly for sequence models (SURVEY §2.5 W10;
   * reference: bdb2026/sequences.py:21-88 builds dense (N, 25, F) NumPy tensors).
   *
-  * Kept relational: one row per trajectory with
-  * `seq: array<array<double>>` (length exactly `maxLen`, zero-padded at the
-  * tail, truncated to the *last* maxLen frames) plus the true length and a
-  * parallel mask. Downstream consumers (export for an external trainer, or the
-  * MLlib per-frame model in [[Model]]) read it without leaving Spark — no
-  * driver-side collect, so it scales with the cluster.
+  * Kept relational and de-padded: one row per trajectory with the key
+  * columns, `seq_len` (the number of frames kept, at most `maxLen`) and
+  * `flat` (the features of the LAST `maxLen` frames, in frame order,
+  * concatenated: `seq_len × F` elements). There is no zero padding and no
+  * mask — `seq_len` says where each sequence ends, so the LSTM scorer
+  * ([[graft.ml.KerasLstm.scoreFlat]]) and trainer
+  * ([[graft.ml.LstmTrainer.train]]) read the table as it is, without
+  * collecting it, and it scales with the cluster.
   */
 object Sequences {
 
   /** @param frames   ordered-frame table with the feature columns present
-    * @param features per-frame feature column names (F)
-    * @param maxLen   pad/truncate length (reference: max_len=25)
-    * @param valueType element type of the per-frame feature arrays —
-    *                  "double" (default, the reference contract) or
-    *                  "float". Float HALVES the bytes the collect_list
-    *                  exchange ships; a float32 consumer (KerasLstm — the
-    *                  reference's own tensor dtype) sees bit-identical
-    *                  values because float→double→float round-trips
-    *                  exactly.
+    * @param features per-frame feature column names (F); a single name
+    *                 that is ALREADY an array column is taken as the
+    *                 pre-packed per-frame vector
+    * @param maxLen   truncation length (reference: max_len=25)
+    * @param valueType element type of `flat` — "double" (default; the
+    *                  trainer's precision) or "float" (the scorer's: the
+    *                  reference's own tensor dtype). Float HALVES the
+    *                  bytes the collect_list exchange ships.
     */
-  def build(frames: DataFrame, features: Seq[String], maxLen: Int = 25,
+  def buildFlat(frames: DataFrame, features: Seq[String], maxLen: Int = 25,
       valueType: String = "double"): DataFrame = {
-    val (collected, packed) = collectedSorted(frames, features, valueType)
-    val zeroLit = if (valueType == "float") "CAST(0.0 AS FLOAT)" else "0.0d"
-    // pad width: static for named features; from the (always present) first
-    // kept frame for the packed form — a trajectory group has >= 1 frame
-    val padWidth = if (packed) "size(element_at(kept, 1))"
-      else features.size.toString
-    collected
-      .withColumn("seq_len", least(size(col("sorted")), lit(maxLen)))
-      // keep the LAST maxLen frames (reference: sequences.py tail-keep), then
-      // zero-pad the tail up to maxLen.
-      .withColumn("kept", expr(s"slice(sorted, greatest(size(sorted) - $maxLen + 1, 1), $maxLen)"))
-      // NB: Spark sequence(1, 0) counts DOWN ([1,0]) — guard the full case.
-      .withColumn("pad", expr(
-        s"""CASE WHEN size(kept) >= $maxLen THEN slice(kept, 1, 0)
-           |ELSE transform(sequence(1, $maxLen - size(kept)), i -> array_repeat($zeroLit, $padWidth))
-           |END""".stripMargin))
-      .withColumn("seq", concat(col("kept"), col("pad")))
-      .withColumn("mask", expr(
-        s"transform(sequence(1, $maxLen), i -> CASE WHEN i <= size(kept) THEN 1.0d ELSE 0.0d END)"))
-      .select(Schemas.trajectoryKeys.map(col) ++
-        Seq(col("seq_len"), col("seq"), col("mask")): _*)
-  }
-
-  /** The grouped, frame-id-sorted per-trajectory feature arrays shared by
-    * [[build]] and [[buildFlat]]: one collect_list exchange, deterministic
-    * in-array sort. Returns (frame, packed?) where `sorted` holds the
-    * per-frame feature arrays in frame order. */
-  private def collectedSorted(frames: DataFrame, features: Seq[String],
-      valueType: String): (DataFrame, Boolean) = {
     require(valueType == "double" || valueType == "float",
       s"valueType must be double or float, got $valueType")
-    // A single feature name that is ALREADY an array column is taken as the
-    // pre-packed per-frame vector. The distinction is bytes on the wire:
-    // N top-level columns occupy 8-byte UnsafeRow slots EACH regardless of
-    // declared type, while a packed array<float> stores 4-byte elements —
-    // pack before the exchange and the shuffle payload roughly halves
-    // again. Semantics identical (same values in frame order).
+    // The packed form is about bytes on the wire: N top-level columns
+    // occupy 8-byte UnsafeRow slots EACH regardless of declared type, while
+    // a packed array<float> stores 4-byte elements — pack before the
+    // exchange and the shuffle payload roughly halves again. Semantics
+    // identical (same values in frame order).
     val packed = features.size == 1 &&
       frames.schema(features.head).dataType
         .isInstanceOf[org.apache.spark.sql.types.ArrayType]
     val featArr =
       if (packed) col(features.head).cast(s"array<$valueType>")
       else array(features.map(col(_).cast(valueType)): _*)
-    val collected = frames
+    frames
       .groupBy(Schemas.trajectoryKeys.map(col): _*)
       .agg(collect_list(struct(col("frame_id"), featArr.as("f"))).as("raw"))
       // collect_list order is nondeterministic across partitions → sort by
       // frame_id inside the array (deterministic, no extra shuffle).
       .withColumn("sorted", expr("transform(array_sort(raw), x -> x.f)"))
-      .drop("raw")
-    (collected, packed)
-  }
-
-  /** The DE-PADDED flat form [[graft.ml.KerasLstm.scoreFlat]] consumes:
-    * key columns + `seq_len` + `flat` (the last `maxLen` frames' features
-    * concatenated, NO zero padding, NO mask). Bit-identical to
-    * `flatten(slice(build(...).seq, 1, seq_len))` — the padded form's
-    * `seq` is `kept ++ pad` with `seq_len = size(kept)`, so slicing to
-    * seq_len recovers exactly `kept` (SequencesSpec pins the equality).
-    * Exists because the inference path pays the pad/mask build per
-    * trajectory (array_repeat allocations + a concat the consumer
-    * immediately slices off — interpreted HOFs, guide §4) only to discard
-    * it; train/export consumers that need the dense (N, maxLen, F) tensor
-    * contract keep using [[build]]. */
-  def buildFlat(frames: DataFrame, features: Seq[String], maxLen: Int = 25,
-      valueType: String = "double"): DataFrame = {
-    val (collected, _) = collectedSorted(frames, features, valueType)
-    collected
       .withColumn("seq_len", least(size(col("sorted")), lit(maxLen)))
-      // keep the LAST maxLen frames (the build contract), flattened
+      // keep the LAST maxLen frames (reference: sequences.py tail-keep)
       .withColumn("flat", flatten(expr(
         s"slice(sorted, greatest(size(sorted) - $maxLen + 1, 1), $maxLen)")))
       .select(Schemas.trajectoryKeys.map(col) ++
         Seq(col("seq_len"), col("flat")): _*)
-  }
-
-  // ---- typed-Aggregator variant (SURVEY §2.9 candidate (a)) ----
-
-  final case class FrameIn(game_id: Long, play_id: Long, nfl_id: Long,
-      frame_id: Long, f: Seq[Double])
-  final case class SeqBuf(frames: Seq[(Long, Seq[Double])])
-  final case class Padded(game_id: Long, play_id: Long, nfl_id: Long,
-      seq_len: Int, seq: Seq[Seq[Double]], mask: Seq[Double])
-
-  /** The padded-sequence assembly as ONE typed aggregate with map-side
-    * partial aggregation: each mapper keeps at most `maxLen` frames per
-    * trajectory in the buffer (frames beyond the tail window can be pruned
-    * eagerly only after sort — we keep all and prune at merge to stay exact
-    * for out-of-order input), so the shuffle carries bounded buffers rather
-    * than every raw frame. Alternative to the collect_list+slice form in
-    * [[build]]; same output contract.
-    */
-  def aggregator(nFeatures: Int, maxLen: Int): Aggregator[FrameIn, SeqBuf, (Int, Seq[Seq[Double]], Seq[Double])] =
-    new Aggregator[FrameIn, SeqBuf, (Int, Seq[Seq[Double]], Seq[Double])] {
-      private def prune(fs: Seq[(Long, Seq[Double])]) =
-        if (fs.size <= maxLen) fs else fs.sortBy(_._1).takeRight(maxLen)
-      override def zero: SeqBuf = SeqBuf(Nil)
-      override def reduce(b: SeqBuf, a: FrameIn): SeqBuf =
-        SeqBuf(prune(b.frames :+ (a.frame_id, a.f)))
-      override def merge(b1: SeqBuf, b2: SeqBuf): SeqBuf =
-        SeqBuf(prune(b1.frames ++ b2.frames))
-      override def finish(r: SeqBuf): (Int, Seq[Seq[Double]], Seq[Double]) = {
-        val kept = r.frames.sortBy(_._1).takeRight(maxLen).map(_._2)
-        val pad = Seq.fill(maxLen - kept.size)(Seq.fill(nFeatures)(0.0))
-        val mask = Seq.fill(kept.size)(1.0) ++ Seq.fill(maxLen - kept.size)(0.0)
-        (kept.size, kept ++ pad, mask)
-      }
-      override def bufferEncoder: Encoder[SeqBuf] = Encoders.product[SeqBuf]
-      override def outputEncoder: Encoder[(Int, Seq[Seq[Double]], Seq[Double])] =
-        Encoders.product[(Int, Seq[Seq[Double]], Seq[Double])]
-    }
-
-  /** Export contract for an EXTERNAL sequence model (SURVEY §7.7c — the LSTM
-    * parity path lives outside the Spark-native core): writes the padded
-    * sequence table + per-frame labels to parquet. A trainer consumes
-    * `sequences/`, writes back a predictions table keyed
-    * (game_id, play_id, frame_id, predicted_converge_rate), and
-    * [[graft.bdb.StubModel]] re-enters the pipeline with it.
-    */
-  def export(frames: DataFrame, features: Seq[String], path: String,
-      labelCol: String = "converge_rate", maxLen: Int = 25): Unit = {
-    build(frames, features, maxLen)
-      .write.mode("overwrite").parquet(s"$path/sequences")
-    frames.select(Schemas.frameKeys.map(col) :+ col(labelCol): _*)
-      .write.mode("overwrite").parquet(s"$path/labels")
-  }
-
-  /** Typed-path equivalent of [[build]]. */
-  def buildTyped(frames: DataFrame, features: Seq[String], maxLen: Int = 25): DataFrame = {
-    val spark = frames.sparkSession
-    import spark.implicits._
-    val ds = frames.select(col("game_id"), col("play_id"), col("nfl_id"),
-      col("frame_id"),
-      array(features.map(col(_).cast("double")): _*).as("f")).as[FrameIn]
-    ds.groupByKey(r => (r.game_id, r.play_id, r.nfl_id))
-      .agg(aggregator(features.size, maxLen).toColumn.name("padded"))
-      .select(col("key._1").as("game_id"), col("key._2").as("play_id"),
-        col("key._3").as("nfl_id"),
-        col("padded._1").as("seq_len"), col("padded._2").as("seq"),
-        col("padded._3").as("mask"))
   }
 }

@@ -78,7 +78,7 @@ object KerasLstm {
       }
     }
 
-    /** Per-timestep predictions for one padded sequence; `seq` is
+    /** Per-timestep predictions for one sequence; `seq` is
       * (T × nFeatures). Batch form of [[step]] — bit-identical. */
     def forward(seq: Array[Array[Float]]): Array[Float] = {
       val preds = new Array[Float](seq.length)
@@ -100,27 +100,13 @@ object KerasLstm {
 
     /** Hot batch-scoring path: same math as [[forward]] in the same
       * floating-point op order (bit-identical — asserted in KerasLstmSpec),
-      * but over a FLAT row-major (T × nFeatures) primitive array with all
-      * state/gate buffers allocated once per call and mutated in place.
-      * This is what the distributed scorer feeds: a flat `array<double>`
-      * crosses the UDF boundary as one primitive copy, where the nested
-      * `Seq[Seq[Double]]` form boxes every element and allocates a wrapper
-      * per timestep. */
-    def forwardFlat(flat: Array[Double], seqLen: Int): Array[Float] = {
-      // same per-element rounding the old double loop applied
-      // (x(k) = flat(off+k).toFloat), so delegating keeps bit-parity while
-      // ONE kernel serves both element widths
-      val f = new Array[Float](flat.length)
-      var i = 0
-      while (i < flat.length) { f(i) = flat(i).toFloat; i += 1 }
-      forwardFlatF(f, seqLen)
-    }
-
-    /** Float-input twin of [[forwardFlat]] — THE kernel (the double form
-      * rounds and delegates). Lets a float32 sequence pipeline cross the
-      * UDF boundary as array<float> with no widen-to-double cast and half
-      * the boundary bytes; bit-identical either way (KerasLstmSpec). */
-    def forwardFlatF(flat: Array[Float], seqLen: Int): Array[Float] = {
+      * but over a FLAT row-major (seqLen × nFeatures) primitive array with
+      * all state/gate buffers allocated once per call and mutated in place.
+      * This is what the distributed scorer feeds: a flat `array<float>`
+      * crosses the UDF boundary as one primitive copy, where a nested
+      * per-timestep form boxes every element and allocates a wrapper per
+      * timestep. */
+    def forwardFlat(flat: Array[Float], seqLen: Int): Array[Float] = {
       val nF = lstm1.nIn
       val preds = new Array[Float](seqLen)
       val x = new Array[Float](nF)
@@ -332,78 +318,31 @@ object KerasLstm {
     m
   }
 
-  /** Score a padded-sequence table (the [[graft.bdb.Sequences.build]] output
-    * contract: key columns + `seq_len: int` + `seq: array<array<double>>`)
-    * → one row per REAL frame: key columns + `frame_idx` (1-based position
-    * in the sequence, the reference's frame numbering at BDB_2026.ipynb
-    * cell 107) + `predicted_converge_rate`.
-    */
-  /** @param rebalance add an explicit exchange to full parallelism before
+  /** Score a sequence table in the [[graft.bdb.Sequences.buildFlat]]
+    * contract — key columns + `seq_len: int` + `flat: array<float>` (the
+    * de-padded frames, row-major) — into one row per frame: key columns +
+    * `frame_idx` (1-based position in the sequence, the reference's frame
+    * numbering at BDB_2026.ipynb cell 107) + `predicted_converge_rate`.
+    *
+    * @param rebalance add an explicit exchange to full parallelism before
     *        the CPU-bound forward pass (default). Pass false when the
     *        caller already partitioned the sequence build to core count
     *        (e.g. an explicit repartition on the trajectory keys that the
     *        collect_list agg reuses) — the rebalance would then re-ship
-    *        every sequence byte for nothing. */
-  def scoreSequences(seqs: DataFrame, model: Model,
+    *        every sequence byte for nothing.
+    */
+  def scoreFlat(flatSeqs: DataFrame, model: Model,
       keyCols: Seq[String], rebalance: Boolean = true): DataFrame = {
-    // flatten() is codegen'd and cheap; the payoff is the UDF boundary —
-    // a flat array<double> crosses as ONE primitive Array[Double] copy,
-    // where array<array<double>> materializes a boxed Seq per timestep.
-    // forwardFlat then reuses its state/gate buffers across timesteps.
-    //
+    val spark = flatSeqs.sparkSession
+    val bc = spark.sparkContext.broadcast(model)
     // asNondeterministic is a COST fence, not a semantics statement: the
     // pass is pure, but InferFiltersFromGenerate otherwise clones the UDF
     // into inferred `size(..)>0 / isnotnull(..)` filters below the Project
     // and the forward pass runs 3x per sequence (accumulator-verified).
     // Nondeterministic expressions are never duplicated or pushed through.
-    // Element-width dispatch at the UDF boundary: a float32-built sequence
-    // table (Sequences.build valueType="float" — the model's own dtype)
-    // crosses as array<float> with NO widen-to-double cast — one array
-    // materialization and half the boundary bytes per sequence gone from
-    // the hot stage (§4). Double-built sequences keep the old path; both
-    // feed the SAME kernel (forwardFlat rounds and delegates to
-    // forwardFlatF), so predictions are bit-identical either way.
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val isFloat = seqs.schema("seq").dataType match {
-      case ArrayType(ArrayType(FloatType, _), _) => true
-      case _ => false
-    }
-    val flatCol = flatten(slice(col("seq"), lit(1), col("seq_len")))
-    val flatSeqs = seqs
-      // Flatten AND de-pad below the exchange: the shuffle ships one
-      // compact primitive array of seq_len×nF (tail padding sliced
-      // off — the forward pass never reads it), not the padded nested form.
-      .select((keyCols.map(col) :+ col("seq_len") :+
-        (if (isFloat) flatCol else flatCol.cast("array<double>"))
-          .as("flat")): _*)
-    scoreFlat(flatSeqs, model, keyCols, rebalance)
-  }
-
-  /** [[scoreSequences]] for a table that ALREADY carries the de-padded
-    * flat form (key columns + `seq_len: int` + `flat: array<float|double>`
-    * — [[graft.bdb.Sequences.buildFlat]]'s contract): skips the
-    * padded-`seq` detour entirely. Bit-identical to scoring the padded
-    * form: `flatten(slice(seq, 1, seq_len))` IS the flat column
-    * (KerasLstmSpec pins it), and both element widths feed the same
-    * kernel. */
-  def scoreFlat(flatSeqs: DataFrame, model: Model,
-      keyCols: Seq[String], rebalance: Boolean = true): DataFrame = {
-    val spark = flatSeqs.sparkSession
-    val bc = spark.sparkContext.broadcast(model)
-    import org.apache.spark.sql.types.{ArrayType, FloatType}
-    val isFloat = flatSeqs.schema("flat").dataType match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    val forward =
-      (if (isFloat)
-        udf { (flat: Array[Float], seqLen: Int) =>
-          bc.value.forwardFlatF(flat, seqLen)
-        }
-      else
-        udf { (flat: Array[Double], seqLen: Int) =>
-          bc.value.forwardFlat(flat, seqLen)
-        }).asNondeterministic()
+    val forward = udf { (flat: Array[Float], seqLen: Int) =>
+      bc.value.forwardFlat(flat, seqLen)
+    }.asNondeterministic()
     (if (rebalance)
       // This stage is CPU-bound (~36 k flops/frame), so AQE's bytes-based
       // partition coalescing starves it: a few MB of shuffled sequences

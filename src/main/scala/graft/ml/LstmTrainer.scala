@@ -15,10 +15,10 @@ import graft.Checkpoints.{pin, scoped}
   * Architecture of the trainer, not the net: synchronous data-parallel
   * mini-batch gradient descent —
   *
-  *  1. the padded sequence table ([[graft.bdb.Sequences.build]] contract,
+  *  1. the flat sequence table ([[graft.bdb.Sequences.buildFlat]] contract,
   *     with the label riding as the LAST element of each frame vector) is
-  *     de-padded, flattened and cached as an RDD, each sequence tagged with
-  *     a stable hash id that assigns it to a mini-batch;
+  *     pinned as an RDD, each sequence tagged with a stable hash id that
+  *     assigns it to a mini-batch;
   *  2. per step, the current weights broadcast (~36 k doubles) and every
   *     executor runs truncated-nowhere BPTT over ITS resident sequences —
   *     full forward + backward per sequence, O(T·params) flops, no
@@ -422,9 +422,10 @@ object LstmTrainer {
 
   // ---- the distributed loop ----------------------------------------------
 
-  /** Train on padded-sequence tables following the
-    * [[graft.bdb.Sequences.build]] contract built over `features :+ label`
-    * (frame width nFeatures+1, label LAST). `valSeqs` drives early stopping
+  /** Train on flat sequence tables following the
+    * [[graft.bdb.Sequences.buildFlat]] contract built over
+    * `features :+ label` (frame width nFeatures+1, label LAST per frame;
+    * `flat` is cast to double). `valSeqs` drives early stopping
     * (falls back to train loss when absent, like the reference's
     * `monitor="loss"`). Returns the float32 inference model. */
   def train(trainSeqs: DataFrame, valSeqs: Option[DataFrame],
@@ -440,8 +441,7 @@ object LstmTrainer {
       pin(df.select(
           xxhash64(keyCols.map(col): _*).as("sid"),
           col("seq_len").cast("int").as("n"),
-          flatten(slice(col("seq"), lit(1), col("seq_len")))
-            .cast("array<double>").as("flat")))
+          col("flat").cast("array<double>").as("flat")))
         .as[(Long, Int, Array[Double])].rdd
     }
     val trainRdd = toRdd(trainSeqs)

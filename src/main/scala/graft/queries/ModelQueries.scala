@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Distributed sequence-model inference as a benched query surface: the
   * committed convergence LSTM (reference: models.py:24-67, artifact saved at
-  * BDB_2026.ipynb cell 107) scoring a corpus of padded trajectories built
+  * BDB_2026.ipynb cell 107) scoring a corpus of trajectories built
   * from the lineitem table — each order is a trajectory, each line a frame,
   * 28 deterministic features derived map-side from the numeric columns.
   *
@@ -85,15 +85,10 @@ object ModelQueries {
     // cost an 8-byte row slot each no matter the declared type; the packed
     // array stores 4-byte elements. Projects preserve the game_id hash
     // partitioning, so the sequence agg still reuses the one exchange and
-    // scoreSequences' rebalance pass stays skipped (rebalance = false).
+    // scoreFlat's rebalance pass stays skipped (rebalance = false).
     val packedFrames = wide
       .select(col("game_id"), col("play_id"), col("nfl_id"), col("frame_id"),
         array((0 until nFeatures).map(k => col(s"f$k")): _*).as("farr"))
-    // buildFlat, not build: inference reads only the de-padded flat frames
-    // (scoreFlat), so the pad/mask construction the padded contract carries
-    // — per-trajectory array_repeat allocations + a concat that
-    // scoreSequences' slice immediately discards — never runs (r19, §4;
-    // bit-identical by SequencesSpec's flat≡padded pin).
     graft.bdb.Sequences.buildFlat(
       packedFrames, Seq("farr"), maxLen = 7, valueType = "float")
   }

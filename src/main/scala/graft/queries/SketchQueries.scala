@@ -150,7 +150,10 @@ object SketchQueries {
         val direct = ev.agg(
           hll_sketch_estimate(hll_sketch_agg(col("user_id"))).as("direct_users"),
           countDistinct(col("user_id")).as("exact_users"))
-        merged.crossJoin(direct)
+        // both sides are one-row aggregates: without the hint AQE builds
+        // the nested-loop join on whichever stage finishes first, and each
+        // orientation compiles its own classes
+        merged.crossJoin(broadcast(direct))
       },
       None),
 

@@ -104,6 +104,30 @@ class ModelSpec extends SparkSpec {
       s"trained-LSTM all-frames R² drifted out of band: $r2all")
   }
 
+  test("LstmScoring joins LSTM predictions back onto frames positionally") {
+    import spark.implicits._
+    val model = graft.ml.SeededLstm.model()
+    val feats = (0 until model.nFeatures).map(k => s"f$k")
+    // 30 frames: the first 5 fall off the maxLen=25 tail window → null pred
+    val frames0 = (1 to 30).map { f =>
+      (7L, 7L, 7L, f.toLong, f * 0.01)
+    }.toDF("game_id", "play_id", "nfl_id", "frame_id", "base")
+    val frames = feats.zipWithIndex.foldLeft(frames0) { case (d, (c, k)) =>
+      d.withColumn(c, col("base") + k * 0.001)
+    }.drop("base")
+    val out = LstmScoring.scoreAndAttach(frames, frames, feats, model, 25)
+      .orderBy("frame_id").collect()
+    assert(out.length === 30)
+    val pred = out.map(r => Option(r.getAs[java.lang.Double]("predicted_converge_rate")))
+    assert(pred.take(5).forall(_.isEmpty), "truncated head frames get no prediction")
+    // frames 6..30 carry the forward pass over exactly those frames, in order
+    val kept = out.drop(5).map(r => feats.map(r.getAs[Double](_).toFloat).toArray)
+    val expected = model.forward(kept)
+    pred.drop(5).zip(expected).zipWithIndex.foreach { case ((p, e), i) =>
+      assert(p.map(_.doubleValue) === Some(e.toDouble), s"frame ${i + 6}")
+    }
+  }
+
   test("splitByGame is disjoint and exhaustive on game_id") {
     import spark.implicits._
     val df = (1 to 500).map(g => (g.toLong, g * 2.0)).toDF("game_id", "v")

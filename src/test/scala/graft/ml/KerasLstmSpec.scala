@@ -12,12 +12,18 @@ import scala.io.Source
   * masking, float32 arithmetic) is the strongest available check: the
   * reference never published the per-frame model INPUTS, only its outputs,
   * so golden end-to-end parity is not derivable from public artifacts.
+  *
+  * Only the two cases that compare against the fixture's expected outputs
+  * need the committed weights; every self-consistency case (flat ≡ step,
+  * masking, saturation, the distributed scorer) runs on [[SeededLstm]],
+  * fed the fixture's inputs.
   */
 class KerasLstmSpec extends SparkSpec {
 
   private val blind =
     "/root/reference/models/convergence_lstm_model_BlindPhysics_Completed_Pass.h5"
-  private lazy val model = KerasLstm.load(blind)
+  private lazy val reference = KerasLstm.load(blind)
+  private val model = SeededLstm.model()
 
   private lazy val fixture: Map[Int, Seq[(Array[Float], Float)]] = {
     val src = Source.fromFile("src/test/resources/lstm_fixture.csv")
@@ -36,7 +42,7 @@ class KerasLstmSpec extends SparkSpec {
     fixture.foreach { case (seqId, rows) =>
       val x = rows.map(_._1).toArray
       val expected = rows.map(_._2)
-      val got = model.forward(x)
+      val got = reference.forward(x)
       expected.indices.foreach { t =>
         assert(math.abs(got(t) - expected(t)) < 1e-4f,
           s"seq $seqId frame $t: got ${got(t)}, fixture ${expected(t)}")
@@ -44,36 +50,19 @@ class KerasLstmSpec extends SparkSpec {
     }
   }
 
-  test("forwardFlat is bit-identical to forward (incl. masked steps and padding)") {
+  test("forwardFlat is bit-identical to forward (incl. masked steps and trailing data)") {
     fixture.foreach { case (seqId, rows) =>
       val seq = rows.map(_._1).toArray
       val nF = seq.head.length
-      // pad to maxLen the way Sequences.build does: extra all-zero frames
-      val maxLen = seq.length + 3
-      val flat = new Array[Double](maxLen * nF)
+      // elements past seqLen × nF are never read: fill them with junk
+      val flat = Array.fill((seq.length + 3) * nF)(7f)
       seq.zipWithIndex.foreach { case (x, t) =>
-        x.zipWithIndex.foreach { case (v, k) => flat(t * nF + k) = v.toDouble }
+        System.arraycopy(x, 0, flat, t * nF, nF)
       }
       val viaFlat = model.forwardFlat(flat, seq.length)
       val viaStep = model.forward(seq)
       assert(viaFlat.toSeq === viaStep.toSeq, // exact float equality: same op order
         s"seq $seqId: flat path diverged from step path")
-    }
-  }
-
-  test("forwardFlatF (float boundary) is bit-identical to forwardFlat (double)") {
-    fixture.foreach { case (seqId, rows) =>
-      val seq = rows.map(_._1).toArray
-      val nF = seq.head.length
-      val maxLen = seq.length + 2
-      val flatF = new Array[Float](maxLen * nF)
-      seq.zipWithIndex.foreach { case (x, t) =>
-        x.zipWithIndex.foreach { case (v, k) => flatF(t * nF + k) = v }
-      }
-      val flatD = flatF.map(_.toDouble)
-      assert(model.forwardFlatF(flatF, seq.length).toSeq ===
-        model.forwardFlat(flatD, seq.length).toSeq,
-        s"seq $seqId: float boundary diverged from double boundary")
     }
   }
 
@@ -85,8 +74,7 @@ class KerasLstmSpec extends SparkSpec {
     val preds = model.forward(extreme)
     assert(preds.forall(p => !p.isNaN && !p.isInfinite), preds.toSeq.toString)
     // and the flat path agrees bit-for-bit under the same extremes
-    val flat = extreme.flatten.map(_.toDouble)
-    assert(model.forwardFlat(flat, 3).toSeq === preds.toSeq)
+    assert(model.forwardFlat(extreme.flatten, 3).toSeq === preds.toSeq)
   }
 
   test("Masking(0.0): an all-zero timestep carries state — prediction repeats") {
@@ -109,7 +97,7 @@ class KerasLstmSpec extends SparkSpec {
     // output is dense(relu(dense(0))) (≈ the output bias), never literal 0
     val rows = fixture(4)
     assert(rows.head._1.forall(_ == 0f))
-    val got = model.forward(rows.map(_._1).toArray)
+    val got = reference.forward(rows.map(_._1).toArray)
     assert(got(0) !== 0f)
     assert(math.abs(got(0) - rows.head._2) < 1e-6f,
       s"leading masked frame: got ${got(0)}, fixture ${rows.head._2}")
@@ -123,7 +111,7 @@ class KerasLstmSpec extends SparkSpec {
     x.indices.foreach(t => assert(a(t) === b(t)))
   }
 
-  test("scoreSequences: per-frame rows, 1-based frame_idx, only real frames") {
+  test("scoreFlat: per-frame rows, 1-based frame_idx, only real frames") {
     import spark.implicits._
     val frames = (1 to 3).flatMap { traj =>
       (1 to (traj * 3)).map { f =>
@@ -134,9 +122,10 @@ class KerasLstmSpec extends SparkSpec {
     val wide = (0 until model.nFeatures).foldLeft(frames) { (d, k) =>
       d.withColumn(s"f$k", col("feats")(k))
     }.drop("feats")
-    val seqs = graft.bdb.Sequences.build(
-      wide, (0 until model.nFeatures).map(k => s"f$k"), maxLen = 25)
-    val scored = KerasLstm.scoreSequences(seqs, model,
+    val seqs = graft.bdb.Sequences.buildFlat(
+      wide, (0 until model.nFeatures).map(k => s"f$k"), maxLen = 25,
+      valueType = "float")
+    val scored = KerasLstm.scoreFlat(seqs, model,
       Seq("game_id", "play_id", "nfl_id")).cache()
     assert(scored.count() === (3 + 6 + 9))
     val perTraj = scored.groupBy("game_id")
@@ -149,51 +138,35 @@ class KerasLstmSpec extends SparkSpec {
     assert(scored.filter(col("predicted_converge_rate").isNull).count() === 0)
   }
 
-  test("scoreFlat(buildFlat) ≡ scoreSequences(build) bit-for-bit " +
-      "(the m_lstm_infer de-padded fast path)") {
+  test("scoreFlat(buildFlat) ≡ per-sequence forwardFlat, bit-equal") {
     import spark.implicits._
-    val frames = (1 to 4).flatMap { traj =>
-      (1 to (traj * 2 + 1)).map { f =>
-        (traj.toLong, 0L, 0L, f.toLong,
-          (0 until model.nFeatures).map(k =>
-            (f * 0.07f + k * 0.013f + traj * 0.3f)).toArray)
+    val maxLen = 7
+    val feats = (1 to 4).map { traj =>
+      traj.toLong -> (1 to (traj * 2 + 1)).map { f =>
+        (0 until model.nFeatures).map(k =>
+          f * 0.07f + k * 0.013f + traj * 0.3f).toArray
       }
-    }.toDF("game_id", "play_id", "nfl_id", "frame_id", "farr")
-    val keys = Seq("game_id", "play_id", "nfl_id")
-    val viaPadded = KerasLstm.scoreSequences(
-      graft.bdb.Sequences.build(frames, Seq("farr"), maxLen = 7,
-        valueType = "float"), model, keys)
-      .orderBy("game_id", "frame_idx").collect()
-    val viaFlat = KerasLstm.scoreFlat(
-      graft.bdb.Sequences.buildFlat(frames, Seq("farr"), maxLen = 7,
-        valueType = "float"), model, keys)
-      .orderBy("game_id", "frame_idx").collect()
-    assert(viaFlat.length === viaPadded.length)
-    viaFlat.zip(viaPadded).foreach { case (a, b) =>
-      assert(a.getLong(0) === b.getLong(0))
-      assert(a.getLong(3) === b.getLong(3))
-      assert(java.lang.Double.doubleToLongBits(a.getDouble(4)) ===
-        java.lang.Double.doubleToLongBits(b.getDouble(4)),
-        s"prediction diverged at game_id=${a.getLong(0)} frame=${a.getLong(3)}")
     }
-  }
-
-  test("LstmModel.predict joins predictions back onto frames positionally") {
-    import spark.implicits._
-    val feats = (0 until model.nFeatures).map(k => s"f$k")
-    // 30 frames: the first 5 fall off the maxLen=25 tail window → null pred
-    val frames0 = (1 to 30).map { f =>
-      (7L, 7L, 7L, f.toLong, f * 0.01)
-    }.toDF("game_id", "play_id", "nfl_id", "frame_id", "base")
-    val frames = feats.zipWithIndex.foldLeft(frames0) { case (d, (c, k)) =>
-      d.withColumn(c, col("base") + k * 0.001)
-    }.drop("base").withColumn("converge_rate", col("f0") * 0.1)
-    val m = new graft.bdb.LstmModel(blind, feats)
-    val out = m.withResidual(frames).cache()
-    assert(out.count() === 30)
-    assert(out.filter(col("predicted_converge_rate").isNull).count() === 5)
-    assert(out.filter(col("frame_id") <= 5 &&
-      col("predicted_converge_rate").isNotNull).count() === 0)
-    assert(out.filter(col("residual").isNotNull).count() === 25)
+    val frames = feats.flatMap { case (traj, fs) =>
+      fs.zipWithIndex.map { case (x, i) => (traj, 0L, 0L, i + 1L, x) }
+    }.toDF("game_id", "play_id", "nfl_id", "frame_id", "farr")
+    val viaFlat = KerasLstm.scoreFlat(
+      graft.bdb.Sequences.buildFlat(frames, Seq("farr"), maxLen = maxLen,
+        valueType = "float"), model, Seq("game_id", "play_id", "nfl_id"))
+      .orderBy("game_id", "frame_idx").collect()
+    // the local pass over each trajectory's LAST maxLen frames
+    val expected = feats.flatMap { case (traj, fs) =>
+      val kept = fs.takeRight(maxLen)
+      model.forwardFlat(kept.flatten.toArray, kept.size).zipWithIndex
+        .map { case (p, i) => (traj, i + 1L, p.toDouble) }
+    }
+    assert(viaFlat.length === expected.length)
+    viaFlat.zip(expected).foreach { case (a, (traj, idx, p)) =>
+      assert(a.getLong(0) === traj)
+      assert(a.getLong(3) === idx)
+      assert(java.lang.Double.doubleToLongBits(a.getDouble(4)) ===
+        java.lang.Double.doubleToLongBits(p),
+        s"prediction diverged at game_id=$traj frame=$idx")
+    }
   }
 }

@@ -121,7 +121,8 @@ class LstmTrainerSpec extends SparkSpec {
     val model = LstmTrainer.export(p, shape)
     // strip labels for the inference path
     val w = 4
-    val feats = (0 until t).flatMap(i => flat.slice(i * w, i * w + 3)).toArray
+    val feats = (0 until t).flatMap(i => flat.slice(i * w, i * w + 3))
+      .map(_.toFloat).toArray
     val preds = model.forwardFlat(feats, t)
     // recompute the double-precision training predictions via seqLoss on
     // crafted one-hot labels: loss(y=0) = Σ pred², so compare aggregates
@@ -155,7 +156,7 @@ class LstmTrainerSpec extends SparkSpec {
       .withColumn("play_id", org.apache.spark.sql.functions.lit(0L))
       .withColumn("nfl_id", org.apache.spark.sql.functions.lit(0L))
       .withColumn("frame_id", org.apache.spark.sql.functions.col("t"))
-    val built = graft.bdb.Sequences.build(seqs, Seq("x1", "x2", "y"), maxLen = 12)
+    val built = graft.bdb.Sequences.buildFlat(seqs, Seq("x1", "x2", "y"), maxLen = 12)
     val cfg = LstmTrainer.Config(nFeatures = 2, units1 = 12, units2 = 8,
       denseUnits = 6, epochs = 120, batchesPerEpoch = 2,
       dropout1 = 0.0, dropout2 = 0.0, patience = 120, seed = 42L)

@@ -1,18 +1,18 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.ml.KerasLstm
+import graft.ml.SeededLstm
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-/** Online LSTM inference over the committed weights: streamed predictions
-  * must BIT-EQUAL the batch forward pass on the same frames, including when
-  * a trajectory's frames are split across micro-batches (the state store
-  * carries the recurrence over the batch boundary).
+/** Online LSTM inference: streamed predictions must BIT-EQUAL the batch
+  * forward pass on the same frames, including when a trajectory's frames
+  * are split across micro-batches (the state store carries the recurrence
+  * over the batch boundary). The equalities hold for any weights, so the
+  * model is the seeded reference-architecture one.
   */
 class StreamingInferenceSpec extends SparkSpec {
 
-  private lazy val model = KerasLstm.load(
-    "/root/reference/models/convergence_lstm_model_BlindPhysics_Completed_Pass.h5")
+  private val model = SeededLstm.model()
 
   private def mkFrames(traj: Long, n: Int): Seq[StreamingInference.Frame] =
     (1 to n).map { f =>
